@@ -25,8 +25,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * only when the array has no duplicates, which callers guarantee
   * (`array_distinct` upstream). Null elements never match; a null array
   * yields null.
+  *
+  * The set is an `IndexedSeq`, not an `Array`, so the case class's
+  * equality and hash are structural: two content-equal expressions compare
+  * equal and canonicalize alike (an `Array` field would compare by
+  * reference, defeating common-subexpression elimination and plan reuse).
   */
-case class LitSetOverlap(child: Expression, set: Array[String])
+case class LitSetOverlap(child: Expression, set: IndexedSeq[String])
     extends UnaryExpression {
 
   override def dataType: DataType = LongType
@@ -86,5 +91,5 @@ case class LitSetOverlap(child: Expression, set: Array[String])
 object LitSetOverlap {
   /** Column-API form: how many elements of `arr` are in `set`. */
   def overlapCount(arr: Column, set: Seq[String]): Column =
-    ColumnBridge.column(LitSetOverlap(ColumnBridge.expression(arr), set.toArray))
+    ColumnBridge.column(LitSetOverlap(ColumnBridge.expression(arr), set.toIndexedSeq))
 }

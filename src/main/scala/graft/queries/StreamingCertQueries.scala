@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.io.Tables
 import graft.streaming.Streaming
@@ -13,12 +12,13 @@ import graft.queries.StreamingQueries._
   * registry (attribution, covisitation, sketch maintenance, concurrency,
   * KMV, Holt / Holt-Winters, priority sampling, the NB gate), split out of
   * [[StreamingQueries]] (round-9 maintainability: no non-test source file
-  * over 2000 lines). The staging/checkpoint harness (`Stage`,
-  * `stageOrderedBy`, `withCertStatePartitions`) stays in
+  * over 2000 lines). Every cert here is one [[StreamingQueries.certTable]]
+  * call; that continuous-cert harness and the staging harness (`Stage`,
+  * `stageOrderedBy`, `withCertStatePartitions`) live in
   * [[StreamingQueries]] with package-private visibility, so staged replay
-  * corpora remain memoized ACROSS both registries. Contract unchanged:
-  * each certification is a real multi-micro-batch run whose final output
-  * hash-matches a batch DuckDB oracle.
+  * corpora remain memoized ACROSS the streaming registries. Contract
+  * unchanged: each certification is a real multi-micro-batch run whose
+  * final output hash-matches a batch DuckDB oracle.
   */
 object StreamingCertQueries {
 
@@ -45,23 +45,10 @@ object StreamingCertQueries {
         .otherwise(0L).as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsAttrOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q229_attr_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.KeyedObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.lastTouchAttribution(arrivals, lookbackMs = 1800000L)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q229_attr", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.lastTouchAttribution(st.as[Streaming.KeyedObs],
+        lookbackMs = 1800000L).toDF()
     }
-    s.table(name)
       .select(col("user_id"), col("event_id"), col("view_id"),
         col("attributed"))
       .orderBy(col("event_id"))
@@ -91,26 +78,14 @@ object StreamingCertQueries {
       code.as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsCovisitOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q232_cov_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.KeyedObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.covisitPairs(arrivals, lookbackMs = 1800000L, k = 3)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val pairs = certTable(s, "q232_cov", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.covisitPairs(st.as[Streaming.KeyedObs],
+        lookbackMs = 1800000L, k = 3).toDF()
     }
     def decode(c: org.apache.spark.sql.Column) =
       types.zipWithIndex.foldLeft(lit("?")) { case (acc, (t, i)) =>
         when(c === (i + 1L), lit(t)).otherwise(acc) }
-    s.table(name)
+    pairs
       .select(decode(col("a")).as("a"), decode(col("b")).as("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("a"), col("b"))
@@ -138,23 +113,9 @@ object StreamingCertQueries {
       graft.llm.Hll.rhoCol(col("user_id"), m).cast("long").as("rho"))
     val srcDir = stageOrderedBy(ev, d, "eventsHllOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q234_hll_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.HllObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.hllSketch(arrivals, m, bits)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q234_hll", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.hllSketch(st.as[Streaming.HllObs], m, bits).toDF()
     }
-    s.table(name)
       .groupBy(col("week"))
       .agg(max(struct(col("seen"), col("s"), col("zero_registers"))).as("f"))
       .select(col("week"), col("f.seen").as("n_events"),
@@ -212,23 +173,9 @@ object StreamingCertQueries {
       .select(col("ib.i").as("i"), col("ib.b").as("b"), col("k"), col("lid"))
     val srcDir = stageOrderedBy(obs, d, "lineitemCmsOrdered4", 4,
       Seq(col("k"), col("lid"), col("i")))
-    val ckpt = Stage.ckpt()
-    val name = "q239_cms_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(obs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.CmsObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.cmsRowSquares(arrivals, width)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val est = certTable(s, "q239_cms", Seq(srcDir -> obs.schema)) {
+      case Seq(st) => Streaming.cmsRowSquares(st.as[Streaming.CmsObs], width).toDF()
     }
-    val est = s.table(name)
       .groupBy(col("i"))
       .agg(max(struct(col("seen"), col("e"))).as("f"))
       .agg(min(col("f.e")).as("cms_join_size"))
@@ -265,26 +212,13 @@ object StreamingCertQueries {
         col("event_id")))
     val srcDir = stageOrderedBy(deltas, d, "eventsConcOrdered4", 4,
       Seq(col("tsm"), col("x"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q246_conc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(deltas.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.KeyedObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.concurrencyPeak(arrivals)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val peaks = certTable(s, "q246_conc", Seq(srcDir -> deltas.schema)) {
+      case Seq(st) => Streaming.concurrencyPeak(st.as[Streaming.KeyedObs]).toDF()
     }
     def decode(c: org.apache.spark.sql.Column) =
       types.zipWithIndex.foldLeft(lit("?")) { case (acc, (t, i)) =>
         when(c === (i + 1L), lit(t)).otherwise(acc) }
-    s.table(name)
+    peaks
       .groupBy(col("key"))
       .agg(max(struct(col("seen"), col("peak"), col("t_at_peak"))).as("f"))
       .select(decode(col("key")).as("event_type"),
@@ -312,23 +246,9 @@ object StreamingCertQueries {
         graft.operators.Kmv.hash32(col("tok")).as("h"))
     val srcDir = stageOrderedBy(toks, d, "docsKmvOrdered4", 4,
       Seq(col("doc_id"), col("h")))
-    val ckpt = Stage.ckpt()
-    val name = "q264_kmv_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(toks.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.KmvObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.kmvSketch(arrivals, k)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q264_kmv", Seq(srcDir -> toks.schema)) {
+      case Seq(st) => Streaming.kmvSketch(st.as[Streaming.KmvObs], k).toDF()
     }
-    s.table(name)
       .groupBy(col("source"))
       .agg(max(struct(col("seen"), col("m"), col("t"))).as("f"))
       .select(col("source"), col("f.seen").as("n_obs"),
@@ -371,23 +291,9 @@ object StreamingCertQueries {
       round(col("value") * 10000).cast("long").as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsTsSignedOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q265_holt_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.KeyedObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.holtTrend(arrivals)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q265_holt", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.holtTrend(st.as[Streaming.KeyedObs]).toDF()
     }
-    s.table(name)
       .select(col("user_id"), col("event_id"), col("x"), col("level"),
         col("trend"))
       .orderBy(col("event_id"))
@@ -413,26 +319,13 @@ object StreamingCertQueries {
       .select(col("c_nationkey"), col("c_custkey"), col("priority_fp"))
     val srcDir = stageOrderedBy(c, d, "customerPriOrdered4", 4,
       Seq(col("c_custkey")))
-    val ckpt = Stage.ckpt()
-    val name = "q268_pri_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(c.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.PriObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.priorityTopK(arrivals, 3)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val samples = certTable(s, "q268_pri", Seq(srcDir -> c.schema)) {
+      case Seq(st) => Streaming.priorityTopK(st.as[Streaming.PriObs], 3).toDF()
     }
     // last batch per nation via ONE window over the (bounded: k rows per
     // nation per batch) memory table — a self-join would conflict on the
     // memory sink's attributes
-    s.table(name)
+    samples
       .withColumn("mx",
         max(col("seen")).over(Window.partitionBy(col("c_nationkey"))))
       .where(col("seen") === col("mx"))
@@ -458,29 +351,12 @@ object StreamingCertQueries {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("lang"), col("text"))
     val (langs, priors, weights) = InfoQueries.nbModelLiteral(s, d)
-    val (srcDir, _, _) = Stage.memo(d, "docslang4") { dir =>
-      docs.repartitionByRange(4, col("doc_id"))
-        .write.mode("append").parquet(dir)
-      (0L, 0L)
-    }
-    val ckpt = Stage.ckpt()
-    val name = "q278_nb_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = graft.llm.NaiveBayes
-        .classifyLiteral(stream, "text", "doc_id", langs, priors, weights,
+    val srcDir = stageDocRanges(docs, d, "docslang4")
+    certTable(s, "q278_nb", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => graft.llm.NaiveBayes
+        .classifyLiteral(st, "text", "doc_id", langs, priors, weights,
           passCols = Seq("lang"))
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
     }
-    s.table(name)
       .select(col("doc_id"), col("lang"), col("pred_lang"), col("score_fp"))
       .orderBy(col("doc_id"))
   }
@@ -519,23 +395,9 @@ object StreamingCertQueries {
       .agg(count(lit(1)).as("x"))
     val srcDir = stageOrderedBy(daily, d, "dailyTypeCounts4", 4,
       Seq(col("day"), col("event_type")))
-    val ckpt = Stage.ckpt()
-    val name = "q284_hw_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(daily.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.HwObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.holtWintersStream(arrivals, m = 7)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q284_hw", Seq(srcDir -> daily.schema)) {
+      case Seq(st) => Streaming.holtWintersStream(st.as[Streaming.HwObs], m = 7).toDF()
     }
-    s.table(name)
       .select(col("event_type"), col("day"), col("x"), col("level"),
         col("trend"), col("seas"))
       .orderBy(col("event_type"), col("day"))
@@ -560,24 +422,12 @@ object StreamingCertQueries {
       expr("unix_millis(ts) div 604800000").as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsRetentionOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q295_ret_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = Streaming.cohortRetention(stream.as[Streaming.KeyedObs])
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val cells = certTable(s, "q295_ret", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.cohortRetention(st.as[Streaming.KeyedObs]).toDF()
     }
     // cells are unique per user by construction, so count(*) per cell is
     // the distinct-user count the batch oracle computes
-    s.table(name)
+    cells
       .groupBy(col("cohort_week"), col("offset_weeks"))
       .agg(count(lit(1)).as("n_users"))
       .orderBy(col("cohort_week"), col("offset_weeks"))
@@ -610,22 +460,10 @@ object StreamingCertQueries {
           .otherwise(2L).as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsFunnelOrdered4", 4,
       Seq(col("tsm"), col("x"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q303_fun_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = Streaming.funnelDepth(stream.as[Streaming.KeyedObs], stages.size)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q303_fun", Seq(srcDir -> ev.schema)) {
+      case Seq(st) =>
+        Streaming.funnelDepth(st.as[Streaming.KeyedObs], stages.size).toDF()
     }
-    s.table(name)
       .groupBy(col("user_id"))
       .agg(max(col("funnel_depth")).as("funnel_depth"))
       .orderBy(col("user_id"))
@@ -652,22 +490,9 @@ object StreamingCertQueries {
       col("event_id").cast("long").as("event_id"))
     val srcDir = stageOrderedBy(ev, d, "eventsMomOrdered4", 4,
       Seq(col("event_type"), col("v"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q307_mom_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = Streaming.momentsSketch(stream.as[Streaming.MomObs])
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q307_mom", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.momentsSketch(st.as[Streaming.MomObs]).toDF()
     }
-    s.table(name)
       .groupBy(col("event_type"))
       .agg(max(struct(col("seen"), col("s1"), col("s2"), col("s3"))).as("f"))
       .select(col("event_type"), col("f.seen").as("n_obs"),
@@ -716,26 +541,13 @@ object StreamingCertQueries {
       col("l_linenumber").cast("long").as("ln"))
     val srcDir = stageOrderedBy(li, d, "liKendallOrdered4", 4,
       Seq(col("ok"), col("ln")))
-    val ckpt = Stage.ckpt()
-    val name = "q333_ken_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(li.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = stream
+    val grid = certTable(s, "q333_ken", Seq(srcDir -> li.schema), "complete") {
+      case Seq(st) => st
         .groupBy(col("rf"), col("a"), col("b"))
         .agg(count(lit(1)).as("c"))
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
     }
     EvalQueries.kendallFromGrid(
-      s.table(name).select(col("rf"), col("a"), col("b"), col("c")))
+      grid.select(col("rf"), col("a"), col("b"), col("c")))
   }
   /** Same oracle as the batch grid τ-b. */
   val q333_sql: String = EvalQueries.q327_sql

@@ -1,9 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{Files => F, Path, Paths}
+import java.nio.file.attribute.FileTime
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 import graft.io.Tables
 import graft.streaming.Streaming
@@ -15,6 +19,15 @@ import graft.streaming.Streaming
   * memory sink — across multiple micro-batches, and its final output must
   * hash-match the batch sessionization oracle (q32's recursive
   * gap-split SQL, minus the float-accumulated total).
+  *
+  * This object also holds the ONE certification harness all three
+  * streaming registries ([[StreamingQueries]], [[StreamingCertQueries]],
+  * [[RecoveryCertQueries]]) share: replay staging ([[Stage]],
+  * [[stageTimeOrdered]], [[stageOrderedBy]]), the single source-opening
+  * drain-to-end run ([[drain]]), and its two sinks — the continuous
+  * memory-sink [[certTable]] and the two-incarnation
+  * [[recoveringTableMulti]]. A cert supplies only its staged sources and
+  * its operator chain.
   *
   * This is a certification harness, not a production deployment shape: the
   * staging copy + memory sink exist so a bounded replay can be compared
@@ -62,10 +75,9 @@ object StreamingQueries {
 
   /** Data part-files of a parquet dir, lexicographically — one write job
     * has one job-UUID, so name order IS partition order. */
-  private def partFiles(dirStr: String): Seq[java.nio.file.Path] = {
-    import java.nio.file.{Files => F, Paths}
+  private[queries] def partFiles(dirStr: String): Seq[Path] = {
     val it = F.list(Paths.get(dirStr)).iterator()
-    val buf = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
     while (it.hasNext) {
       val p = it.next()
       val n = p.getFileName.toString
@@ -74,6 +86,42 @@ object StreamingQueries {
     }
     buf.sortBy(_.getFileName.toString).toSeq
   }
+
+  /** Stamp `files` with strictly-increasing mtimes in the given order, 2 s
+    * apart and a day in the past (so any later append sorts after): the
+    * file source replays oldest-mtime-first, so this order IS the
+    * micro-batch order. */
+  private def stampReplayOrder(files: Seq[Path]): Unit = {
+    val t0 = System.currentTimeMillis() - 24 * 60 * 60 * 1000L
+    files.zipWithIndex.foreach { case (p, i) =>
+      F.setLastModifiedTime(p, FileTime.fromMillis(t0 + i * 2000L))
+    }
+  }
+
+  /** Write `df` as ONE parquet file to the side dir `side` beside
+    * `srcDir`, then move it into `srcDir` as `name` (same tmpfs → a
+    * rename), so a replay dir can hold files from separate write jobs. */
+  private def writeOneFile(df: DataFrame, srcDir: Path, side: String,
+                           name: String): Path = {
+    val sideDir = srcDir.getParent.resolve(side).toString
+    df.coalesce(1).write.parquet(sideDir)
+    F.move(partFiles(sideDir).head, srcDir.resolve(name))
+  }
+
+  /** One sentinel event row (user_id -1, event_type "sentinel") at `tsMs`. */
+  private def sentinel(s: SparkSession, tsMs: Long): DataFrame = {
+    import s.implicits._
+    Seq((-1L, new java.sql.Timestamp(tsMs), -1L, "sentinel", 0.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+  }
+
+  /** The end-of-input sentinels at `hi + offset`, one file per offset,
+    * named `zz-sentinel-<j>.parquet` so they follow every data file. */
+  private def sentinelFiles(s: SparkSession, srcDir: Path, hi: Long,
+                            offsetsMs: Seq[Long]): Seq[Path] =
+    offsetsMs.zipWithIndex.map { case (off, j) =>
+      writeOneFile(sentinel(s, hi + off), srcDir, s"sen$j", s"zz-sentinel-$j.parquet")
+    }
 
   /** Stage a batch frame into `parts` TIME-RANGE parquet files, so a
     * file-source replay (`maxFilesPerTrigger=1`, oldest file first)
@@ -84,9 +132,9 @@ object StreamingQueries {
     * slice files — range partition i is the i-th time slice and is written
     * as `part-0000i-…`, so the part-file INDEX is the time order. The file
     * source replays oldest-mtime-first, so staging then stamps explicit
-    * strictly-increasing mtimes in index order (2 s apart, set in the past
-    * so any later append sorts after). One shuffle job replaces the former
-    * parts(+dup)+1 sequential filter-scan-write jobs.
+    * strictly-increasing mtimes in index order ([[stampReplayOrder]]). One
+    * shuffle job replaces the former parts(+dup)+1 sequential
+    * filter-scan-write jobs.
     *
     * `dupEachFile` interleaves a filesystem COPY of every slice file
     * (mtime +1 s, so it replays as the NEXT micro-batch), giving a dedup
@@ -94,13 +142,13 @@ object StreamingQueries {
     * Spark-job cost.
     *
     * `sentinelOffsetsMs` appends, AFTER the real data, one single-row file
-    * per offset at `hi + offset` (user_id -1, event_type "sentinel") —
-    * the streaming equivalent of "end of input": the first sentinel batch
-    * advances the watermark past every real window/session close, the next
-    * provides the batch in which the flushed results are emitted (a batch
-    * computes with the watermark derived from the PREVIOUS batch's data).
-    * Folding sentinels into staging keeps the staged dir immutable, which
-    * is what lets [[Stage]] share it across queries.
+    * per offset at `hi + offset` ([[sentinelFiles]]) — the streaming
+    * equivalent of "end of input": the first sentinel batch advances the
+    * watermark past every real window/session close, the next provides
+    * the batch in which the flushed results are emitted (a batch computes
+    * with the watermark derived from the PREVIOUS batch's data). Folding
+    * sentinels into staging keeps the staged dir immutable, which is what
+    * lets [[Stage]] share it across queries.
     *
     * The result is memoized per (sfDir, key): callers pass a key that
     * uniquely names the (frame, parts, dup, sentinels) combination. */
@@ -108,37 +156,18 @@ object StreamingQueries {
                                dupEachFile: Boolean,
                                sentinelOffsetsMs: Seq[Long] = Nil): (String, Long, Long) =
     Stage.memo(d, key) { srcDir =>
-      import java.nio.file.{Files => F, Paths}
-      import java.nio.file.attribute.FileTime
-      val s = ev.sparkSession
-      import s.implicits._
       // bounded 1-row probe (same license as Stats.embeddingDim)
       val bounds = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
       val lo = bounds.getTimestamp(0).getTime
       val hi = bounds.getTimestamp(1).getTime
       ev.repartitionByRange(parts, col("ts")).write.mode("append").parquet(srcDir)
       val sliceFiles = partFiles(srcDir)
-      // each sentinel is written to a side dir, then its single part file is
-      // moved into srcDir under a distinct name (same tmpfs → a rename)
-      val dir = Paths.get(srcDir)
-      val senFiles = sentinelOffsetsMs.zipWithIndex.map { case (off, j) =>
-        val senDir = dir.getParent.resolve(s"sen$j").toString
-        Seq((-1L, new java.sql.Timestamp(hi + off), -1L, "sentinel", 0.0))
-          .toDF("event_id", "ts", "user_id", "event_type", "value")
-          .coalesce(1).write.parquet(senDir)
-        F.move(partFiles(senDir).head, dir.resolve(s"zz-sentinel-$j.parquet"))
-      }
-      // stamp replay order (slices, then sentinels) as strictly-increasing
-      // mtimes, 2 s apart, set in the past so nothing later can predate them
-      val ordered = sliceFiles ++ senFiles
-      val t0 = System.currentTimeMillis() - 24 * 60 * 60 * 1000L
-      ordered.zipWithIndex.foreach { case (p, i) =>
-        F.setLastModifiedTime(p, FileTime.fromMillis(t0 + i * 2000L))
-        if (dupEachFile && i < sliceFiles.size) {
-          val copy = p.getParent.resolve("dup-" + p.getFileName.toString)
-          F.copy(p, copy)
-          F.setLastModifiedTime(copy, FileTime.fromMillis(t0 + i * 2000L + 1000L))
-        }
+      stampReplayOrder(sliceFiles ++
+        sentinelFiles(ev.sparkSession, Paths.get(srcDir), hi, sentinelOffsetsMs))
+      if (dupEachFile) sliceFiles.foreach { p =>
+        val copy = F.copy(p, p.getParent.resolve("dup-" + p.getFileName.toString))
+        F.setLastModifiedTime(copy,
+          FileTime.fromMillis(F.getLastModifiedTime(p).toMillis + 1000L))
       }
       (lo, hi)
     }
@@ -163,10 +192,7 @@ object StreamingQueries {
                               parts: Int, latePred: org.apache.spark.sql.Column,
                               sentinelOffsetsMs: Seq[Long]): (String, Long, Long) =
     Stage.memo(d, key) { srcDir =>
-      import java.nio.file.{Files => F, Paths}
-      import java.nio.file.attribute.FileTime
       val s = ev.sparkSession
-      import s.implicits._
       val bounds = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
       val lo = bounds.getTimestamp(0).getTime
       val hi = bounds.getTimestamp(1).getTime
@@ -176,28 +202,10 @@ object StreamingQueries {
       val dir = Paths.get(srcDir)
       val hiOnTime = ev.where(!latePred).agg(max(col("ts"))).head()
         .getTimestamp(0).getTime
-      val flushDir = dir.getParent.resolve("flush").toString
-      Seq((-1L, new java.sql.Timestamp(hiOnTime), -1L, "sentinel", 0.0))
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .coalesce(1).write.parquet(flushDir)
-      val flushFile = F.move(partFiles(flushDir).head,
-        dir.resolve("x-flush-0.parquet"))
-      val lateDir = dir.getParent.resolve("late").toString
-      ev.where(latePred).coalesce(1).write.parquet(lateDir)
-      val lateFile = F.move(partFiles(lateDir).head,
-        dir.resolve("y-late-0.parquet"))
-      val senFiles = sentinelOffsetsMs.zipWithIndex.map { case (off, j) =>
-        val senDir = dir.getParent.resolve(s"sen$j").toString
-        Seq((-1L, new java.sql.Timestamp(hi + off), -1L, "sentinel", 0.0))
-          .toDF("event_id", "ts", "user_id", "event_type", "value")
-          .coalesce(1).write.parquet(senDir)
-        F.move(partFiles(senDir).head, dir.resolve(s"zz-sentinel-$j.parquet"))
-      }
-      val ordered = sliceFiles ++ Seq(flushFile, lateFile) ++ senFiles
-      val t0 = System.currentTimeMillis() - 24 * 60 * 60 * 1000L
-      ordered.zipWithIndex.foreach { case (p, i) =>
-        F.setLastModifiedTime(p, FileTime.fromMillis(t0 + i * 2000L))
-      }
+      val flushFile = writeOneFile(sentinel(s, hiOnTime), dir, "flush", "x-flush-0.parquet")
+      val lateFile = writeOneFile(ev.where(latePred), dir, "late", "y-late-0.parquet")
+      stampReplayOrder(sliceFiles ++ Seq(flushFile, lateFile) ++
+        sentinelFiles(s, dir, hi, sentinelOffsetsMs))
       (lo, hi)
     }
 
@@ -217,6 +225,120 @@ object StreamingQueries {
     s.conf.set(key, "8")
     try f finally s.conf.set(key, old)
   }
+
+  /** The ONE streaming run every certification goes through: open each
+    * staged `(dir, schema)` source as a file-source replay (one file per
+    * micro-batch, oldest mtime first), build `plan` over the replays, and
+    * drain it to the end of its input — `AvailableNow` from `ckpt`, under
+    * [[withCertStatePartitions]] — into whatever `sink` configures. The
+    * continuous ([[certTable]]) and recovery ([[recoveringTableMulti]])
+    * harnesses differ only in the sink and in how many incarnations run. */
+  private[queries] def drain(s: SparkSession, srcs: Seq[(String, StructType)],
+                             ckpt: String)
+                            (plan: Seq[DataFrame] => DataFrame)
+                            (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    withCertStatePartitions(s) {
+      val streams = srcs.map { case (dir, schema) =>
+        s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+      }
+      val query = sink(plan(streams).writeStream)
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try query.awaitTermination() finally query.stop()
+    }
+
+  /** A continuous streaming certification: [[drain]] `plan` over the
+    * staged sources from a fresh checkpoint into a memory sink named
+    * `<tag>_<uuid>` (unique per call, so reps and concurrent certs never
+    * share a sink), and return the sink's table. `outputMode` is the
+    * memory sink's: `append` for emit-once operators, `complete` for
+    * aggregates whose final state is the result. */
+  private[queries] def certTable(s: SparkSession, tag: String,
+                                 srcs: Seq[(String, StructType)],
+                                 outputMode: String = "append")
+                                (plan: Seq[DataFrame] => DataFrame): DataFrame = {
+    val name = tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    drain(s, srcs, Stage.ckpt())(plan)(
+      _.queryName(name).format("memory").outputMode(outputMode))
+    s.table(name)
+  }
+
+  /** One recovery-cert SOURCE: a memoized staged dir, how many of its
+    * files incarnation 1 may see, and the read schema. */
+  private[queries] case class RecSrc(srcDir: String, firstN: Int, schema: StructType)
+
+  /** Run a streaming cert as TWO query incarnations over its sources —
+    * the checkpoint-RECOVERY certification the continuous certs don't
+    * exercise. Each source's staged files are copied into a fresh per-
+    * invocation run dir in two halves: incarnation 1 sees only the first
+    * `firstN` files and runs to completion (`AvailableNow` commits every
+    * processed batch), is stopped, the remaining files are copied in, and
+    * a NEW query object starts from the SAME `checkpointLocation`. The
+    * restart recovers the stateful operators' keyed state from the state
+    * store and the file-source offset log guarantees incarnation 2 reads
+    * only the unseen files — no reprocessing, no gap. Both incarnations
+    * write the SAME parquet file sink (the memory sink used by the
+    * continuous certs deliberately refuses checkpoint recovery — the file
+    * sink's `_spark_metadata` commit log is the fault-tolerant,
+    * exactly-once production shape, and reading the dir back goes through
+    * that log, so only committed batches count). The certified property:
+    * the recovered run's cumulative output hash-matches the batch oracle,
+    * i.e. a mid-stream worker death + restart is output-invisible (the
+    * analog of the reference DAG's survive-by-rerun, `airflow.py:31`,
+    * done the durable-state way). A fresh run dir per invocation (rather
+    * than the memoized staged dir) keeps the staged corpus immutable and
+    * makes the mid-stream restart real on every run, including Bench
+    * reps. A stream-stream join has TWO sources, each with its own offset
+    * log in the one checkpoint.
+    *
+    * The copies preserve the staged mtime sequence (the file source
+    * replays oldest-first), so the cross-batch arrival order is exactly
+    * the continuous cert's. */
+  private[queries] def recoveringTableMulti(s: SparkSession, tag: String,
+                                            srcs: Seq[RecSrc])
+                                           (plan: Seq[DataFrame] => DataFrame): DataFrame = {
+    val prepared = srcs.zipWithIndex.map { case (src, i) =>
+      val runDir = graft.io.Scratch.dir(s"${tag}_run${i}_") + "/src"
+      F.createDirectories(Paths.get(runDir))
+      val files = partFiles(src.srcDir)
+        .sortBy(p => (F.getLastModifiedTime(p).toMillis, p.getFileName.toString))
+      require(src.firstN > 0 && src.firstN < files.size,
+        s"recovery split must leave batches on both sides: " +
+          s"${src.firstN} of ${files.size}")
+      (src, runDir, files)
+    }
+    def copyIn(runDir: String, ps: Seq[Path]): Unit =
+      ps.foreach { p =>
+        val tgt = Paths.get(runDir).resolve(p.getFileName)
+        F.copy(p, tgt)
+        F.setLastModifiedTime(tgt, F.getLastModifiedTime(p))
+      }
+    val ckpt = Stage.ckpt()
+    val outDir = graft.io.Scratch.dir(s"${tag}_out_") + "/out"
+    val runSrcs = prepared.map { case (src, runDir, _) => (runDir, src.schema) }
+    // drain stops each incarnation before returning, so the checkpoint is
+    // fully released before the next one opens it
+    def incarnation(): Unit =
+      drain(s, runSrcs, ckpt)(plan)(_.format("parquet").option("path", outDir))
+    prepared.foreach { case (src, runDir, files) =>
+      copyIn(runDir, files.take(src.firstN)) }
+    incarnation()
+    prepared.foreach { case (src, runDir, files) =>
+      copyIn(runDir, files.drop(src.firstN)) }
+    incarnation()
+    // the read goes through the sink's _spark_metadata commit log — only
+    // batches committed by either incarnation are visible
+    s.read.parquet(outDir)
+  }
+
+  /** Single-source [[recoveringTableMulti]]. */
+  private[queries] def recoveringTable(s: SparkSession, srcDir: String, firstN: Int,
+                                       tag: String)
+                                      (plan: DataFrame => DataFrame,
+                                       schema: StructType): DataFrame =
+    recoveringTableMulti(s, tag, Seq(RecSrc(srcDir, firstN, schema)))(
+      streams => plan(streams.head))
 
   /** Streaming sessionization, oracle-checked.
     *
@@ -248,26 +370,12 @@ object StreamingQueries {
     // replay the SAME memoized dir.
     val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(4 * 60 * 60 * 1000L, 6 * 60 * 60 * 1000L))
-    val ckpt = Stage.ckpt()
-
-    val name = "q65_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .as[Streaming.Event]
-    withCertStatePartitions(s) {
-      val query = Streaming.sessionize(stream, GapMs)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val sessions = certTable(s, "q65_sessions", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.sessionize(st.as[Streaming.Event], GapMs).toDF()
     }
 
     val w = Window.partitionBy(col("user_id")).orderBy(col("start"))
-    s.table(name)
+    sessions
       .where(col("user_id") >= 0) // drop the sentinel user
       .withColumn("session_id", row_number().over(w).cast("long"))
       .select(col("user_id"), col("session_id"), col("n_events"),
@@ -313,24 +421,10 @@ object StreamingQueries {
     // the batch in which they flush. Same staging key as q65 → shared dir.
     val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(4 * 60 * 60 * 1000L, 6 * 60 * 60 * 1000L))
-    val ckpt = Stage.ckpt()
 
-    val name = "q74_windows_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = Streaming.windowedEventCounts(stream, "1 hour", "2 hours")
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q74_windows", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.windowedEventCounts(st, "1 hour", "2 hours")
     }
-
-    s.table(name)
       .where(col("event_type") =!= "sentinel")
       .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
@@ -360,25 +454,11 @@ object StreamingQueries {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
 
     val (srcDir, lo, hi) = stageTimeOrdered(ev, d, "eventsDup", 4, dupEachFile = true)
-    val ckpt = Stage.ckpt()
     val sliceHours = ((hi - lo) / 4) / (60 * 60 * 1000L) + 2
 
-    val name = "q75_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = Streaming.dedupStream(stream, Seq("event_id"), s"$sliceHours hours")
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q75_dedup", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.dedupStream(st, Seq("event_id"), s"$sliceHours hours")
     }
-
-    s.table(name)
       .select(col("event_id"), date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
         col("user_id"), col("event_type"), col("value"))
       .orderBy(col("event_id"))
@@ -410,30 +490,17 @@ object StreamingQueries {
     val clicks = ev.where(col("event_type") === "click")
     val (vDir, _, _) = stageTimeOrdered(views, d, "views", 4, dupEachFile = false)
     val (cDir, _, _) = stageTimeOrdered(clicks, d, "clicks", 4, dupEachFile = false)
-    val ckpt = Stage.ckpt()
 
-    def src(dir: String): DataFrame =
-      s.readStream.schema(ev.schema).option("maxFilesPerTrigger", "1").parquet(dir)
-    val joined = Streaming.streamStreamJoin(
-        src(vDir).select(col("event_id").as("view_id"), col("ts"), col("user_id")),
-        src(cDir).select(col("event_id").as("click_id"), col("ts"), col("user_id")),
-        "user_id", boundSeconds = 3600)
-      .select(col("l.user_id").as("user_id"),
-        col("view_id"), col("click_id"),
-        col("l.ts").as("vts"), col("r.ts").as("cts"))
-
-    val name = "q80_join_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    withCertStatePartitions(s) {
-      val query = joined.writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q80_join", Seq(vDir -> ev.schema, cDir -> ev.schema)) {
+      case Seq(v, c) =>
+        Streaming.streamStreamJoin(
+            v.select(col("event_id").as("view_id"), col("ts"), col("user_id")),
+            c.select(col("event_id").as("click_id"), col("ts"), col("user_id")),
+            "user_id", boundSeconds = 3600)
+          .select(col("l.user_id").as("user_id"),
+            col("view_id"), col("click_id"),
+            col("l.ts").as("vts"), col("r.ts").as("cts"))
     }
-
-    s.table(name)
       .select(col("user_id"), col("view_id"), col("click_id"),
         date_format(col("vts"), "yyyy-MM-dd HH:mm:ss").as("view_ts"),
         date_format(col("cts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"))
@@ -478,26 +545,11 @@ object StreamingQueries {
         lit("1996-06-17").cast("date").as("effective"))
 
     val (srcDir, _, _) = Stage.memo(d, "scd2chg") { dir =>
-      import java.nio.file.{Files => F, Paths}
-      import java.nio.file.attribute.FileTime
       val dirPath = Paths.get(dir)
-      F.createDirectories(dirPath.getParent)
-      val t0 = System.currentTimeMillis() - 24 * 60 * 60 * 1000L
-      Seq(batch1, batch2).zipWithIndex.foreach { case (b, i) =>
-        val side = dirPath.getParent.resolve(s"b$i").toString
-        b.coalesce(1).write.parquet(side)
-        val it = F.list(Paths.get(side)).iterator()
-        var part: java.nio.file.Path = null
-        while (it.hasNext) {
-          val p = it.next()
-          val n = p.getFileName.toString
-          if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith(".")) part = p
-        }
-        F.createDirectories(dirPath)
-        val dest = dirPath.resolve(s"batch-$i.parquet")
-        F.move(part, dest)
-        F.setLastModifiedTime(dest, FileTime.fromMillis(t0 + i * 2000L))
-      }
+      F.createDirectories(dirPath)
+      stampReplayOrder(Seq(batch1, batch2).zipWithIndex.map { case (b, i) =>
+        writeOneFile(b, dirPath, s"b$i", s"batch-$i.parquet")
+      })
       (0L, 0L)
     }
 
@@ -505,20 +557,12 @@ object StreamingQueries {
         lit("1992-01-01").cast("date").as("valid_from"),
         lit(null).cast("date").as("valid_to"))
       .localCheckpoint(true)
-    val ckpt = Stage.ckpt()
-    val query = s.readStream.schema(batch1.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-      .writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+    drain(s, Seq(srcDir -> batch1.schema), Stage.ckpt())(_.head)(
+      _.foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
         state = graft.operators.Scd2.merge(state, b.toDF(), "c_custkey")
           .localCheckpoint(true)
         ()
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
+      })
     state.orderBy(col("c_custkey"), col("valid_from"))
   }
 
@@ -571,29 +615,11 @@ object StreamingQueries {
     val benchGrams = graft.llm.Curation.benchGramSet(
       docs, "text", col("doc_id") % 97 === 0, n = 4)
     // stage the corpus (minus bench docs) as 4 doc_id-range files
-    val (srcDir, _, _) = Stage.memo(d, "docs4s") { dir =>
-      docs.where(col("doc_id") % 97 =!= 0)
-        .repartitionByRange(4, col("doc_id"))
-        .write.mode("append").parquet(dir)
-      (0L, 0L)
+    val srcDir = stageDocRanges(docs.where(col("doc_id") % 97 =!= 0), d, "docs4s")
+    certTable(s, "q117_contam", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => graft.llm.Curation
+        .contaminationFilter(st, "text", "doc_id", benchGrams, n = 4)
     }
-    val ckpt = Stage.ckpt()
-    val name = "q117_contam_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = graft.llm.Curation
-        .contaminationFilter(stream, "text", "doc_id", benchGrams, n = 4)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.table(name)
       .select(col("doc_id"), col("n_grams"), col("n_overlap"), col("contaminated"))
       .orderBy(col("doc_id"))
   }
@@ -617,27 +643,11 @@ object StreamingQueries {
     import s.implicits._
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
-    val (srcDir, _, _) = Stage.memo(d, "docsAll4") { dir =>
-      docs.repartitionByRange(4, col("doc_id")).write.mode("append").parquet(dir)
-      (0L, 0L)
-    }
-    val ckpt = Stage.ckpt()
-    val name = "q123_lsh_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = graft.llm.Dedup
-      .bandBuckets(stream, "text", "doc_id", LlmQueries.LshK, LlmQueries.LshBands)
-      .as[graft.llm.BandBucket]
-    withCertStatePartitions(s) {
-      val query = Streaming.lshCandidateStream(arrivals)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val srcDir = stageDocRanges(docs, d, "docsAll4")
+    val pairs = certTable(s, "q123_lsh", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => Streaming.lshCandidateStream(graft.llm.Dedup
+        .bandBuckets(st, "text", "doc_id", LlmQueries.LshK, LlmQueries.LshBands)
+        .as[graft.llm.BandBucket]).toDF()
     }
     // batch post-filter mirroring lshCandidatePairs' maxBucket=1000 cap:
     // buckets past the cap are dropped ENTIRELY, pairs included. Bucket
@@ -646,7 +656,7 @@ object StreamingQueries {
     // corpus (LshStreamSpec pins stream-vs-batch key parity), without
     // re-running the per-doc shingle → 8-hash pipeline per invocation.
     val oversized = DocLsh.oversizedLshBuckets(s, d, 1000)
-    s.table(name)
+    pairs
       .join(oversized, Seq("band", "bkey"), "left_anti")
       .select(col("doc_a"), col("doc_b")).distinct()
       .orderBy(col("doc_a"), col("doc_b"))
@@ -668,28 +678,11 @@ object StreamingQueries {
       .select(col("doc_id"), col("text"))
     val weights: Map[Long, Long] = (0 until 256)
       .map(i => i.toLong -> ((i * 2654435761L) % 2000001L - 1000000L)).toMap
-    val (srcDir, _, _) = Stage.memo(d, "docsAll4") { dir =>
-      docs.repartitionByRange(4, col("doc_id"))
-        .write.mode("append").parquet(dir)
-      (0L, 0L)
+    val srcDir = stageDocRanges(docs, d, "docsAll4")
+    certTable(s, "q139_quality", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => graft.llm.Curation
+        .linearScoreLiteral(st, "text", "doc_id", weights, buckets = 256)
     }
-    val ckpt = Stage.ckpt()
-    val name = "q139_quality_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = graft.llm.Curation
-        .linearScoreLiteral(stream, "text", "doc_id", weights, buckets = 256)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.table(name)
       .select(col("doc_id"), col("n_tokens"), col("score_fp"), col("keep"))
       .orderBy(col("doc_id"))
   }
@@ -724,27 +717,11 @@ object StreamingQueries {
     val docs = Tables.widen(Tables.documents(s, d))
       .where(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("text"))
-    val (srcDir, _, _) = Stage.memo(d, "docsHalf4") { dir =>
-      docs.repartitionByRange(4, col("doc_id")).write.mode("append").parquet(dir)
-      (0L, 0L)
-    }
-    val ckpt = Stage.ckpt()
-    val name = "q146_simhash_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = graft.llm.Dedup
-      .simhashBandBuckets(stream, "text", "doc_id", bits = 64, bandBits = 16)
-      .as[graft.llm.BandBucket]
-    withCertStatePartitions(s) {
-      val query = Streaming.lshCandidateStream(arrivals)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val srcDir = stageDocRanges(docs, d, "docsHalf4")
+    val pairs = certTable(s, "q146_simhash", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => Streaming.lshCandidateStream(graft.llm.Dedup
+        .simhashBandBuckets(st, "text", "doc_id", bits = 64, bandBits = 16)
+        .as[graft.llm.BandBucket]).toDF()
     }
     // batch post-filter mirroring simhashNearDupPairs' maxBucket cap, then
     // exact Hamming verification — BOTH from the staged 64-bit fingerprint
@@ -756,7 +733,7 @@ object StreamingQueries {
       .groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n"))
       .where(col("n") > 1000)
       .select(col("band"), col("bkey"))
-    s.table(name)
+    pairs
       .join(oversized, Seq("band", "bkey"), "left_anti")
       .select(col("doc_a"), col("doc_b")).distinct()
       .join(fp.select(col("doc_id").as("doc_a"), col("simhash").as("sim_a")), Seq("doc_a"))
@@ -788,45 +765,32 @@ object StreamingQueries {
        |FROM cand WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** Stage a (doc_id, source) frame into `parts` doc_id-RANGE parquet
-    * files with strictly-increasing mtimes in range order, so a
-    * `maxFilesPerTrigger=1` replay delivers micro-batches in doc_id order
-    * — the arrival-order contract the admission-cap certification needs
-    * (same mtime-stamping discipline as [[stageTimeOrdered]], minus the
-    * event-time bounds and sentinels, which an unwatermarked stateful op
-    * doesn't use). Memoized per (sfDir, key). */
-  private def stageIdOrdered(docs: DataFrame, d: String, key: String,
-                             parts: Int): String =
-    stageOrderedBy(docs, d, key, parts, Seq(col("doc_id")))
+  /** Stage a documents frame as 4 doc_id-range parquet files, memoized per
+    * (sfDir, key), WITHOUT mtime stamping: the files replay in whatever
+    * order their write mtimes give, which is enough for certs whose output
+    * does not depend on the cross-batch arrival order (stateless gates,
+    * commutative counts, order-free pairings). */
+  private[queries] def stageDocRanges(docs: DataFrame, d: String, key: String): String =
+    Stage.memo(d, key) { dir =>
+      docs.repartitionByRange(4, col("doc_id")).write.mode("append").parquet(dir)
+      (0L, 0L)
+    }._1
 
-  /** Stage `df` as `parts` range-partitioned parquet files whose file-name
-    * (= replay) order follows `orderCols` — the generic form of
-    * [[stageIdOrdered]] for certifications whose cross-batch contract is
-    * an arbitrary total order (e.g. event time, tie-broken by id). */
+  /** Stage `df` as `parts` range-partitioned parquet files on `orderCols`
+    * with strictly-increasing mtimes in range order, so a
+    * `maxFilesPerTrigger=1` replay delivers micro-batches in that total
+    * order — doc_id for the admission caps, (event time, id) for the
+    * stateful folds. Same mtime-stamping discipline as [[stageTimeOrdered]],
+    * minus the event-time bounds and sentinels, which an unwatermarked
+    * stateful op doesn't use. Memoized per (sfDir, key). */
   private[queries] def stageOrderedBy(df: DataFrame, d: String, key: String,
                              parts: Int,
-                             orderCols: Seq[org.apache.spark.sql.Column]): String = {
-    val (dir, _, _) = Stage.memo(d, key) { srcDir =>
-      import java.nio.file.{Files => F, Paths}
-      import java.nio.file.attribute.FileTime
+                             orderCols: Seq[org.apache.spark.sql.Column]): String =
+    Stage.memo(d, key) { srcDir =>
       df.repartitionByRange(parts, orderCols: _*).write.mode("append").parquet(srcDir)
-      val it = F.list(Paths.get(srcDir)).iterator()
-      val buf = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-      while (it.hasNext) {
-        val p = it.next()
-        val n = p.getFileName.toString
-        if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-          buf += p
-      }
-      // one job, one job-UUID → lexicographic name order IS partition order
-      val t0 = System.currentTimeMillis() - 24 * 60 * 60 * 1000L
-      buf.sortBy(_.getFileName.toString).zipWithIndex.foreach { case (p, i) =>
-        F.setLastModifiedTime(p, FileTime.fromMillis(t0 + i * 2000L))
-      }
+      stampReplayOrder(partFiles(srcDir))
       (0L, 0L)
-    }
-    dir
-  }
+    }._1
 
   /** Streaming per-source admission cap — the tenth streaming cert:
     * [[Streaming.admitFirstK]] admits the first 30 docs per source across
@@ -839,25 +803,11 @@ object StreamingQueries {
     import s.implicits._
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("source"))
-    val srcDir = stageIdOrdered(docs, d, "docsIdOrdered4", 4)
-    val ckpt = Stage.ckpt()
-    val name = "q152_cap_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.select(col("source"), col("doc_id"))
-      .as[Streaming.SourceDoc]
-    withCertStatePartitions(s) {
-      val query = Streaming.admitFirstK(arrivals, 30L)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val srcDir = stageOrderedBy(docs, d, "docsIdOrdered4", 4, Seq(col("doc_id")))
+    certTable(s, "q152_cap", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => Streaming.admitFirstK(
+        st.select(col("source"), col("doc_id")).as[Streaming.SourceDoc], 30L).toDF()
     }
-    s.table(name)
       .select(col("doc_id"), col("source"), col("admit_rank"))
       .orderBy(col("doc_id"))
   }
@@ -881,25 +831,12 @@ object StreamingQueries {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("source"),
         size(graft.llm.TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
-    val srcDir = stageIdOrdered(docs, d, "docsTokIdOrdered4", 4)
-    val ckpt = Stage.ckpt()
-    val name = "q164_tb_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.select(col("source"), col("doc_id"), col("n_tokens"))
-      .as[Streaming.SourceTokDoc]
-    withCertStatePartitions(s) {
-      val query = Streaming.admitTokenBudget(arrivals, 600L)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    val srcDir = stageOrderedBy(docs, d, "docsTokIdOrdered4", 4, Seq(col("doc_id")))
+    certTable(s, "q164_tb", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => Streaming.admitTokenBudget(
+        st.select(col("source"), col("doc_id"), col("n_tokens"))
+          .as[Streaming.SourceTokDoc], 600L).toDF()
     }
-    s.table(name)
       .select(col("doc_id"), col("source"), col("cum_tokens"))
       .orderBy(col("doc_id"))
   }
@@ -932,23 +869,9 @@ object StreamingQueries {
       round(abs(col("value")) * 10000).cast("long").as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsTsOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q208_ewma_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.KeyedObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.ewmaHalfLife(arrivals)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q208_ewma", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.ewmaHalfLife(st.as[Streaming.KeyedObs]).toDF()
     }
-    s.table(name)
       .select(col("user_id"), col("event_id"), col("x"), col("ewma"))
       .orderBy(col("event_id"))
   }
@@ -983,23 +906,10 @@ object StreamingQueries {
       round(abs(col("value")) * 10000).cast("long").as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsTsOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q212_cusum_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.KeyedObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.cusumDrift(arrivals, k = 5000L, h = 30000L)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q212_cusum", Seq(srcDir -> ev.schema)) {
+      case Seq(st) =>
+        Streaming.cusumDrift(st.as[Streaming.KeyedObs], k = 5000L, h = 30000L).toDF()
     }
-    s.table(name)
       .select(col("user_id"), col("event_id"), col("x"), col("cusum"),
         col("alarm"))
       .orderBy(col("event_id"))
@@ -1032,28 +942,11 @@ object StreamingQueries {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
     val vocab = graft.llm.TextAnalysis.vocabTopV(Tables.documents(s, d), "text", 20)
-    val (srcDir, _, _) = Stage.memo(d, "docsAll4") { dir =>
-      docs.repartitionByRange(4, col("doc_id"))
-        .write.mode("append").parquet(dir)
-      (0L, 0L)
+    val srcDir = stageDocRanges(docs, d, "docsAll4")
+    certTable(s, "q173_oov", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => graft.llm.TextAnalysis
+        .oovGateLiteral(st, "text", "doc_id", vocab, 320000L)
     }
-    val ckpt = Stage.ckpt()
-    val name = "q173_oov_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = graft.llm.TextAnalysis
-        .oovGateLiteral(stream, "text", "doc_id", vocab, 320000L)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.table(name)
       .select(col("doc_id"), col("n_tokens"), col("n_oov"), col("oov_fp"),
         col("keep"))
       .orderBy(col("doc_id"))
@@ -1088,22 +981,9 @@ object StreamingQueries {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s5", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(5 * 60 * 60 * 1000L, 7 * 60 * 60 * 1000L))
-    val ckpt = Stage.ckpt()
-    val name = "q178_sliding_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = Streaming.slidingEventCounts(stream, "2 hours", "1 hour", "2 hours")
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q178_sliding", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.slidingEventCounts(st, "2 hours", "1 hour", "2 hours")
     }
-    s.table(name)
       .where(col("event_type") =!= "sentinel")
       .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start_s"),
         col("event_type"), col("n"), col("sum_value"))
@@ -1130,34 +1010,17 @@ object StreamingQueries {
   val q188_stream_drift: Q = (s, d) => {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("source"))
-    val (srcDir, _, _) = Stage.memo(d, "docsrc4") { dir =>
-      docs.repartitionByRange(4, col("doc_id"))
-        .write.mode("append").parquet(dir)
-      (0L, 0L)
-    }
-    val ckpt = Stage.ckpt()
-    val name = "q188_drift_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = stream
+    val srcDir = stageDocRanges(docs, d, "docsrc4")
+    val hist = certTable(s, "q188_drift", Seq(srcDir -> docs.schema), "complete") {
+      case Seq(st) => st
         .select(expr("doc_id div 125").as("tick"), col("source").as("value"))
         .groupBy(col("tick"), col("value"))
         .agg(count(lit(1)).as("n"))
-        .writeStream
-        .queryName(name)
-        .outputMode("complete")
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
     }
     val ref = Tables.documents(s, d)
       .groupBy(col("source").as("value"))
       .agg(count(lit(1)).as("n_ref"))
-    graft.llm.Drift.perTickDrift(s.table(name), ref)
+    graft.llm.Drift.perTickDrift(hist, ref)
       .orderBy(col("tick"))
   }
   val q188_sql: String =
@@ -1197,22 +1060,9 @@ object StreamingQueries {
     val (srcDir, _, _) = stageLateReplay(ev, d, "events3late", 3,
       col("event_id") % 7 === 0,
       sentinelOffsetsMs = Seq(50 * 60 * 60 * 1000L, 54 * 60 * 60 * 1000L))
-    val ckpt = Stage.ckpt()
-    val name = "q196_late_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = Streaming.windowedEventCounts(stream, "1 hour", "48 hours")
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q196_late", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.windowedEventCounts(st, "1 hour", "48 hours")
     }
-    s.table(name)
       .where(col("event_type") =!= "sentinel")
       .select(date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss")
           .as("window_start_s"),
@@ -1243,32 +1093,15 @@ object StreamingQueries {
   val q198_stream_static_join: Q = (s, d) => {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("source"))
-    val (srcDir, _, _) = Stage.memo(d, "docsrc4") { dir =>
-      docs.repartitionByRange(4, col("doc_id"))
-        .write.mode("append").parquet(dir)
-      (0L, 0L)
-    }
+    val srcDir = stageDocRanges(docs, d, "docsrc4")
     val dim = Tables.documents(s, d)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_src"), sum(col("n_chars")).as("src_chars"))
-    val ckpt = Stage.ckpt()
-    val name = "q198_ssj_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    withCertStatePartitions(s) {
-      val query = stream
+    certTable(s, "q198_ssj", Seq(srcDir -> docs.schema)) {
+      case Seq(st) => st
         .join(broadcast(dim), Seq("source"))
         .select(col("doc_id"), col("source"), col("n_src"), col("src_chars"))
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    }
-    s.table(name).orderBy(col("doc_id"))
+    }.orderBy(col("doc_id"))
   }
   val q198_sql: String =
     """WITH c AS (SELECT source, count(*)::BIGINT AS n_src,
@@ -1297,23 +1130,9 @@ object StreamingQueries {
         .otherwise(0L).as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsTsCodeOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val ckpt = Stage.ckpt()
-    val name = "q218_dfa_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    val stream = s.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(srcDir)
-    val arrivals = stream.as[Streaming.KeyedObs]
-    withCertStatePartitions(s) {
-      val query = Streaming.patternDfa(arrivals)
-        .writeStream
-        .queryName(name)
-        .format("memory")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+    certTable(s, "q218_dfa", Seq(srcDir -> ev.schema)) {
+      case Seq(st) => Streaming.patternDfa(st.as[Streaming.KeyedObs]).toDF()
     }
-    s.table(name)
       .select(col("user_id"), col("event_id"), col("x"), col("dfa"))
       .withColumn("completions", expr("dfa div 10"))
       .withColumn("stage", col("dfa") % 10)

@@ -155,4 +155,19 @@ class FunctionsSpec extends SparkSpec {
       assert(r.getLong(1) == r.getLong(2), s"id=${r.getLong(0)}")
     }
   }
+
+  test("LitSetOverlap has structural equality: content-equal sets compare equal") {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import graft.functions.LitSetOverlap
+    val arr = AttributeReference("arr", ArrayType(StringType))()
+    // two separately built, content-equal sets in different collections
+    val a = LitSetOverlap(arr, Vector("a b", "c d", "é ü"))
+    val b = LitSetOverlap(arr, Array("a b", "c d", "é ü").toIndexedSeq)
+    assert(a == b)
+    assert(a.hashCode == b.hashCode)
+    assert(a.semanticEquals(b))
+    assert(a.semanticHash() == b.semanticHash())
+    assert(a != LitSetOverlap(arr, Vector("a b", "c d")))
+  }
 }

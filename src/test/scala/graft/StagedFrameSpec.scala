@@ -41,4 +41,23 @@ class StagedFrameSpec extends SparkSpec {
     assert(frame().count() === 7L)
     assert(builds === 2)
   }
+
+  test("StageClock charges a timed region nested in another only once") {
+    import graft.io.StageClock
+    val before = StageClock.totalSecs
+    val w0 = System.nanoTime()
+    StageClock.timed { StageClock.timed { Thread.sleep(100) } }
+    val wall = (System.nanoTime() - w0) / 1e9
+    val charged = StageClock.totalSecs - before
+    // one charge is at least the inner sleep and at most the enclosing
+    // wall time; a double count would be at least twice the sleep (> wall)
+    assert(charged >= 0.1 && charged <= wall, s"charged=$charged wall=$wall")
+    // an exception unwinds the depth, so the next region charges again
+    intercept[IllegalStateException] {
+      StageClock.timed { throw new IllegalStateException("boom") }
+    }
+    val mid = StageClock.totalSecs
+    StageClock.timed { Thread.sleep(20) }
+    assert(StageClock.totalSecs - mid >= 0.02)
+  }
 }

@@ -3,7 +3,11 @@
 dump from Verify.scala, run the matching oracle SQL in DuckDB over the same
 testdata tables, and compare (rows / schema / values).
 
-Usage: python3 tools/local_verify.py <sfDir> <outDir>
+Usage: python3 tools/local_verify.py <sfDir> <outDir> [prefixes]
+`prefixes` is the comma-separated name-prefix list also given to
+graft.Verify's third argument: only queries whose names start with one of
+them are compared, so a dump of a subset is checked as that subset.
+Exits 1 unless every compared query is exact-green (and at least one was).
 (Driver-side tooling only — not part of the Spark library.)
 """
 import sys, json, glob, os
@@ -20,6 +24,7 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
 
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
+    prefixes = sys.argv[3].split(",") if len(sys.argv) > 3 else [""]
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -28,6 +33,8 @@ def main():
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     results = {}
     for name, sql in sorted(oracle.items()):
+        if not any(name.startswith(p) for p in prefixes):
+            continue
         entry = {"rows": False, "schema": False, "values": False}
         try:
             files = glob.glob(f"{out_dir}/{name}/*.parquet")
@@ -64,6 +71,7 @@ def main():
         flag = "OK " if v.get("values") is True else ("~~ " if v.get("values") == "approx-only" else "FAIL")
         print(f"{flag} {name}: {json.dumps(v)}")
     print(f"\n{ok}/{len(results)} exact-green")
+    return 0 if results and ok == len(results) else 1
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
