@@ -12,8 +12,12 @@ import graft.model.Model.Book
   * The reference fetches live over HTTP, strictly sequentially; here the
   * fetch is an injected `url → html` function (fixture files in this
   * zero-egress environment, an HTTP client in production) applied inside
-  * `mapPartitions`-style UDFs, so the 1→20 fan-out and per-book parses run
-  * parallel across tasks instead of one loop on one core.
+  * `mapPartitions`-style UDFs. The 1→20 fan-out and per-book fetches and
+  * parses run in the tasks of `spark.range`'s partitions (one per core by
+  * default) only if the frame is materialised as it is:
+  * `graft.pipeline.BooksEtl.extract` local-checkpoints it. A consumer that
+  * narrows it first, such as a `coalesce(1)` single-file sink, runs the
+  * whole scrape in one task, and every action on the lazy frame re-fetches.
   */
 object Extract {
 

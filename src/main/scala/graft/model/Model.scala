@@ -48,14 +48,23 @@ object Model {
 
   /** The star schema produced by the transform
     * (`transformation_pipeline.py:69-123`): 4 dims + 1 fact + the cleaned
-    * flat table. */
+    * flat table. `Transform.buildStar` caches all six; the caller owns
+    * those caches and must [[unpersist]] them when done, or a long-lived
+    * driver keeps one set per run. */
   case class TransformResult(
       cleaned: DataFrame,
       dimBook: DataFrame,
       dimCategory: DataFrame,
       dimPriceTier: DataFrame,
       dimStockTier: DataFrame,
-      fact: DataFrame)
+      fact: DataFrame) {
+
+    /** Releases the six cached tables, readers before what they read: a
+      * cached plan whose input is uncached while it is still unfilled would
+      * be re-planned. */
+    def unpersist(): Unit =
+      Seq(fact, dimBook, dimCategory, dimPriceTier, dimStockTier, cleaned).foreach(_.unpersist())
+  }
 
   /** The five summary stats the DAG emails out (`airflow.py:101-107`). */
   case class Summary(

@@ -9,9 +9,10 @@ import graft.model.Model.TransformResult
 /** The analytical core: clean → derive → bin → star schema → summary,
   * re-expressing `/root/reference/transformation_pipeline.py:28-123` as one
   * lazy Catalyst plan per output instead of eager materialize-every-step
-  * pandas. The cleaned DataFrame is cached before the 5-way fan-out
-  * (4 dims + fact) — the single place lazy evaluation would otherwise
-  * recompute the clean stage five times.
+  * pandas. [[buildStar]] caches the cleaned frame before the 5-way fan-out
+  * (4 dims + fact), and each dim and the fact as they are built, so the
+  * sinks, the fact's broadcast joins and [[summary]] read one materialised
+  * copy of each table instead of recomputing it per consumer.
   */
 object Transform {
 
@@ -46,15 +47,18 @@ object Transform {
 
   /** Star-schema build (`transformation_pipeline.py:69-117`): 4 dims with
     * dense surrogate keys, fact via 4 broadcast joins — null-safe on
-    * `Stock_Bin` (O25) because the fixed bins can emit null. */
+    * `Stock_Bin` (O25) because the fixed bins can emit null.
+    *
+    * All six returned tables are cached (filled by their first action); the
+    * caller owns them and releases them with [[TransformResult.unpersist]]. */
   def buildStar(cleaned: DataFrame): TransformResult = {
     val df = cleaned.cache()
+    def dim(keyCols: Seq[String], idCol: String) = Star.buildDim(df, keyCols, idCol).cache()
 
-    val dimBook = Star.buildDim(df,
-      Seq("Title", "Description", "UPC", "Product Type", "Image_link"), "book_id")
-    val dimCategory = Star.buildDim(df, Seq("Category"), "category_id")
-    val dimPriceTier = Star.buildDim(df, Seq("Price_Tier"), "price_tier_id")
-    val dimStockTier = Star.buildDim(df, Seq("Stock_Bin"), "stock_tier_id")
+    val dimBook = dim(Seq("Title", "Description", "UPC", "Product Type", "Image_link"), "book_id")
+    val dimCategory = dim(Seq("Category"), "category_id")
+    val dimPriceTier = dim(Seq("Price_Tier"), "price_tier_id")
+    val dimStockTier = dim(Seq("Stock_Bin"), "stock_tier_id")
 
     val joined = Star.joinDim(
       Star.joinDim(
@@ -69,7 +73,7 @@ object Transform {
       col("book_id"), col("category_id"), col("price_tier_id"), col("stock_tier_id"),
       col("Rating"), c("Price (excl. tax)"), c("Price (incl. tax)"), col("Tax"),
       col("No_of_books_in_Stock"), c("Inventory Value"), c("Number of reviews"),
-      col("In_Stock_Binary"))
+      col("In_Stock_Binary")).cache()
 
     TransformResult(df, dimBook, dimCategory, dimPriceTier, dimStockTier, fact)
   }
