@@ -56,9 +56,10 @@ object ConnectedComponents {
     // 2-long-column tables, so broadcasting them leaves ONE shuffle per
     // round (the per-src min) instead of three — the edge table never
     // exchanges inside a round. Past the gate both joins revert to shuffle
-    // joins automatically. Gate sized for PER-ROUND broadcast accumulation
-    // (see [[PageRank.PerRoundBroadcastMaxNodes]]), not the one-shot 4M
-    // Triangles budget.
+    // joins automatically. Gate sized for node-bounded state paid EVERY
+    // round, not the one-shot 4M Triangles budget; it is
+    // [[PageRank.PerRoundBroadcastMaxNodes]], under which PageRank keeps
+    // its whole rank vector on the driver.
     val n = labels.count()
     val bounded = (df: DataFrame) =>
       if (n <= PageRank.PerRoundBroadcastMaxNodes) broadcast(df) else df
