@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.expr
 
 /** Benchmark main. Emits ONE JSON line with per-query seconds.
@@ -36,19 +36,62 @@ object Bench {
       } finally src.close()
     } catch { case _: Throwable => (-1L, -1L) }
 
+  /** Each query's minimum seconds over `reps` repetitions (streaming
+    * names run once, see `main`), the seconds of it spent staging, and the
+    * names that threw. A query that throws is failed: it is reported on
+    * stderr, never timed, and not run again on a later rep. */
+  private[graft] final case class Timings(secs: Seq[(String, Double)],
+                                          stageSecs: Map[String, Double],
+                                          failed: Seq[String])
+
+  private[graft] def timeQueries(spark: SparkSession, sfDir: String,
+                                 names: Seq[(String, (SparkSession, String) => DataFrame)],
+                                 streaming: String => Boolean, reps: Int): Timings = {
+    // per-query staging attribution (rep 1 pays each memoized staged
+    // corpus exactly once; see graft.io.StageClock): reported IN ADDITION
+    // to the unchanged per-query totals, never subtracted from them
+    val stageSecs = scala.collection.mutable.Map.empty[String, Double]
+    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    def timeAll(rep: Int): Map[String, Double] = names.flatMap { case (name, fn) =>
+      if ((rep > 1 && streaming(name)) || failed(name)) None
+      else {
+        val st0 = graft.io.StageClock.totalSecs
+        val t0 = System.nanoTime()
+        val ok =
+          try { fn(spark, sfDir).queryExecution.toRdd.count(); true }
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            failed += name
+            false
+          }
+        val dt = (System.nanoTime() - t0) / 1e9
+        val sdt = graft.io.StageClock.totalSecs - st0
+        if (ok && sdt > 0.001) stageSecs(name) = stageSecs.getOrElse(name, 0.0) + sdt
+        // drop this query's localCheckpoint blocks before the next one:
+        // ~80 queries checkpoint fan-out frames, and 250 queries × reps
+        // would otherwise accumulate hundreds of materialized RDDs in the
+        // block manager — storage eviction + GC pressure that inflates
+        // the later (state-store-heavy streaming) queries. Cleanup time
+        // is deliberately OUTSIDE the measured window.
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+        if (ok) Some(name -> dt) else None
+      }
+    }.toMap
+    // rep 1 pays one-time costs (parquet footer reads, broadcast warmup,
+    // codegen cache); minima over reps report steady-state per-query cost.
+    val runs = (1 to reps).map(timeAll)
+    val secs = names.collect { case (name, _) if !failed(name) =>
+      name -> runs.flatMap(_.get(name)).min }
+    Timings(secs, stageSecs.toMap -- failed, failed.toSeq)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     val loadBefore = loadAvg()
     val (steal0, jiffies0) = cpuStealTotal()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(cpus)
     // harness warmup (scheduler, codegen, shuffle machinery) so the first
     // timed query doesn't absorb JVM startup; touches no benchmark data
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -71,34 +114,8 @@ object Bench {
     val streamingNames =
       queries.StreamingQueries.defs.keySet ++ queries.StreamingCertQueries.defs.keySet ++
         queries.RecoveryCertQueries.defs.keySet
-    // per-query staging attribution (rep 1 pays each memoized staged
-    // corpus exactly once; see graft.io.StageClock): reported IN ADDITION
-    // to the unchanged per-query totals, never subtracted from them
-    val stageSecs = scala.collection.mutable.Map.empty[String, Double]
-    def timeAll(rep: Int): Map[String, Double] = names.flatMap { case (name, fn) =>
-      if (rep > 1 && streamingNames(name)) None
-      else {
-        val st0 = graft.io.StageClock.totalSecs
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val sdt = graft.io.StageClock.totalSecs - st0
-        if (sdt > 0.001) stageSecs(name) = stageSecs.getOrElse(name, 0.0) + sdt
-        // drop this query's localCheckpoint blocks before the next one:
-        // ~80 queries checkpoint fan-out frames, and 250 queries × reps
-        // would otherwise accumulate hundreds of materialized RDDs in the
-        // block manager — storage eviction + GC pressure that inflates
-        // the later (state-store-heavy streaming) queries. Cleanup time
-        // is deliberately OUTSIDE the measured window.
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        Some(name -> dt)
-      }
-    }.toMap
-    // rep 1 pays one-time costs (parquet footer reads, broadcast warmup,
-    // codegen cache); minima over reps report steady-state per-query cost.
-    val runs = (1 to reps).map(timeAll)
-    val results = names.map { case (name, _) =>
-      name -> runs.flatMap(_.get(name)).min }
+    val Timings(results, stageSecs, failed) =
+      timeQueries(spark, sfDir, names, streamingNames, reps)
     val loadAfter = loadAvg()
     val (steal1, jiffies1) = cpuStealTotal()
     val stealPct =
@@ -128,8 +145,10 @@ object Bench {
     // stage_secs: how much of each query's (included, unchanged) time was
     // first-consumer staging I/O — the in-band staging/compute split
     val stages = jmap(stageSecs.toSeq.sortBy(_._1))
+    // queries that threw: listed here, left out of every map and total
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val stageTotal = stageSecs.values.sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stream_certs":$certs,"batch_total":$batchTotal,"stream_total":$streamTotal,"stage_secs":$stages,"stage_total":$stageTotal,"sf":"$sfDir","reps":$reps,"stream_reps":1,$loads$warn}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"stream_certs":$certs,"failed":$failedJson,"batch_total":$batchTotal,"stream_total":$streamTotal,"stage_secs":$stages,"stage_total":$stageTotal,"sf":"$sfDir","reps":$reps,"stream_reps":1,$loads$warn}"""
     println(line)
     // also land the line in a file: the driver reads the process tail, and
     // a ~20 KB one-line JSON has already outgrown one round's tail capture
@@ -139,5 +158,6 @@ object Bench {
         (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
     spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -82,15 +82,21 @@ object ConnectedComponents {
           sum(when(col("nl") < col("label"), 1L).otherwise(0L)).as("changed"))
         .select(col("id"), least(col("label"), col("nl")).as("label"))
         .localCheckpoint(true)
+      // next is materialized and reads none of the old labels' lineage
+      PageRank.release(labels)
       labels = next
       converged = longMetric(obs, "changed") == 0L
       i += 1
     }
-    if (!converged)
+    // only the returned labels keep their blocks
+    PageRank.release(edges)
+    if (!converged) {
+      PageRank.release(labels)
       throw new IllegalStateException(
         s"ConnectedComponents.components did not converge in $maxIters rounds: " +
           "a component's diameter exceeds maxIters, so returned labels would be " +
           "silently wrong. Raise maxIters or use componentsStar (O(log n) rounds).")
+    }
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 

@@ -6,6 +6,7 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -292,10 +293,24 @@ object PageRank {
       // stride was A/B'd at 10M edges / 500k nodes / 12 rounds in round 16
       // and measured a WASH — alternating probes spanned 13.9–20.5 s
       // (stride) vs 14.5–21.3 s (per-round).
-      r = pooled.select(nodes("id"),
+      val next = pooled.select(nodes("id"),
           (lit(base) + expr("(85 * (coalesce(s, 0L) + __share)) div 100")).as("r_fp"))
         .localCheckpoint(true)
+      // next is materialized and reads none of r's lineage
+      release(r)
+      r = next
     }
+    // only the returned ranks keep their blocks
+    Seq(nodes, ed, danglingIds).filter(_ != null).foreach(release)
     r
   }
+
+  /** Drops the blocks of a frame `localCheckpoint(true)` returned, once
+    * nothing left to run reads it; a no-op on any other frame (round 1's
+    * ranks are a projection of `nodes`, not a checkpoint). */
+  private[operators] def release(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _             => ()
+    }
 }

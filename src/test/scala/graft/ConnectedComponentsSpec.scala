@@ -30,6 +30,15 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  test("propagation leaves only the returned labels persisted") {
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    val labels = ConnectedComponents.components(mixedGraph, "a", "b")
+    assert(labels.as[(Long, Long)].collect().sorted.toSeq == expected)
+    // compared by id: the context cleaner may drop other suites' RDDs meanwhile
+    assert((sc.getPersistentRDDs.keys.toSet -- persisted).size <= 1)
+  }
+
   test("large-star/small-star produces identical output to propagation") {
     val got = ConnectedComponents.componentsStar(mixedGraph, "a", "b")
       .as[(Long, Long)].collect().sorted.toSeq

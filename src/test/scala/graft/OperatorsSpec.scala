@@ -169,26 +169,7 @@ class AsOfJoinSpec extends SparkSpec {
   * `spark-submit --conf spark.sql.extensions=...`. */
 class ExtensionsSpec extends SparkSpec {
   test("a fresh JVM with only the spark.sql.extensions config runs every native function in SQL") {
-    // Test/fork := true, so java.class.path IS the full test classpath
-    val javaBin = System.getProperty("java.home") + "/bin/java"
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar"
-    ).flatMap(m => Seq("--add-opens", s"$m=ALL-UNNAMED"))
-    val cmd = (Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx1g", "-cp", System.getProperty("java.class.path"),
-      "graft.ExtensionsProbe")).toArray
-    val pb = new ProcessBuilder(cmd: _*)
-    pb.redirectErrorStream(true)
-    val proc = pb.start()
-    val out = new String(proc.getInputStream.readAllBytes(),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val code = proc.waitFor()
+    val (code, out) = ForkedJvm.run("graft.ExtensionsProbe")
     assert(code == 0 && out.contains("PROBE_OK"),
       s"extensions probe failed (exit $code):\n${out.takeRight(4000)}")
   }

@@ -155,6 +155,18 @@ class PageRankSpec extends SparkSpec {
     }
   }
 
+  test("the distributed path leaves only the returned ranks persisted") {
+    val sc = spark.sparkContext
+    // sinks 3 and 5 make the dangling set a checkpoint of its own
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 1L), (4L, 1L), (2L, 5L)).toDF("src", "dst")
+    val persisted = sc.getPersistentRDDs.keySet
+    val r = PageRank.ranksAt(0L, edges, "src", "dst", None, iters = 3, scale = 1000000L,
+      danglingRedistribute = true)
+    assert(r.collect().length == 5)
+    // compared by id: the context cleaner may drop other suites' RDDs meanwhile
+    assert((sc.getPersistentRDDs.keys.toSet -- persisted).size <= 1)
+  }
+
   test("weighted: each edge carries r·w div Σw of its source, on both paths") {
     // 1→2 (3), 1→3 (1), 2→1 (1), 3→1 (2); n=3: init = 333333, base = 49999
     // round 1: s(1) = 333333 + 333333·2 div 2 = 666666

@@ -13,7 +13,7 @@ import graft.llm.{AllPairs, Dedup, NaiveBayes, RandomProjection, SetJoin, TextAn
   * growth-band summary (the round-9 verdict traced a stride fix that had
   * to be applied twice to exactly that duplication).
   *
-  * Usage: `runMain graft.tools.ScaleStress <family...> [--sf <dir>]`.
+  * Usage: `Test/runMain graft.tools.ScaleStress <family...> [--sf=<dir>]`.
   * Families: `similarity` (SCALESTRESS_r6 — LSH / SimHash / multiprobe /
   * all-pairs / ppjoin candidate growth + graph ops at 100×), `graph`
   * (r8 — common-neighbor shortlist, oriented wedges, dangling PageRank),
@@ -43,17 +43,6 @@ object ScaleStress {
   private[tools] val Reps = 100
 
   // ------------------------------------------------------ shared harness
-
-  private def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
 
   private[tools] final class Emitter {
     val out = new StringBuilder
@@ -124,7 +113,8 @@ object ScaleStress {
     require(unknown.isEmpty,
       s"unknown families: ${unknown.mkString(", ")} — " +
         s"known: ${families.keys.toSeq.sorted.mkString(", ")}")
-    val spark = session()
+    val spark = graft.Session.local(32)
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
     val em = new Emitter
     picked.foreach { name =>
       val (fam, defaultSf) = families(name)

@@ -67,10 +67,16 @@ def run_one(name, reps, sf_dir):
     # '{"metric"' marker onward, wherever it sits in the line
     line = next((l[l.index('{"metric"'):] for l in out.stdout.splitlines()
                  if '{"metric"' in l), None)
+    rec = json.loads(line) if line is not None else {}
+    # Bench lists a query that threw under "failed" and exits 1; a child
+    # that exits non-zero without a line failed before it could report
+    if name in rec.get("failed", []) or out.returncode != 0:
+        return {"error": "query failed in Bench", "exit_code": out.returncode,
+                "failed": rec.get("failed"),
+                "tail": out.stdout[-2000:] + out.stderr[-2000:]}
     if line is None:
         return {"error": "no bench JSON line",
                 "tail": out.stdout[-2000:] + out.stderr[-2000:]}
-    rec = json.loads(line)
     qs = dict(rec.get("queries", {}))
     qs.update(rec.get("stream_certs", {}))
     if name not in qs:
