@@ -1,20 +1,28 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the DuckDB compare, and failed.json
   * (`{name: first line of the error}`, `{}` when every query dumped). */
 object Verify {
   /** Dumps each query to `$outDir/<name>` and returns the ones that threw,
-    * name → first line of the error (the full message goes to stderr). */
+    * name → first line of the error (the full message goes to stderr).
+    * Each dump is written to the sibling `$outDir/.<name>.tmp` and renamed
+    * into place only once the write has finished, so a query that fails
+    * mid-write leaves neither directory behind. */
   private[graft] def dumpAll(spark: SparkSession, sfDir: String, outDir: String,
                              queries: Seq[(String, (SparkSession, String) => DataFrame)])
       : Seq[(String, String)] =
     queries.flatMap { case (name, fn) =>
+      val tmp = Paths.get(outDir, s".$name.tmp")
       try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val dst = Paths.get(outDir, name)
+        graft.io.Scratch.delete(dst)
+        Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
         None
       } catch { case e: Throwable =>
+        graft.io.Scratch.delete(tmp)
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         Some(name -> String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse(""))
       }

@@ -1,5 +1,6 @@
 package graft.io
 
+import java.io.{IOException, UncheckedIOException}
 import java.nio.file.{Files, Path, Paths}
 
 /** Session-scoped scratch space for ephemeral engine artifacts — format
@@ -43,11 +44,12 @@ object Scratch {
             Files.getLastModifiedTime(p).toMillis < cutoff)
           delete(p)
       }
-    } catch { case _: Throwable => () }
+    } catch { case _: IOException | _: UncheckedIOException => () }
 
-  private def delete(p: Path): Unit =
+  /** Best-effort recursive delete of `p`; a missing path is a no-op. */
+  private[graft] def delete(p: Path): Unit =
     try {
       import scala.jdk.CollectionConverters._
       Files.walk(p).iterator().asScala.toSeq.reverse.foreach(q => Files.deleteIfExists(q))
-    } catch { case _: Throwable => () }
+    } catch { case _: IOException | _: UncheckedIOException => () }
 }

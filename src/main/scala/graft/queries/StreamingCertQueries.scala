@@ -12,8 +12,8 @@ import graft.queries.StreamingQueries._
   * registry (attribution, covisitation, sketch maintenance, concurrency,
   * KMV, Holt / Holt-Winters, priority sampling, the NB gate), split out of
   * [[StreamingQueries]] (round-9 maintainability: no non-test source file
-  * over 2000 lines). Every cert here is one [[StreamingQueries.certTable]]
-  * call; that continuous-cert harness and the staging harness (`Stage`,
+  * over 2000 lines). Every cert here runs through the continuous
+  * [[StreamingQueries.live]] harness; that harness and the staging harness (`Stage`,
   * `stageOrderedBy`, `withCertStatePartitions`) live in
   * [[StreamingQueries]] with package-private visibility, so staged replay
   * corpora remain memoized ACROSS the streaming registries. Contract
@@ -45,7 +45,7 @@ object StreamingCertQueries {
         .otherwise(0L).as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsAttrOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    certTable(s, "q229_attr", Seq(srcDir -> ev.schema)) {
+    live("q229_attr")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.lastTouchAttribution(st.as[Streaming.KeyedObs],
         lookbackMs = 1800000L).toDF()
     }
@@ -78,7 +78,7 @@ object StreamingCertQueries {
       code.as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsCovisitOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val pairs = certTable(s, "q232_cov", Seq(srcDir -> ev.schema)) {
+    val pairs = live("q232_cov")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.covisitPairs(st.as[Streaming.KeyedObs],
         lookbackMs = 1800000L, k = 3).toDF()
     }
@@ -101,7 +101,10 @@ object StreamingCertQueries {
     * certifying the live-dashboard distinct-count shape: constant state
     * per key, order-insensitive updates (micro-batch boundaries can't
     * change the answer), estimates hash-exact against the SQL replay. */
-  val q234_stream_hll: Q = (s, d) => {
+  val q234_stream_hll: Q = q234Cert(live("q234_hll"))
+  /** The body of [[q234_stream_hll]] and of its recovery twin
+    * [[RecoveryCertQueries.q339_recovery_hll]]. */
+  private[queries] def q234Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val m = 256
     val bits = graft.llm.Hll.rhoBits(m)
@@ -113,7 +116,7 @@ object StreamingCertQueries {
       graft.llm.Hll.rhoCol(col("user_id"), m).cast("long").as("rho"))
     val srcDir = stageOrderedBy(ev, d, "eventsHllOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    certTable(s, "q234_hll", Seq(srcDir -> ev.schema)) {
+    run(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.hllSketch(st.as[Streaming.HllObs], m, bits).toDF()
     }
       .groupBy(col("week"))
@@ -159,7 +162,10 @@ object StreamingCertQueries {
     * batch sketch at every point in the stream (increments commute, so
     * batch boundaries are invisible). The exact Σc² comparison side is
     * computed in batch from the same table, as in q235. */
-  val q239_stream_cms: Q = (s, d) => {
+  val q239_stream_cms: Q = q239Cert(live("q239_cms"))
+  /** The body of [[q239_stream_cms]] and of its recovery twin
+    * [[RecoveryCertQueries.q340_recovery_cms]]. */
+  private[queries] def q239Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val depth = 3
     val width = 512
@@ -173,7 +179,7 @@ object StreamingCertQueries {
       .select(col("ib.i").as("i"), col("ib.b").as("b"), col("k"), col("lid"))
     val srcDir = stageOrderedBy(obs, d, "lineitemCmsOrdered4", 4,
       Seq(col("k"), col("lid"), col("i")))
-    val est = certTable(s, "q239_cms", Seq(srcDir -> obs.schema)) {
+    val est = run(s, Seq(srcDir -> obs.schema)) {
       case Seq(st) => Streaming.cmsRowSquares(st.as[Streaming.CmsObs], width).toDF()
     }
       .groupBy(col("i"))
@@ -212,7 +218,7 @@ object StreamingCertQueries {
         col("event_id")))
     val srcDir = stageOrderedBy(deltas, d, "eventsConcOrdered4", 4,
       Seq(col("tsm"), col("x"), col("event_id")))
-    val peaks = certTable(s, "q246_conc", Seq(srcDir -> deltas.schema)) {
+    val peaks = live("q246_conc")(s, Seq(srcDir -> deltas.schema)) {
       case Seq(st) => Streaming.concurrencyPeak(st.as[Streaming.KeyedObs]).toDF()
     }
     def decode(c: org.apache.spark.sql.Column) =
@@ -236,7 +242,10 @@ object StreamingCertQueries {
     * ([[graft.operators.Kmv]], q215/q259's sketch) exactly, which is what
     * the oracle replays. The streaming form of the sketch algebra family:
     * union-mergeable state, live cardinality readout per batch. */
-  val q264_stream_kmv: Q = (s, d) => {
+  val q264_stream_kmv: Q = q264Cert(live("q264_kmv"))
+  /** The body of [[q264_stream_kmv]] and of its recovery twin
+    * [[RecoveryCertQueries.q341_recovery_kmv]]. */
+  private[queries] def q264Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val k = 64
     val toks = Tables.documents(s, d)
@@ -246,7 +255,7 @@ object StreamingCertQueries {
         graft.operators.Kmv.hash32(col("tok")).as("h"))
     val srcDir = stageOrderedBy(toks, d, "docsKmvOrdered4", 4,
       Seq(col("doc_id"), col("h")))
-    certTable(s, "q264_kmv", Seq(srcDir -> toks.schema)) {
+    run(s, Seq(srcDir -> toks.schema)) {
       case Seq(st) => Streaming.kmvSketch(st.as[Streaming.KmvObs], k).toDF()
     }
       .groupBy(col("source"))
@@ -291,7 +300,7 @@ object StreamingCertQueries {
       round(col("value") * 10000).cast("long").as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsTsSignedOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    certTable(s, "q265_holt", Seq(srcDir -> ev.schema)) {
+    live("q265_holt")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.holtTrend(st.as[Streaming.KeyedObs]).toDF()
     }
       .select(col("user_id"), col("event_id"), col("x"), col("level"),
@@ -308,7 +317,10 @@ object StreamingCertQueries {
     * The top-k-by-total-order merge is commutative and idempotent, so
     * the final sample equals the batch window's under any batch split —
     * certified against q125's own oracle. */
-  val q268_stream_priority_sample: Q = (s, d) => {
+  val q268_stream_priority_sample: Q = q268Cert(live("q268_pri"))
+  /** The body of [[q268_stream_priority_sample]] and of its recovery twin
+    * [[RecoveryCertQueries.q344_recovery_priority]]. */
+  private[queries] def q268Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val c = Tables.customer(s, d).where(col("c_acctbal") > 0)
       .select(col("c_custkey").cast("long").as("c_custkey"),
@@ -319,7 +331,7 @@ object StreamingCertQueries {
       .select(col("c_nationkey"), col("c_custkey"), col("priority_fp"))
     val srcDir = stageOrderedBy(c, d, "customerPriOrdered4", 4,
       Seq(col("c_custkey")))
-    val samples = certTable(s, "q268_pri", Seq(srcDir -> c.schema)) {
+    val samples = run(s, Seq(srcDir -> c.schema)) {
       case Seq(st) => Streaming.priorityTopK(st.as[Streaming.PriObs], 3).toDF()
     }
     // last batch per nation via ONE window over the (bounded: k rows per
@@ -351,8 +363,8 @@ object StreamingCertQueries {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("lang"), col("text"))
     val (langs, priors, weights) = InfoQueries.nbModelLiteral(s, d)
-    val srcDir = stageDocRanges(docs, d, "docslang4")
-    certTable(s, "q278_nb", Seq(srcDir -> docs.schema)) {
+    val srcDir = stageOrderedBy(docs, d, "docslang4", 4, Seq(col("doc_id")))
+    live("q278_nb")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => graft.llm.NaiveBayes
         .classifyLiteral(st, "text", "doc_id", langs, priors, weights,
           passCols = Seq("lang"))
@@ -387,7 +399,10 @@ object StreamingCertQueries {
     * (repartitionByRange + mtime sequencing), so the streamed fold
     * replays the batch fold exactly — certified against q279's own
     * list_reduce oracle verbatim. */
-  val q284_stream_hw: Q = (s, d) => {
+  val q284_stream_hw: Q = q284Cert(live("q284_hw"))
+  /** The body of [[q284_stream_hw]] and of its recovery twin
+    * [[RecoveryCertQueries.q314_recovery_hw]]. */
+  private[queries] def q284Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val daily = Tables.events(s, d)
       .groupBy(col("event_type"),
@@ -395,7 +410,7 @@ object StreamingCertQueries {
       .agg(count(lit(1)).as("x"))
     val srcDir = stageOrderedBy(daily, d, "dailyTypeCounts4", 4,
       Seq(col("day"), col("event_type")))
-    certTable(s, "q284_hw", Seq(srcDir -> daily.schema)) {
+    run(s, Seq(srcDir -> daily.schema)) {
       case Seq(st) => Streaming.holtWintersStream(st.as[Streaming.HwObs], m = 7).toDF()
     }
       .select(col("event_type"), col("day"), col("x"), col("level"),
@@ -422,7 +437,7 @@ object StreamingCertQueries {
       expr("unix_millis(ts) div 604800000").as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsRetentionOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    val cells = certTable(s, "q295_ret", Seq(srcDir -> ev.schema)) {
+    val cells = live("q295_ret")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.cohortRetention(st.as[Streaming.KeyedObs]).toDF()
     }
     // cells are unique per user by construction, so count(*) per cell is
@@ -460,7 +475,7 @@ object StreamingCertQueries {
           .otherwise(2L).as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsFunnelOrdered4", 4,
       Seq(col("tsm"), col("x"), col("event_id")))
-    certTable(s, "q303_fun", Seq(srcDir -> ev.schema)) {
+    live("q303_fun")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) =>
         Streaming.funnelDepth(st.as[Streaming.KeyedObs], stages.size).toDF()
     }
@@ -482,7 +497,10 @@ object StreamingCertQueries {
     * the fold's Math.multiplyExact guard makes that a fail-fast, not a
     * wrap). Final readout per key = max(seen) batch; the derived
     * mean/variance ppm divisions replay exactly in HUGEINT. */
-  val q307_stream_moments: Q = (s, d) => {
+  val q307_stream_moments: Q = q307Cert(live("q307_mom"))
+  /** The body of [[q307_stream_moments]] and of its recovery twin
+    * [[RecoveryCertQueries.q315_recovery_moments]]. */
+  private[queries] def q307Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val ev = Tables.events(s, d).select(
       col("event_type"),
@@ -490,7 +508,7 @@ object StreamingCertQueries {
       col("event_id").cast("long").as("event_id"))
     val srcDir = stageOrderedBy(ev, d, "eventsMomOrdered4", 4,
       Seq(col("event_type"), col("v"), col("event_id")))
-    certTable(s, "q307_mom", Seq(srcDir -> ev.schema)) {
+    run(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.momentsSketch(st.as[Streaming.MomObs]).toDF()
     }
       .groupBy(col("event_type"))
@@ -541,7 +559,7 @@ object StreamingCertQueries {
       col("l_linenumber").cast("long").as("ln"))
     val srcDir = stageOrderedBy(li, d, "liKendallOrdered4", 4,
       Seq(col("ok"), col("ln")))
-    val grid = certTable(s, "q333_ken", Seq(srcDir -> li.schema), "complete") {
+    val grid = live("q333_ken", "complete")(s, Seq(srcDir -> li.schema)) {
       case Seq(st) => st
         .groupBy(col("rf"), col("a"), col("b"))
         .agg(count(lit(1)).as("c"))

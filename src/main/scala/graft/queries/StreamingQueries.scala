@@ -24,10 +24,13 @@ import graft.streaming.Streaming
   * streaming registries ([[StreamingQueries]], [[StreamingCertQueries]],
   * [[RecoveryCertQueries]]) share: replay staging ([[Stage]],
   * [[stageTimeOrdered]], [[stageOrderedBy]]), the single source-opening
-  * drain-to-end run ([[drain]]), and its two sinks — the continuous
-  * memory-sink [[certTable]] and the two-incarnation
-  * [[recoveringTableMulti]]. A cert supplies only its staged sources and
-  * its operator chain.
+  * drain-to-end run ([[drain]]), and one [[Harness]] type with two
+  * values — the continuous memory-sink [[live]] and the two-incarnation
+  * [[recovered]]. A cert supplies only its staged sources and its
+  * operator chain; a cert body written against a `Harness` runs under
+  * either, so each recovery cert in [[RecoveryCertQueries]] whose
+  * continuous twin lives here or in [[StreamingCertQueries]] shares that
+  * twin's body (`q208Cert`, `q65Cert`, …).
   *
   * This is a certification harness, not a production deployment shape: the
   * staging copy + memory sink exist so a bounded replay can be compared
@@ -231,8 +234,8 @@ object StreamingQueries {
     * micro-batch, oldest mtime first), build `plan` over the replays, and
     * drain it to the end of its input — `AvailableNow` from `ckpt`, under
     * [[withCertStatePartitions]] — into whatever `sink` configures. The
-    * continuous ([[certTable]]) and recovery ([[recoveringTableMulti]])
-    * harnesses differ only in the sink and in how many incarnations run. */
+    * two [[Harness]] values ([[live]], [[recovered]]) differ only in the
+    * sink and in how many incarnations run. */
   private[queries] def drain(s: SparkSession, srcs: Seq[(String, StructType)],
                              ckpt: String)
                             (plan: Seq[DataFrame] => DataFrame)
@@ -248,97 +251,85 @@ object StreamingQueries {
       try query.awaitTermination() finally query.stop()
     }
 
-  /** A continuous streaming certification: [[drain]] `plan` over the
-    * staged sources from a fresh checkpoint into a memory sink named
-    * `<tag>_<uuid>` (unique per call, so reps and concurrent certs never
-    * share a sink), and return the sink's table. `outputMode` is the
-    * memory sink's: `append` for emit-once operators, `complete` for
-    * aggregates whose final state is the result. */
-  private[queries] def certTable(s: SparkSession, tag: String,
-                                 srcs: Seq[(String, StructType)],
-                                 outputMode: String = "append")
-                                (plan: Seq[DataFrame] => DataFrame): DataFrame = {
-    val name = tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    drain(s, srcs, Stage.ckpt())(plan)(
-      _.queryName(name).format("memory").outputMode(outputMode))
-    s.table(name)
-  }
+  /** A certification harness: run a cert's operator chain over the
+    * replays of its staged `(dir, schema)` sources and return the chain's
+    * cumulative output. */
+  type Harness =
+    (SparkSession, Seq[(String, StructType)]) => (Seq[DataFrame] => DataFrame) => DataFrame
 
-  /** One recovery-cert SOURCE: a memoized staged dir, how many of its
-    * files incarnation 1 may see, and the read schema. */
-  private[queries] case class RecSrc(srcDir: String, firstN: Int, schema: StructType)
+  /** The continuous harness: [[drain]] the plan from a fresh checkpoint
+    * into a memory sink named `<tag>_<uuid>` (unique per call, so reps and
+    * concurrent certs never share a sink), and return the sink's table.
+    * `outputMode` is the memory sink's: `append` for emit-once operators,
+    * `complete` for aggregates whose final state is the result. */
+  private[queries] def live(tag: String, outputMode: String = "append"): Harness =
+    (s, srcs) => plan => {
+      val name = tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+      drain(s, srcs, Stage.ckpt())(plan)(
+        _.queryName(name).format("memory").outputMode(outputMode))
+      s.table(name)
+    }
 
-  /** Run a streaming cert as TWO query incarnations over its sources —
-    * the checkpoint-RECOVERY certification the continuous certs don't
-    * exercise. Each source's staged files are copied into a fresh per-
-    * invocation run dir in two halves: incarnation 1 sees only the first
-    * `firstN` files and runs to completion (`AvailableNow` commits every
-    * processed batch), is stopped, the remaining files are copied in, and
-    * a NEW query object starts from the SAME `checkpointLocation`. The
-    * restart recovers the stateful operators' keyed state from the state
-    * store and the file-source offset log guarantees incarnation 2 reads
-    * only the unseen files — no reprocessing, no gap. Both incarnations
-    * write the SAME parquet file sink (the memory sink used by the
-    * continuous certs deliberately refuses checkpoint recovery — the file
-    * sink's `_spark_metadata` commit log is the fault-tolerant,
-    * exactly-once production shape, and reading the dir back goes through
-    * that log, so only committed batches count). The certified property:
-    * the recovered run's cumulative output hash-matches the batch oracle,
-    * i.e. a mid-stream worker death + restart is output-invisible (the
-    * analog of the reference DAG's survive-by-rerun, `airflow.py:31`,
-    * done the durable-state way). A fresh run dir per invocation (rather
-    * than the memoized staged dir) keeps the staged corpus immutable and
-    * makes the mid-stream restart real on every run, including Bench
-    * reps. A stream-stream join has TWO sources, each with its own offset
-    * log in the one checkpoint.
+  /** The checkpoint-RECOVERY harness: run the cert as TWO query
+    * incarnations over its sources — the recovery the continuous certs
+    * don't exercise. Each source's staged files are copied into a fresh
+    * per-invocation run dir in two halves: incarnation 1 sees only the
+    * first `firstN` files of every source and runs to completion
+    * (`AvailableNow` commits every processed batch), is stopped, the
+    * remaining files are copied in, and a NEW query object starts from the
+    * SAME `checkpointLocation`. The restart recovers the stateful
+    * operators' keyed state from the state store and the file-source
+    * offset log guarantees incarnation 2 reads only the unseen files — no
+    * reprocessing, no gap. Both incarnations write the SAME parquet file
+    * sink (the memory sink used by [[live]] deliberately refuses
+    * checkpoint recovery — the file sink's `_spark_metadata` commit log is
+    * the fault-tolerant, exactly-once production shape, and reading the
+    * dir back goes through that log, so only committed batches count).
+    * The certified property: the recovered run's cumulative output
+    * hash-matches the batch oracle, i.e. a mid-stream worker death +
+    * restart is output-invisible (the analog of the reference DAG's
+    * survive-by-rerun, `airflow.py:31`, done the durable-state way). A
+    * fresh run dir per invocation (rather than the memoized staged dir)
+    * keeps the staged corpus immutable and makes the mid-stream restart
+    * real on every run, including Bench reps. A stream-stream join has
+    * TWO sources, each with its own offset log in the one checkpoint.
     *
     * The copies preserve the staged mtime sequence (the file source
     * replays oldest-first), so the cross-batch arrival order is exactly
     * the continuous cert's. */
-  private[queries] def recoveringTableMulti(s: SparkSession, tag: String,
-                                            srcs: Seq[RecSrc])
-                                           (plan: Seq[DataFrame] => DataFrame): DataFrame = {
-    val prepared = srcs.zipWithIndex.map { case (src, i) =>
-      val runDir = graft.io.Scratch.dir(s"${tag}_run${i}_") + "/src"
-      F.createDirectories(Paths.get(runDir))
-      val files = partFiles(src.srcDir)
-        .sortBy(p => (F.getLastModifiedTime(p).toMillis, p.getFileName.toString))
-      require(src.firstN > 0 && src.firstN < files.size,
-        s"recovery split must leave batches on both sides: " +
-          s"${src.firstN} of ${files.size}")
-      (src, runDir, files)
-    }
-    def copyIn(runDir: String, ps: Seq[Path]): Unit =
-      ps.foreach { p =>
-        val tgt = Paths.get(runDir).resolve(p.getFileName)
-        F.copy(p, tgt)
-        F.setLastModifiedTime(tgt, F.getLastModifiedTime(p))
+  private[queries] def recovered(tag: String, firstN: Int): Harness =
+    (s, srcs) => plan => {
+      val prepared = srcs.zipWithIndex.map { case ((srcDir, schema), i) =>
+        val runDir = graft.io.Scratch.dir(s"${tag}_run${i}_") + "/src"
+        F.createDirectories(Paths.get(runDir))
+        val files = partFiles(srcDir)
+          .sortBy(p => (F.getLastModifiedTime(p).toMillis, p.getFileName.toString))
+        require(firstN > 0 && firstN < files.size,
+          s"recovery split must leave batches on both sides: " +
+            s"$firstN of ${files.size}")
+        (runDir, schema, files)
       }
-    val ckpt = Stage.ckpt()
-    val outDir = graft.io.Scratch.dir(s"${tag}_out_") + "/out"
-    val runSrcs = prepared.map { case (src, runDir, _) => (runDir, src.schema) }
-    // drain stops each incarnation before returning, so the checkpoint is
-    // fully released before the next one opens it
-    def incarnation(): Unit =
-      drain(s, runSrcs, ckpt)(plan)(_.format("parquet").option("path", outDir))
-    prepared.foreach { case (src, runDir, files) =>
-      copyIn(runDir, files.take(src.firstN)) }
-    incarnation()
-    prepared.foreach { case (src, runDir, files) =>
-      copyIn(runDir, files.drop(src.firstN)) }
-    incarnation()
-    // the read goes through the sink's _spark_metadata commit log — only
-    // batches committed by either incarnation are visible
-    s.read.parquet(outDir)
-  }
-
-  /** Single-source [[recoveringTableMulti]]. */
-  private[queries] def recoveringTable(s: SparkSession, srcDir: String, firstN: Int,
-                                       tag: String)
-                                      (plan: DataFrame => DataFrame,
-                                       schema: StructType): DataFrame =
-    recoveringTableMulti(s, tag, Seq(RecSrc(srcDir, firstN, schema)))(
-      streams => plan(streams.head))
+      def copyIn(runDir: String, ps: Seq[Path]): Unit =
+        ps.foreach { p =>
+          val tgt = Paths.get(runDir).resolve(p.getFileName)
+          F.copy(p, tgt)
+          F.setLastModifiedTime(tgt, F.getLastModifiedTime(p))
+        }
+      val ckpt = Stage.ckpt()
+      val outDir = graft.io.Scratch.dir(s"${tag}_out_") + "/out"
+      val runSrcs = prepared.map { case (runDir, schema, _) => (runDir, schema) }
+      // drain stops each incarnation before returning, so the checkpoint is
+      // fully released before the next one opens it
+      def incarnation(): Unit =
+        drain(s, runSrcs, ckpt)(plan)(_.format("parquet").option("path", outDir))
+      prepared.foreach { case (runDir, _, files) => copyIn(runDir, files.take(firstN)) }
+      incarnation()
+      prepared.foreach { case (runDir, _, files) => copyIn(runDir, files.drop(firstN)) }
+      incarnation()
+      // the read goes through the sink's _spark_metadata commit log — only
+      // batches committed by either incarnation are visible
+      s.read.parquet(outDir)
+    }
 
   /** Streaming sessionization, oracle-checked.
     *
@@ -359,7 +350,10 @@ object StreamingQueries {
     * bit-identical to the oracle's decimal-exact sum (structure, counts,
     * and timestamps are, so those are what the hash covers).
     */
-  val q65_stream_sessions: Q = (s, d) => {
+  val q65_stream_sessions: Q = q65Cert(live("q65_sessions"))
+  /** The body of [[q65_stream_sessions]] and of its recovery twin
+    * [[RecoveryCertQueries.q322_recovery_sessions]]. */
+  private[queries] def q65Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
@@ -370,7 +364,7 @@ object StreamingQueries {
     // replay the SAME memoized dir.
     val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(4 * 60 * 60 * 1000L, 6 * 60 * 60 * 1000L))
-    val sessions = certTable(s, "q65_sessions", Seq(srcDir -> ev.schema)) {
+    val sessions = run(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.sessionize(st.as[Streaming.Event], GapMs).toDF()
     }
 
@@ -422,7 +416,7 @@ object StreamingQueries {
     val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(4 * 60 * 60 * 1000L, 6 * 60 * 60 * 1000L))
 
-    certTable(s, "q74_windows", Seq(srcDir -> ev.schema)) {
+    live("q74_windows")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.windowedEventCounts(st, "1 hour", "2 hours")
     }
       .where(col("event_type") =!= "sentinel")
@@ -456,7 +450,7 @@ object StreamingQueries {
     val (srcDir, lo, hi) = stageTimeOrdered(ev, d, "eventsDup", 4, dupEachFile = true)
     val sliceHours = ((hi - lo) / 4) / (60 * 60 * 1000L) + 2
 
-    certTable(s, "q75_dedup", Seq(srcDir -> ev.schema)) {
+    live("q75_dedup")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.dedupStream(st, Seq("event_id"), s"$sliceHours hours")
     }
       .select(col("event_id"), date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
@@ -483,7 +477,10 @@ object StreamingQueries {
     * watermark (which lags the max seen event time by the 1 h delay)
     * passes view_ts + 60 min — by then any matching click (≤ 60 min after
     * the view, files time-ordered) has already arrived and matched. */
-  val q80_stream_stream_join: Q = (s, d) => {
+  val q80_stream_stream_join: Q = q80Cert(live("q80_join"))
+  /** The body of [[q80_stream_stream_join]] and of its recovery twin
+    * [[RecoveryCertQueries.q323_recovery_join]]. */
+  private[queries] def q80Cert(run: Harness): Q = (s, d) => {
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     val views = ev.where(col("event_type") === "view")
@@ -491,7 +488,7 @@ object StreamingQueries {
     val (vDir, _, _) = stageTimeOrdered(views, d, "views", 4, dupEachFile = false)
     val (cDir, _, _) = stageTimeOrdered(clicks, d, "clicks", 4, dupEachFile = false)
 
-    certTable(s, "q80_join", Seq(vDir -> ev.schema, cDir -> ev.schema)) {
+    run(s, Seq(vDir -> ev.schema, cDir -> ev.schema)) {
       case Seq(v, c) =>
         Streaming.streamStreamJoin(
             v.select(col("event_id").as("view_id"), col("ts"), col("user_id")),
@@ -615,8 +612,9 @@ object StreamingQueries {
     val benchGrams = graft.llm.Curation.benchGramSet(
       docs, "text", col("doc_id") % 97 === 0, n = 4)
     // stage the corpus (minus bench docs) as 4 doc_id-range files
-    val srcDir = stageDocRanges(docs.where(col("doc_id") % 97 =!= 0), d, "docs4s")
-    certTable(s, "q117_contam", Seq(srcDir -> docs.schema)) {
+    val srcDir = stageOrderedBy(docs.where(col("doc_id") % 97 =!= 0), d, "docs4s", 4,
+      Seq(col("doc_id")))
+    live("q117_contam")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => graft.llm.Curation
         .contaminationFilter(st, "text", "doc_id", benchGrams, n = 4)
     }
@@ -639,12 +637,15 @@ object StreamingQueries {
     * can't know a bucket's final size; dropping mid-stream would diverge
     * from the batch cap semantics). The emitted pair set must hash-match
     * the batch LSH self-join exactly. */
-  val q123_stream_lsh: Q = (s, d) => {
+  val q123_stream_lsh: Q = q123Cert(live("q123_lsh"))
+  /** The body of [[q123_stream_lsh]] and of its recovery twin
+    * [[RecoveryCertQueries.q394_recovery_lsh]]. */
+  private[queries] def q123Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
-    val srcDir = stageDocRanges(docs, d, "docsAll4")
-    val pairs = certTable(s, "q123_lsh", Seq(srcDir -> docs.schema)) {
+    val srcDir = stageOrderedBy(docs, d, "docsAll4", 4, Seq(col("doc_id")))
+    val pairs = run(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => Streaming.lshCandidateStream(graft.llm.Dedup
         .bandBuckets(st, "text", "doc_id", LlmQueries.LshK, LlmQueries.LshBands)
         .as[graft.llm.BandBucket]).toDF()
@@ -678,8 +679,8 @@ object StreamingQueries {
       .select(col("doc_id"), col("text"))
     val weights: Map[Long, Long] = (0 until 256)
       .map(i => i.toLong -> ((i * 2654435761L) % 2000001L - 1000000L)).toMap
-    val srcDir = stageDocRanges(docs, d, "docsAll4")
-    certTable(s, "q139_quality", Seq(srcDir -> docs.schema)) {
+    val srcDir = stageOrderedBy(docs, d, "docsAll4", 4, Seq(col("doc_id")))
+    live("q139_quality")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => graft.llm.Curation
         .linearScoreLiteral(st, "text", "doc_id", weights, buckets = 256)
     }
@@ -707,7 +708,10 @@ object StreamingQueries {
     * corpus mutual near-dups (~563k pairs at sf0.1 — measured 33 s of
     * certification doing nothing but materializing them). The wide config
     * is both the scale-correct one and a 5000-pair-scale certification. */
-  val q146_stream_simhash: Q = (s, d) => {
+  val q146_stream_simhash: Q = q146Cert(live("q146_simhash"))
+  /** The body of [[q146_stream_simhash]] and of its recovery twin
+    * [[RecoveryCertQueries.q395_recovery_simhash]]. */
+  private[queries] def q146Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     // half-corpus: the synthetic documents are deliberately self-similar,
     // so a full-corpus exact-banding certification spends its whole run
@@ -717,8 +721,8 @@ object StreamingQueries {
     val docs = Tables.widen(Tables.documents(s, d))
       .where(col("doc_id") % 2 === 0)
       .select(col("doc_id"), col("text"))
-    val srcDir = stageDocRanges(docs, d, "docsHalf4")
-    val pairs = certTable(s, "q146_simhash", Seq(srcDir -> docs.schema)) {
+    val srcDir = stageOrderedBy(docs, d, "docsHalf4", 4, Seq(col("doc_id")))
+    val pairs = run(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => Streaming.lshCandidateStream(graft.llm.Dedup
         .simhashBandBuckets(st, "text", "doc_id", bits = 64, bandBits = 16)
         .as[graft.llm.BandBucket]).toDF()
@@ -765,24 +769,19 @@ object StreamingQueries {
        |FROM cand WHERE hamming <= 3 ORDER BY doc_a, doc_b""".stripMargin
   }
 
-  /** Stage a documents frame as 4 doc_id-range parquet files, memoized per
-    * (sfDir, key), WITHOUT mtime stamping: the files replay in whatever
-    * order their write mtimes give, which is enough for certs whose output
-    * does not depend on the cross-batch arrival order (stateless gates,
-    * commutative counts, order-free pairings). */
-  private[queries] def stageDocRanges(docs: DataFrame, d: String, key: String): String =
-    Stage.memo(d, key) { dir =>
-      docs.repartitionByRange(4, col("doc_id")).write.mode("append").parquet(dir)
-      (0L, 0L)
-    }._1
-
   /** Stage `df` as `parts` range-partitioned parquet files on `orderCols`
     * with strictly-increasing mtimes in range order, so a
     * `maxFilesPerTrigger=1` replay delivers micro-batches in that total
     * order — doc_id for the admission caps, (event time, id) for the
-    * stateful folds. Same mtime-stamping discipline as [[stageTimeOrdered]],
-    * minus the event-time bounds and sentinels, which an unwatermarked
-    * stateful op doesn't use. Memoized per (sfDir, key). */
+    * stateful folds. The doc_id-range certs whose output does not depend
+    * on the cross-batch order (stateless gates, commutative counts and
+    * sums, order-free pairings: q117, q123/q394, q139, q146/q395, q173,
+    * q188/q379, q198, q278, q387) stage here too; for them the stamped
+    * order only makes the replay reproducible, and a recovery twin shares
+    * its continuous cert's staged dir. Same mtime-stamping discipline as
+    * [[stageTimeOrdered]], minus the event-time bounds and sentinels,
+    * which an unwatermarked stateful op doesn't use. Memoized per
+    * (sfDir, key). */
   private[queries] def stageOrderedBy(df: DataFrame, d: String, key: String,
                              parts: Int,
                              orderCols: Seq[org.apache.spark.sql.Column]): String =
@@ -804,7 +803,7 @@ object StreamingQueries {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("source"))
     val srcDir = stageOrderedBy(docs, d, "docsIdOrdered4", 4, Seq(col("doc_id")))
-    certTable(s, "q152_cap", Seq(srcDir -> docs.schema)) {
+    live("q152_cap")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => Streaming.admitFirstK(
         st.select(col("source"), col("doc_id")).as[Streaming.SourceDoc], 30L).toDF()
     }
@@ -832,7 +831,7 @@ object StreamingQueries {
       .select(col("doc_id"), col("source"),
         size(graft.llm.TextAnalysis.tokens(col("text"))).cast("long").as("n_tokens"))
     val srcDir = stageOrderedBy(docs, d, "docsTokIdOrdered4", 4, Seq(col("doc_id")))
-    certTable(s, "q164_tb", Seq(srcDir -> docs.schema)) {
+    live("q164_tb")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => Streaming.admitTokenBudget(
         st.select(col("source"), col("doc_id"), col("n_tokens"))
           .as[Streaming.SourceTokDoc], 600L).toDF()
@@ -860,7 +859,10 @@ object StreamingQueries {
     * per-prefix `list_reduce` replay) row-for-row — certifying that the
     * streaming state hand-off is exactly the batch fold split at
     * arbitrary batch boundaries. */
-  val q208_stream_ewma: Q = (s, d) => {
+  val q208_stream_ewma: Q = q208Cert(live("q208_ewma"))
+  /** The body of [[q208_stream_ewma]] and of its recovery twin
+    * [[RecoveryCertQueries.q313_recovery_ewma]]. */
+  private[queries] def q208Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val ev = Tables.events(s, d).select(
       col("user_id").cast("long").as("user_id"),
@@ -869,7 +871,7 @@ object StreamingQueries {
       round(abs(col("value")) * 10000).cast("long").as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsTsOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    certTable(s, "q208_ewma", Seq(srcDir -> ev.schema)) {
+    run(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.ewmaHalfLife(st.as[Streaming.KeyedObs]).toDF()
     }
       .select(col("user_id"), col("event_id"), col("x"), col("ewma"))
@@ -897,7 +899,10 @@ object StreamingQueries {
     * hash-match q207's batch `list_reduce` oracle — certifying the
     * always-on drift-sentinel shape: no history rescan, |keys|-bounded
     * state, batch/stream agreement at every batch boundary. */
-  val q212_stream_cusum: Q = (s, d) => {
+  val q212_stream_cusum: Q = q212Cert(live("q212_cusum"))
+  /** The body of [[q212_stream_cusum]] and of its recovery twin
+    * [[RecoveryCertQueries.q377_recovery_cusum]]. */
+  private[queries] def q212Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val ev = Tables.events(s, d).select(
       col("user_id").cast("long").as("user_id"),
@@ -906,7 +911,7 @@ object StreamingQueries {
       round(abs(col("value")) * 10000).cast("long").as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsTsOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    certTable(s, "q212_cusum", Seq(srcDir -> ev.schema)) {
+    run(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) =>
         Streaming.cusumDrift(st.as[Streaming.KeyedObs], k = 5000L, h = 30000L).toDF()
     }
@@ -942,8 +947,8 @@ object StreamingQueries {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
     val vocab = graft.llm.TextAnalysis.vocabTopV(Tables.documents(s, d), "text", 20)
-    val srcDir = stageDocRanges(docs, d, "docsAll4")
-    certTable(s, "q173_oov", Seq(srcDir -> docs.schema)) {
+    val srcDir = stageOrderedBy(docs, d, "docsAll4", 4, Seq(col("doc_id")))
+    live("q173_oov")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => graft.llm.TextAnalysis
         .oovGateLiteral(st, "text", "doc_id", vocab, 320000L)
     }
@@ -981,7 +986,7 @@ object StreamingQueries {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s5", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(5 * 60 * 60 * 1000L, 7 * 60 * 60 * 1000L))
-    certTable(s, "q178_sliding", Seq(srcDir -> ev.schema)) {
+    live("q178_sliding")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.slidingEventCounts(st, "2 hours", "1 hour", "2 hours")
     }
       .where(col("event_type") =!= "sentinel")
@@ -1010,8 +1015,8 @@ object StreamingQueries {
   val q188_stream_drift: Q = (s, d) => {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("source"))
-    val srcDir = stageDocRanges(docs, d, "docsrc4")
-    val hist = certTable(s, "q188_drift", Seq(srcDir -> docs.schema), "complete") {
+    val srcDir = stageOrderedBy(docs, d, "docsrc4", 4, Seq(col("doc_id")))
+    val hist = live("q188_drift", "complete")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => st
         .select(expr("doc_id div 125").as("tick"), col("source").as("value"))
         .groupBy(col("tick"), col("value"))
@@ -1060,7 +1065,7 @@ object StreamingQueries {
     val (srcDir, _, _) = stageLateReplay(ev, d, "events3late", 3,
       col("event_id") % 7 === 0,
       sentinelOffsetsMs = Seq(50 * 60 * 60 * 1000L, 54 * 60 * 60 * 1000L))
-    certTable(s, "q196_late", Seq(srcDir -> ev.schema)) {
+    live("q196_late")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.windowedEventCounts(st, "1 hour", "48 hours")
     }
       .where(col("event_type") =!= "sentinel")
@@ -1093,11 +1098,11 @@ object StreamingQueries {
   val q198_stream_static_join: Q = (s, d) => {
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("source"))
-    val srcDir = stageDocRanges(docs, d, "docsrc4")
+    val srcDir = stageOrderedBy(docs, d, "docsrc4", 4, Seq(col("doc_id")))
     val dim = Tables.documents(s, d)
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_src"), sum(col("n_chars")).as("src_chars"))
-    certTable(s, "q198_ssj", Seq(srcDir -> docs.schema)) {
+    live("q198_ssj")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => st
         .join(broadcast(dim), Seq("source"))
         .select(col("doc_id"), col("source"), col("n_src"), col("src_chars"))
@@ -1118,7 +1123,10 @@ object StreamingQueries {
     * q210's batch oracle — certifying that an order-sensitive state
     * MACHINE (not just a numeric recurrence) splits correctly at
     * arbitrary batch boundaries. */
-  val q218_stream_dfa: Q = (s, d) => {
+  val q218_stream_dfa: Q = q218Cert(live("q218_dfa"))
+  /** The body of [[q218_stream_dfa]] and of its recovery twin
+    * [[RecoveryCertQueries.q378_recovery_dfa]]. */
+  private[queries] def q218Cert(run: Harness): Q = (s, d) => {
     import s.implicits._
     val ev = Tables.events(s, d).select(
       col("user_id").cast("long").as("user_id"),
@@ -1130,7 +1138,7 @@ object StreamingQueries {
         .otherwise(0L).as("x"))
     val srcDir = stageOrderedBy(ev, d, "eventsTsCodeOrdered4", 4,
       Seq(col("tsm"), col("event_id")))
-    certTable(s, "q218_dfa", Seq(srcDir -> ev.schema)) {
+    run(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.patternDfa(st.as[Streaming.KeyedObs]).toDF()
     }
       .select(col("user_id"), col("event_id"), col("x"), col("dfa"))

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -19,8 +19,37 @@ case class SessionState(start: Long, end: Long, n: Long, total: Double)
   * Every transform takes a (possibly streaming) events frame with the
   * testdata schema `(event_id, ts, user_id, event_type, value, …)` so the
   * same code runs over `readStream` sources and over batch frames in tests.
+  *
+  * 17 keyed stateful operators share one [[fold]]. Seven keep their own
+  * `flatMapGroupsWithState` because their shape differs: [[sessionize]] closes sessions on an
+  * event-time timeout; [[lastTouchAttribution]] and [[vocabRegister]] may
+  * leave a key's state absent after a batch; [[ewmaHalfLife]],
+  * [[holtTrend]], [[holtWintersStream]] and [[cohortRetention]] seed
+  * their state from a key's first row rather than from a constant.
   */
 object Streaming {
+
+  /** The keyed state fold under the stateful operators: group `ds` by
+    * `key`, and for each key in each micro-batch hand `step` the key, the
+    * batch's rows and the carried state (`init` when the key has none
+    * yet); store the state `step` returns and emit its rows. Append mode,
+    * no timeout, and the state is updated after every batch.
+    *
+    * `init` is by-name, so every key starts from a value of its own:
+    * [[hllSketch]] and [[cmsRowSquares]] mutate an array state in place,
+    * and one shared init would alias that array across the keys of a
+    * task. `step` returns its final state with its output already
+    * materialised (a buffer, not a lazy iterator over the rows): the
+    * state is stored as soon as `step` returns. */
+  private def fold[T, K: Encoder, S: Encoder, U: Encoder](ds: Dataset[T])(key: T => K)(
+      init: => S)(step: (K, Iterator[T], S) => (S, Iterator[U])): Dataset[U] =
+    ds.groupByKey(key).flatMapGroupsWithState[S, U](
+      OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+      (k: K, it: Iterator[T], state: GroupState[S]) =>
+        val (next, out) = step(k, it, state.getOption.getOrElse(init))
+        state.update(next)
+        out
+    }
 
   /** Watermarked tumbling-window counts per event type — the streaming
     * analog of the batch query q17. State is bounded by the watermark:
@@ -198,35 +227,30 @@ object Streaming {
   def lshCandidateStream(arrivals: Dataset[graft.llm.BandBucket],
                          maxBucket: Int = 1000): Dataset[CandidatePair] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(a => (a.band, a.bkey))
-      .flatMapGroupsWithState[Seq[Long], CandidatePair](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (Int, String), it: Iterator[graft.llm.BandBucket], state: GroupState[Seq[Long]]) =>
-          val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
-          var seen = state.getOption.getOrElse(Seq.empty)
-          val members = scala.collection.mutable.HashSet.from(seen)
-          // sorted for deterministic per-batch emission order; the emitted
-          // SET is order-independent regardless
-          it.map(_.doc_id).toSeq.distinct.sorted.foreach { id =>
-            if (!members(id)) {
-              // pair only while the bucket is within the batch cap — a
-              // bucket that ends over maxBucket is dropped wholesale by
-              // the downstream post-filter, so pairs past the cap can
-              // never appear in the final result either way
-              if (seen.size < maxBucket) {
-                seen.foreach { prev =>
-                  out += CandidatePair(key._1, key._2,
-                    math.min(prev, id), math.max(prev, id))
-                }
-              }
-              seen = seen :+ id
-              members += id
+    fold(arrivals)(a => (a.band, a.bkey))(Seq.empty[Long]) { (key, it, seen0) =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[CandidatePair]
+      var seen = seen0
+      val members = scala.collection.mutable.HashSet.from(seen)
+      // sorted for deterministic per-batch emission order; the emitted
+      // SET is order-independent regardless
+      it.map(_.doc_id).toSeq.distinct.sorted.foreach { id =>
+        if (!members(id)) {
+          // pair only while the bucket is within the batch cap — a
+          // bucket that ends over maxBucket is dropped wholesale by
+          // the downstream post-filter, so pairs past the cap can
+          // never appear in the final result either way
+          if (seen.size < maxBucket) {
+            seen.foreach { prev =>
+              out += CandidatePair(key._1, key._2,
+                math.min(prev, id), math.max(prev, id))
             }
           }
-          state.update(seen)
-          out.iterator
+          seen = seen :+ id
+          members += id
+        }
       }
+      (seen, out.iterator)
+    }
   }
 
   case class SourceDoc(source: String, doc_id: Long)
@@ -250,22 +274,17 @@ object Streaming {
   def admitFirstK(arrivals: Dataset[SourceDoc], k: Long): Dataset[AdmittedDoc] = {
     require(k >= 1, s"cap must be >= 1 (got $k)")
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Long, AdmittedDoc](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (source: String, it: Iterator[SourceDoc], state: GroupState[Long]) =>
-          var admitted = state.getOption.getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer.empty[AdmittedDoc]
-          it.map(_.doc_id).toSeq.sorted.foreach { id =>
-            if (admitted < k) {
-              admitted += 1
-              out += AdmittedDoc(source, id, admitted)
-            }
-          }
-          state.update(admitted)
-          out.iterator
+    fold(arrivals)(_.source)(0L) { (source, it, admitted0) =>
+      var admitted = admitted0
+      val out = scala.collection.mutable.ArrayBuffer.empty[AdmittedDoc]
+      it.map(_.doc_id).toSeq.sorted.foreach { id =>
+        if (admitted < k) {
+          admitted += 1
+          out += AdmittedDoc(source, id, admitted)
+        }
       }
+      (admitted, out.iterator)
+    }
   }
 
   case class KeyedObs(user_id: Long, tsm: Long, event_id: Long, x: Long)
@@ -406,20 +425,15 @@ object Streaming {
     * data-quality sentinel shape. */
   def cusumDrift(arrivals: Dataset[KeyedObs], k: Long, h: Long): Dataset[CusumOut] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, CusumOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: Long, it: Iterator[KeyedObs], state: GroupState[Long]) =>
-          var s = state.getOption.getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer.empty[CusumOut]
-          it.toSeq.sortBy(o => (o.tsm, o.event_id)).foreach { o =>
-            s = math.max(0L, s + o.x - k)
-            out += CusumOut(userId, o.event_id, o.x, s, s > h)
-          }
-          state.update(s)
-          out.iterator
+    fold(arrivals)(_.user_id)(0L) { (userId, it, s0) =>
+      var s = s0
+      val out = scala.collection.mutable.ArrayBuffer.empty[CusumOut]
+      it.toSeq.sortBy(o => (o.tsm, o.event_id)).foreach { o =>
+        s = math.max(0L, s + o.x - k)
+        out += CusumOut(userId, o.event_id, o.x, s, s > h)
       }
+      (s, out.iterator)
+    }
   }
 
   case class DfaOut(user_id: Long, event_id: Long, x: Long, dfa: Long)
@@ -434,20 +448,15 @@ object Streaming {
     * state. */
   def patternDfa(arrivals: Dataset[KeyedObs]): Dataset[DfaOut] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Long, DfaOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: Long, it: Iterator[KeyedObs], state: GroupState[Long]) =>
-          var s = state.getOption.getOrElse(0L)
-          val out = scala.collection.mutable.ArrayBuffer.empty[DfaOut]
-          it.toSeq.sortBy(o => (o.tsm, o.event_id)).foreach { o =>
-            s = graft.operators.PatternDfa.step(s, o.x)
-            out += DfaOut(userId, o.event_id, o.x, s)
-          }
-          state.update(s)
-          out.iterator
+    fold(arrivals)(_.user_id)(0L) { (userId, it, s0) =>
+      var s = s0
+      val out = scala.collection.mutable.ArrayBuffer.empty[DfaOut]
+      it.toSeq.sortBy(o => (o.tsm, o.event_id)).foreach { o =>
+        s = graft.operators.PatternDfa.step(s, o.x)
+        out += DfaOut(userId, o.event_id, o.x, s)
       }
+      (s, out.iterator)
+    }
   }
 
   case class SourceTokDoc(source: String, doc_id: Long, n_tokens: Long)
@@ -472,30 +481,25 @@ object Streaming {
                        budget: Long): Dataset[AdmittedTokDoc] = {
     require(budget >= 1, s"budget must be >= 1 (got $budget)")
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Long, AdmittedTokDoc](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (source: String, it: Iterator[SourceTokDoc], state: GroupState[Long]) =>
-          var cum = state.getOption.getOrElse(0L)
-          var closed = cum > budget
-          val out = scala.collection.mutable.ArrayBuffer.empty[AdmittedTokDoc]
-          it.toSeq.sortBy(d => (d.doc_id, d.n_tokens)).foreach { d =>
-            if (!closed) {
-              if (cum + d.n_tokens <= budget) {
-                cum += d.n_tokens
-                out += AdmittedTokDoc(source, d.doc_id, cum)
-              } else {
-                // overflow doc closes the source for good (prefix rule);
-                // saturate the state so replays stay closed
-                closed = true
-                cum = budget + 1
-              }
-            }
+    fold(arrivals)(_.source)(0L) { (source, it, cum0) =>
+      var cum = cum0
+      var closed = cum > budget
+      val out = scala.collection.mutable.ArrayBuffer.empty[AdmittedTokDoc]
+      it.toSeq.sortBy(d => (d.doc_id, d.n_tokens)).foreach { d =>
+        if (!closed) {
+          if (cum + d.n_tokens <= budget) {
+            cum += d.n_tokens
+            out += AdmittedTokDoc(source, d.doc_id, cum)
+          } else {
+            // overflow doc closes the source for good (prefix rule);
+            // saturate the state so replays stay closed
+            closed = true
+            cum = budget + 1
           }
-          state.update(cum)
-          out.iterator
+        }
       }
+      (cum, out.iterator)
+    }
   }
 
   case class AttributionOut(user_id: Long, event_id: Long,
@@ -605,23 +609,17 @@ object Streaming {
                    k: Int): Dataset[CovisitOut] = {
     require(k >= 1 && k <= 16, s"ring size k must be in [1,16] (got $k)")
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[Seq[(Long, Long, Long)], CovisitOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (_: Long, it: Iterator[KeyedObs],
-         state: GroupState[Seq[(Long, Long, Long)]]) =>
-          var ring = state.getOption.getOrElse(Seq.empty)
-          val out = scala.collection.mutable.ArrayBuffer.empty[CovisitOut]
-          it.toSeq.sortBy(o => (o.tsm, o.event_id)).foreach { o =>
-            ring.foreach { case (ptsm, _, pcode) =>
-              if (o.tsm <= ptsm + lookbackMs) out += CovisitOut(pcode, o.x)
-            }
-            ring = (ring :+ ((o.tsm, o.event_id, o.x))).takeRight(k)
-          }
-          state.update(ring)
-          out.iterator
+    fold(arrivals)(_.user_id)(Seq.empty[(Long, Long, Long)]) { (_, it, ring0) =>
+      var ring = ring0
+      val out = scala.collection.mutable.ArrayBuffer.empty[CovisitOut]
+      it.toSeq.sortBy(o => (o.tsm, o.event_id)).foreach { o =>
+        ring.foreach { case (ptsm, _, pcode) =>
+          if (o.tsm <= ptsm + lookbackMs) out += CovisitOut(pcode, o.x)
+        }
+        ring = (ring :+ ((o.tsm, o.event_id, o.x))).takeRight(k)
       }
+      (ring, out.iterator)
+    }
   }
 
   case class HllObs(week: Long, j: Long, rho: Long)
@@ -642,31 +640,23 @@ object Streaming {
                 bits: Int): Dataset[HllBatchOut] = {
     require(m > 0 && (m & (m - 1)) == 0, s"m must be a power of two (got $m)")
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.week)
-      .flatMapGroupsWithState[(Array[Byte], Long), HllBatchOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (week: Long, it: Iterator[HllObs],
-         state: GroupState[(Array[Byte], Long)]) =>
-          val (regs, seen0) = state.getOption
-            .getOrElse((new Array[Byte](m), 0L))
-          var seen = seen0
-          it.foreach { o => // register max is order-insensitive: no sort
-            val j = o.j.toInt
-            if (o.rho > regs(j)) regs(j) = o.rho.toByte
-            seen += 1L
-          }
-          var s = 0L
-          var zeros = 0L
-          var i = 0
-          while (i < m) {
-            s += 1L << (bits + 1 - regs(i))
-            if (regs(i) == 0) zeros += 1L
-            i += 1
-          }
-          state.update((regs, seen))
-          Iterator.single(HllBatchOut(week, seen, s, zeros))
+    fold(arrivals)(_.week)((new Array[Byte](m), 0L)) { case (week, it, (regs, seen0)) =>
+      var seen = seen0
+      it.foreach { o => // register max is order-insensitive: no sort
+        val j = o.j.toInt
+        if (o.rho > regs(j)) regs(j) = o.rho.toByte
+        seen += 1L
       }
+      var s = 0L
+      var zeros = 0L
+      var i = 0
+      while (i < m) {
+        s += 1L << (bits + 1 - regs(i))
+        if (regs(i) == 0) zeros += 1L
+        i += 1
+      }
+      ((regs, seen), Iterator.single(HllBatchOut(week, seen, s, zeros)))
+    }
   }
 
   case class PriObs(c_nationkey: Long, c_custkey: Long, priority_fp: Long)
@@ -685,25 +675,19 @@ object Streaming {
   def priorityTopK(arrivals: Dataset[PriObs], k: Int): Dataset[PriOut] = {
     require(k >= 1, s"k must be >= 1 (got $k)")
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.c_nationkey)
-      .flatMapGroupsWithState[(Array[Long], Array[Long], Long), PriOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (nation: Long, it: Iterator[PriObs],
-         state: GroupState[(Array[Long], Array[Long], Long)]) =>
-          val (pri0, ids0, seen0) = state.getOption
-            .getOrElse((Array.empty[Long], Array.empty[Long], 0L))
-          var seen = seen0
-          val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
-          var i = 0
-          while (i < pri0.length) { buf += ((pri0(i), ids0(i))); i += 1 }
-          it.foreach { o => seen += 1L; buf += ((o.priority_fp, o.c_custkey)) }
-          val top = buf.sortBy { case (p, id) => (-p, id) }.take(k)
-          state.update((top.map(_._1).toArray, top.map(_._2).toArray, seen))
+    fold(arrivals)(_.c_nationkey)((Array.empty[Long], Array.empty[Long], 0L)) {
+      case (nation, it, (pri0, ids0, seen0)) =>
+        var seen = seen0
+        val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
+        var i = 0
+        while (i < pri0.length) { buf += ((pri0(i), ids0(i))); i += 1 }
+        it.foreach { o => seen += 1L; buf += ((o.priority_fp, o.c_custkey)) }
+        val top = buf.sortBy { case (p, id) => (-p, id) }.take(k)
+        ((top.map(_._1).toArray, top.map(_._2).toArray, seen),
           top.iterator.zipWithIndex.map { case ((p, id), j) =>
             PriOut(nation, seen, (j + 1).toLong, id, p)
-          }
-      }
+          })
+    }
   }
 
   case class KmvObs(source: String, h: Long)
@@ -722,28 +706,21 @@ object Streaming {
   def kmvSketch(arrivals: Dataset[KmvObs], k: Int): Dataset[KmvBatchOut] = {
     require(k >= 2, s"k must be >= 2 (got $k)")
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[(Array[Long], Long), KmvBatchOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (source: String, it: Iterator[KmvObs],
-         state: GroupState[(Array[Long], Long)]) =>
-          val (st, seen0) = state.getOption.getOrElse((Array.empty[Long], 0L))
-          val buf = scala.collection.mutable.TreeSet.empty[Long]
-          buf ++= st
-          var seen = seen0
-          it.foreach { o =>
-            seen += 1L
-            if (!buf.contains(o.h)) {
-              if (buf.size < k) buf += o.h
-              else if (o.h < buf.last) { buf -= buf.last; buf += o.h }
-            }
-          }
-          val arr = buf.toArray // ascending
-          state.update((arr, seen))
-          Iterator.single(KmvBatchOut(source, seen, arr.length.toLong,
-            if (arr.isEmpty) 0L else arr.last))
+    fold(arrivals)(_.source)((Array.empty[Long], 0L)) { case (source, it, (st, seen0)) =>
+      val buf = scala.collection.mutable.TreeSet.empty[Long]
+      buf ++= st
+      var seen = seen0
+      it.foreach { o =>
+        seen += 1L
+        if (!buf.contains(o.h)) {
+          if (buf.size < k) buf += o.h
+          else if (o.h < buf.last) { buf -= buf.last; buf += o.h }
+        }
       }
+      val arr = buf.toArray // ascending
+      ((arr, seen), Iterator.single(KmvBatchOut(source, seen, arr.length.toLong,
+        if (arr.isEmpty) 0L else arr.last)))
+    }
   }
 
   case class CmsObs(i: Long, b: Long)
@@ -762,22 +739,14 @@ object Streaming {
   def cmsRowSquares(arrivals: Dataset[CmsObs], width: Int): Dataset[CmsBatchOut] = {
     require(width > 0, s"width must be positive (got $width)")
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.i)
-      .flatMapGroupsWithState[(Array[Long], Long), CmsBatchOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (row: Long, it: Iterator[CmsObs],
-         state: GroupState[(Array[Long], Long)]) =>
-          val (counters, seen0) = state.getOption
-            .getOrElse((new Array[Long](width), 0L))
-          var seen = seen0
-          it.foreach { o => counters(o.b.toInt) += 1L; seen += 1L }
-          var e = 0L
-          var j = 0
-          while (j < width) { e += counters(j) * counters(j); j += 1 }
-          state.update((counters, seen))
-          Iterator.single(CmsBatchOut(row, seen, e))
-      }
+    fold(arrivals)(_.i)((new Array[Long](width), 0L)) { case (row, it, (counters, seen0)) =>
+      var seen = seen0
+      it.foreach { o => counters(o.b.toInt) += 1L; seen += 1L }
+      var e = 0L
+      var j = 0
+      while (j < width) { e += counters(j) * counters(j); j += 1 }
+      ((counters, seen), Iterator.single(CmsBatchOut(row, seen, e)))
+    }
   }
 
   case class CellObs(rf: String, a: Long, b: Long)
@@ -795,18 +764,11 @@ object Streaming {
     * whole sufficient statistic for τ. */
   def gridCount(arrivals: Dataset[CellObs]): Dataset[CellBatchOut] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(o => (o.rf, o.a, o.b))
-      .flatMapGroupsWithState[(Long, Long), CellBatchOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (String, Long, Long), it: Iterator[CellObs],
-         state: GroupState[(Long, Long)]) =>
-          var (seen, c) = state.getOption.getOrElse((0L, 0L))
-          it.foreach(_ => c += 1L)
-          seen += 1L
-          state.update((seen, c))
-          Iterator.single(CellBatchOut(key._1, key._2, key._3, seen, c))
-      }
+    fold(arrivals)(o => (o.rf, o.a, o.b))((0L, 0L)) { case (key, it, (seen0, c0)) =>
+      val seen = seen0 + 1L
+      val c = c0 + it.size
+      ((seen, c), Iterator.single(CellBatchOut(key._1, key._2, key._3, seen, c)))
+    }
   }
 
   case class MomObs(event_type: String, v: Long)
@@ -826,23 +788,17 @@ object Streaming {
     * past 10⁹ rows per key). */
   def momentsSketch(arrivals: Dataset[MomObs]): Dataset[MomBatchOut] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[(Long, Long, Long, Long), MomBatchOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: String, it: Iterator[MomObs],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          var (n, s1, s2, s3) = state.getOption.getOrElse((0L, 0L, 0L, 0L))
-          it.foreach { o =>
-            val v2 = Math.multiplyExact(o.v, o.v)
-            n += 1L
-            s1 = Math.addExact(s1, o.v)
-            s2 = Math.addExact(s2, v2)
-            s3 = Math.addExact(s3, Math.multiplyExact(v2, o.v))
-          }
-          state.update((n, s1, s2, s3))
-          Iterator.single(MomBatchOut(key, n, s1, s2, s3))
+    fold(arrivals)(_.event_type)((0L, 0L, 0L, 0L)) { (key, it, st) =>
+      var (n, s1, s2, s3) = st
+      it.foreach { o =>
+        val v2 = Math.multiplyExact(o.v, o.v)
+        n += 1L
+        s1 = Math.addExact(s1, o.v)
+        s2 = Math.addExact(s2, v2)
+        s3 = Math.addExact(s3, Math.multiplyExact(v2, o.v))
       }
+      ((n, s1, s2, s3), Iterator.single(MomBatchOut(key, n, s1, s2, s3)))
+    }
   }
 
   case class CellSumObs(rf: String, a: Long, v: Long)
@@ -857,18 +813,11 @@ object Streaming {
     * so a value scale that would wrap the register fails fast. */
   def cellSum(arrivals: Dataset[CellSumObs]): Dataset[CellSumOut] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(o => (o.rf, o.a))
-      .flatMapGroupsWithState[(Long, Long), CellSumOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (String, Long), it: Iterator[CellSumObs],
-         state: GroupState[(Long, Long)]) =>
-          var (seen, s) = state.getOption.getOrElse((0L, 0L))
-          it.foreach { o => s = Math.addExact(s, o.v) }
-          seen += 1L
-          state.update((seen, s))
-          Iterator.single(CellSumOut(key._1, key._2, seen, s))
-      }
+    fold(arrivals)(o => (o.rf, o.a))((0L, 0L)) { case (key, it, (seen0, s0)) =>
+      val seen = seen0 + 1L
+      val s = it.foldLeft(s0)((acc, o) => Math.addExact(acc, o.v))
+      ((seen, s), Iterator.single(CellSumOut(key._1, key._2, seen, s)))
+    }
   }
 
   case class HdrObs(g: String, b: Long, v: Long)
@@ -887,23 +836,17 @@ object Streaming {
     * keeping the state update pure compare-and-count. */
   def hdrSketch(arrivals: Dataset[HdrObs]): Dataset[HdrBatchOut] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(o => (o.g, o.b))
-      .flatMapGroupsWithState[(Long, Long, Long, Long), HdrBatchOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: (String, Long), it: Iterator[HdrObs],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          var (seen, c, lo, hi) = state.getOption
-            .getOrElse((0L, 0L, Long.MaxValue, Long.MinValue))
-          it.foreach { o => // min/max/count are order-insensitive: no sort
-            c += 1L
-            if (o.v < lo) lo = o.v
-            if (o.v > hi) hi = o.v
-          }
-          seen += 1L
-          state.update((seen, c, lo, hi))
-          Iterator.single(HdrBatchOut(key._1, key._2, seen, c, lo, hi))
-      }
+    fold(arrivals)(o => (o.g, o.b))((0L, 0L, Long.MaxValue, Long.MinValue)) {
+      (key, it, st) =>
+        var (seen, c, lo, hi) = st
+        it.foreach { o => // min/max/count are order-insensitive: no sort
+          c += 1L
+          if (o.v < lo) lo = o.v
+          if (o.v > hi) hi = o.v
+        }
+        seen += 1L
+        ((seen, c, lo, hi), Iterator.single(HdrBatchOut(key._1, key._2, seen, c, lo, hi)))
+    }
   }
 
   case class ConcBatchOut(key: Long, seen: Long, cur: Long, peak: Long,
@@ -922,22 +865,15 @@ object Streaming {
     * oracle. */
   def concurrencyPeak(arrivals: Dataset[KeyedObs]): Dataset[ConcBatchOut] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long, Long, Long), ConcBatchOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (key: Long, it: Iterator[KeyedObs],
-         state: GroupState[(Long, Long, Long, Long)]) =>
-          var (cur, peak, tPeak, seen) = state.getOption
-            .getOrElse((0L, Long.MinValue, 0L, 0L))
-          it.toSeq.sortBy(o => (o.tsm, o.x, o.event_id)).foreach { o =>
-            cur += o.x
-            if (cur > peak) { peak = cur; tPeak = o.tsm }
-            seen += 1L
-          }
-          state.update((cur, peak, tPeak, seen))
-          Iterator.single(ConcBatchOut(key, seen, cur, peak, tPeak))
+    fold(arrivals)(_.user_id)((0L, Long.MinValue, 0L, 0L)) { (key, it, st) =>
+      var (cur, peak, tPeak, seen) = st
+      it.toSeq.sortBy(o => (o.tsm, o.x, o.event_id)).foreach { o =>
+        cur += o.x
+        if (cur > peak) { peak = cur; tPeak = o.tsm }
+        seen += 1L
       }
+      ((cur, peak, tPeak, seen), Iterator.single(ConcBatchOut(key, seen, cur, peak, tPeak)))
+    }
   }
 
   case class FunnelOut(user_id: Long, funnel_depth: Long)
@@ -958,18 +894,13 @@ object Streaming {
   def funnelDepth(arrivals: Dataset[KeyedObs], nStages: Int): Dataset[FunnelOut] = {
     require(nStages >= 1, s"nStages must be >= 1 (got $nStages)")
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[(Long, Long), FunnelOut](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (userId: Long, it: Iterator[KeyedObs], state: GroupState[(Long, Long)]) =>
-          var (d, t) = state.getOption.getOrElse((0L, Long.MinValue))
-          it.toSeq.sortBy(o => (o.tsm, o.x, o.event_id)).foreach { o =>
-            if (d < nStages && o.x == d && o.tsm > t) { d += 1L; t = o.tsm }
-          }
-          state.update((d, t))
-          Iterator.single(FunnelOut(userId, d))
+    fold(arrivals)(_.user_id)((0L, Long.MinValue)) { (userId, it, st) =>
+      var (d, t) = st
+      it.toSeq.sortBy(o => (o.tsm, o.x, o.event_id)).foreach { o =>
+        if (d < nStages && o.x == d && o.tsm > t) { d += 1L; t = o.tsm }
       }
+      ((d, t), Iterator.single(FunnelOut(userId, d)))
+    }
   }
 
   case class TokDoc(tok: String, doc_id: Long)
@@ -1021,18 +952,13 @@ object Streaming {
     * emission set itself deduplicates. */
   def cellDirectory(arrivals: Dataset[CellVec]): Dataset[CellVecSeq] = {
     import arrivals.sparkSession.implicits._
-    arrivals
-      .groupByKey(_.cell)
-      .flatMapGroupsWithState[Long, CellVecSeq](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (cell: Long, it: Iterator[CellVec], state: GroupState[Long]) =>
-          var n = state.getOption.getOrElse(0L)
-          val out = it.toSeq.sortBy(_.vec_id).map { v =>
-            n += 1
-            CellVecSeq(cell, v.vec_id, v.q, n)
-          }
-          state.update(n)
-          out.iterator
+    fold(arrivals)(_.cell)(0L) { (cell, it, n0) =>
+      var n = n0
+      val out = it.toSeq.sortBy(_.vec_id).map { v =>
+        n += 1
+        CellVecSeq(cell, v.vec_id, v.q, n)
       }
+      (n, out.iterator)
+    }
   }
 }

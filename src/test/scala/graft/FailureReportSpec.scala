@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** A query that throws must be reported as failed by both mains, never
@@ -28,6 +30,21 @@ class FailureReportSpec extends SparkSpec {
     assert(boomCalls == 1 && flakyCalls == 2)
   }
 
+  test("Bench reports the wall time of the rep that paid a query's staging") {
+    var calls = 0
+    val staged: Query = (s, _) => {
+      calls += 1
+      if (calls == 1) graft.io.StageClock.timed(Thread.sleep(50))
+      s.range(3).toDF()
+    }
+    val t = Bench.timeQueries(spark, "unused", Seq("a_staged" -> staged),
+      streaming = _ => false, reps = 2)
+    assert(calls == 2)
+    val stage = t.stageSecs("a_staged")
+    assert(stage > 0.0)
+    assert(t.stagedRepSecs("a_staged") >= stage)
+  }
+
   test("Verify lists a throwing query with its message's first line and dumps the rest") {
     val out = graft.io.Scratch.dir("verify_failed_")
     val boom: Query = (_, _) => throw new IllegalStateException("boom\nsecond line")
@@ -37,6 +54,9 @@ class FailureReportSpec extends SparkSpec {
     assert(failed.head._2 == "boom")
     assert(failed(1)._2.contains("late"))
     assert(Files.isDirectory(Paths.get(out, "a_ok")))
-    assert(!Files.exists(Paths.get(out, "b_boom")))
+    // c_late fails inside the parquet write: neither its dump nor the
+    // temp dir it was written to may be left behind
+    val left = Files.list(Paths.get(out)).iterator().asScala.map(_.getFileName.toString)
+    assert(left.toSeq == Seq("a_ok"))
   }
 }

@@ -12,11 +12,14 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 import graft.SparkSpec
 import graft.queries.StreamingQueries._
+import graft.streaming.Streaming
 
-/** The continuous-cert harness every memory-sink certification runs
-  * through ([[StreamingQueries.certTable]]): one micro-batch per staged
-  * file, the session's shuffle partitions restored whatever the plan
-  * does, failures propagated, and a fresh sink name + checkpoint per call. */
+/** The two certification harnesses ([[StreamingQueries.live]] and
+  * [[StreamingQueries.recovered]]): one micro-batch per staged file, the
+  * session's shuffle partitions restored whatever the plan does, failures
+  * propagated, a fresh sink name + checkpoint per call, and a restart that
+  * is invisible in the output; plus the keyed state fold the stateful
+  * operators share. */
 class CertHarnessSpec extends SparkSpec {
 
   /** Records the streaming events of every query in the session. */
@@ -62,9 +65,9 @@ class CertHarnessSpec extends SparkSpec {
   private def ids(t: DataFrame): Seq[Long] =
     t.collect().map(_.getLong(0)).toSeq.sorted
 
-  test("certTable runs one micro-batch per staged file and returns the sink") {
+  test("live runs one micro-batch per staged file and returns the sink") {
     withRecorder { rec =>
-      val out = certTable(spark, "spec_batches", Seq(src)) {
+      val out = live("spec_batches")(spark, Seq(src)) {
         case Seq(st) => st.select(col("id"))
       }
       assert(ids(out) === (0L until 30L))
@@ -73,14 +76,14 @@ class CertHarnessSpec extends SparkSpec {
     }
   }
 
-  test("certTable restores shuffle partitions and propagates a failing plan") {
+  test("live restores shuffle partitions and propagates a failing plan") {
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
     spark.conf.set(key, "3") // a value no harness sets
     try {
       var during = ""
       val built = intercept[IllegalStateException] {
-        certTable(spark, "spec_throw", Seq(src)) { _ =>
+        live("spec_throw")(spark, Seq(src)) { _ =>
           during = spark.conf.get(key)
           throw new IllegalStateException("plan failed")
         }
@@ -92,7 +95,7 @@ class CertHarnessSpec extends SparkSpec {
       // a failure inside a running micro-batch surfaces too, not a timing
       val boom = udf((id: Long) => { require(id < 0, "row failed"); id })
       intercept[StreamingQueryException] {
-        certTable(spark, "spec_batch_throw", Seq(src)) {
+        live("spec_batch_throw")(spark, Seq(src)) {
           case Seq(st) => st.select(boom(col("id")).as("id"))
         }
       }
@@ -100,10 +103,10 @@ class CertHarnessSpec extends SparkSpec {
     } finally spark.conf.set(key, saved)
   }
 
-  test("two certTable calls with one tag use distinct sinks and checkpoints") {
+  test("two live calls with one tag use distinct sinks and checkpoints") {
     withRecorder { rec =>
-      val a = certTable(spark, "spec_same", Seq(src)) { case Seq(st) => st }
-      val b = certTable(spark, "spec_same", Seq(src)) { case Seq(st) => st }
+      val a = live("spec_same")(spark, Seq(src)) { case Seq(st) => st }
+      val b = live("spec_same")(spark, Seq(src)) { case Seq(st) => st }
       // a shared checkpoint would leave the second run nothing to read
       assert(ids(a) === (0L until 30L))
       assert(ids(b) === (0L until 30L))
@@ -113,5 +116,60 @@ class CertHarnessSpec extends SparkSpec {
       // the query id is stored in (and restored from) the checkpoint
       assert(runs.map(_.id).distinct.size === 2)
     }
+  }
+
+  /** A stateful body: ids numbered per cell (id % 3) in arrival order, so
+    * every row's `seq` depends on the state carried into its batch. */
+  private val numbered: Seq[DataFrame] => DataFrame = {
+    case Seq(st) =>
+      import spark.implicits._
+      Streaming.cellDirectory(st.select((col("id") % 3).as("cell"),
+        col("id").as("vec_id"), col("id").as("q")).as[Streaming.CellVec]).toDF()
+  }
+
+  private def rows(t: DataFrame): Seq[(Long, Long, Long)] =
+    t.select(col("cell"), col("vec_id"), col("seq")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sortBy(_._2)
+
+  test("recovered returns the same rows as live for one stateful body") {
+    val want = (0L until 30L).map(id => (id % 3, id, id / 3 + 1))
+    assert(rows(live("spec_twin")(spark, Seq(src))(numbered)) === want)
+    // the first of the three files runs before the restart
+    assert(rows(recovered("spec_twin_rec", firstN = 1)(spark, Seq(src))(numbered)) === want)
+  }
+
+  test("recovered refuses a split that leaves one incarnation no batch") {
+    for (firstN <- Seq(0, 3)) {
+      val e = intercept[IllegalArgumentException] {
+        recovered(s"spec_split$firstN", firstN)(spark, Seq(src))(numbered)
+      }
+      assert(e.getMessage.contains(s"recovery split must leave batches on both sides: $firstN of 3"))
+    }
+  }
+
+  test("the state fold gives each key a fresh array init") {
+    import spark.implicits._
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "1") // both keys in one task
+    try {
+      val obs = Seq(Streaming.CmsObs(0, 0), Streaming.CmsObs(0, 0), Streaming.CmsObs(1, 0)).toDS()
+      val got = Streaming.cmsRowSquares(obs, width = 2).collect().sortBy(_.i).toSeq
+      // row 0 counted two arrivals in bucket 0, row 1 one: a shared array
+      // would hand row 1 row 0's counts
+      assert(got === Seq(Streaming.CmsBatchOut(0, 2, 4), Streaming.CmsBatchOut(1, 1, 1)))
+    } finally spark.conf.set(key, saved)
+  }
+
+  test("the state fold carries state across three micro-batches") {
+    import spark.implicits._
+    val out = live("spec_fold")(spark, Seq(src)) {
+      case Seq(st) => Streaming.cmsRowSquares(
+        st.select(lit(0L).as("i"), (col("id") % 2).as("b")).as[Streaming.CmsObs], 2).toDF()
+    }
+    // each batch adds 5 arrivals to each of the two counters
+    assert(out.as[Streaming.CmsBatchOut].collect().sortBy(_.seen).toSeq === Seq(
+      Streaming.CmsBatchOut(0, 10, 50), Streaming.CmsBatchOut(0, 20, 200),
+      Streaming.CmsBatchOut(0, 30, 450)))
   }
 }
