@@ -47,12 +47,11 @@ object Bfs {
       val relaxed = edges
         .join(dist.withColumnRenamed("node", "u"), Seq("u"))
         .select(col("v").as("node"), (col("dist") + 1).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("node"))
-        .agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
+      dist = relaxAndRelease(dist, relaxed)
       r += 1
     }
+    // only the returned distances keep their blocks
+    PageRank.release(edges)
     dist
   }
 
@@ -98,12 +97,21 @@ object Bfs {
       val relaxed = edges
         .join(dist.withColumnRenamed("node", "u"), Seq("u"))
         .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("node"))
-        .agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
+      dist = relaxAndRelease(dist, relaxed)
       r += 1
     }
+    PageRank.release(edges)
     dist
+  }
+
+  /** One round's min-fold of `relaxed` into `dist`, checkpointed; the
+    * checkpoint reads none of `dist`'s lineage, so `dist` is released. */
+  private def relaxAndRelease(dist: DataFrame, relaxed: DataFrame): DataFrame = {
+    val next = dist.unionByName(relaxed)
+      .groupBy(col("node"))
+      .agg(min(col("dist")).as("dist"))
+      .localCheckpoint(true)
+    PageRank.release(dist)
+    next
   }
 }

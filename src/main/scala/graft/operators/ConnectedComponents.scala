@@ -170,15 +170,20 @@ object ConnectedComponents {
       val sig = (longMetric(obs, "n"), decimalMetric(obs, "h"))
       converged = sig == prevSig
       prevSig = sig
+      // next is materialized and reads none of the old edges' lineage
+      PageRank.release(edges)
       edges = next
       i += 1
     }
-    if (!converged)
+    if (!converged) {
+      Seq(nodes, edges).foreach(PageRank.release)
       throw new IllegalStateException(
         s"ConnectedComponents.componentsStar did not converge in $maxIters rounds " +
           "(expected O(log n)); raise maxIters.")
+    }
     // fixpoint edge set is a star forest: (child, root). Roots (nodes never
-    // appearing as a child) label themselves.
+    // appearing as a child) label themselves. The returned frame reads the
+    // last edge checkpoint and `nodes` lazily, so those two stay.
     val childLabels = edges.select(col("hi").as("id"), col("lo").as("cluster_id"))
     val rootLabels = nodes.join(childLabels.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("cluster_id"))

@@ -49,17 +49,21 @@ object KCore {
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val bad = deg.where(col("deg") < k).select(col("node"))
       val obs = Observation(s"kcore_peel_$round")
-      edges = edges
+      val next = edges
         .join(bad.select(col("node").as("u")), Seq("u"), "left_anti")
         .join(bad.select(col("node").as("v")), Seq("v"), "left_anti")
         .select(col("u"), col("v"))
         .observe(obs, count(lit(1)).as("n_edges"))
         .localCheckpoint(true)
+      // next is materialized and reads none of the old edges' lineage
+      PageRank.release(edges)
+      edges = next
       val after = obs.get("n_edges").asInstanceOf[Long]
       converged = after == edgeCount
       edgeCount = after
       round += 1
     }
+    // the returned frame reads the last edge checkpoint lazily, so it stays
     edges.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
   }

@@ -46,7 +46,7 @@ object Lpa {
       .localCheckpoint(true)
     var r = 0
     while (r < rounds) {
-      labels = edges
+      val next = edges
         .join(labels.withColumnRenamed("node", "u"), Seq("u"))
         .groupBy(col("v"), col("label"))
         .agg(count(lit(1)).as("cnt"))
@@ -55,8 +55,13 @@ object Lpa {
           .as("win"))
         .select(col("v").as("node"), col("win.l").as("label"))
         .localCheckpoint(true)
+      // next is materialized and reads none of the old labels' lineage
+      PageRank.release(labels)
+      labels = next
       r += 1
     }
+    // only the returned labels keep their blocks
+    PageRank.release(edges)
     labels
   }
 }

@@ -12,14 +12,12 @@ import graft.llm.TextAnalysis
   * agreement (Cohen's kappa, weighted and unweighted; Fleiss' kappa for
   * m = 3 raters), McNemar's paired-classifier test, the
   * stride-permutation test with Benjamini-Hochberg FDR control, and
-  * Cramer's V over a contingency grid. Same contract as every registry — each `defs` entry has a
-  * DuckDB `oracles` twin with identical column names and deterministic
+  * Cramer's V over a contingency grid. Same contract as every registry — each `q<N>_<name>` query has a
+  * DuckDB `q<N>_sql` twin with identical column names and deterministic
   * ordering; all statistics are exact integer / DECIMAL(38,0)
   * arithmetic (HUGEINT on the DuckDB side), so the hashes are
   * certifiable. */
-object AgreementTestQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object AgreementTestQueries extends Registry {
 
   private val dec = "decimal(38,0)"
 
@@ -422,18 +420,4 @@ object AgreementTestQueries {
        |   // nullif(n::HUGEINT * n * 18 - 2 * $c2, 0))::BIGINT AS kappa_ppm
        |FROM agg""".stripMargin
   }
-
-  val defs: Map[String, Q] = Map(
-    "q401_fleiss_kappa" -> q401_fleiss_kappa,
-    "q330_perm_fdr" -> q330_perm_fdr,
-    "q331_cramers_v" -> q331_cramers_v,
-    "q328_cohens_kappa" -> q328_cohens_kappa,
-    "q329_mcnemar" -> q329_mcnemar)
-
-  val oracles: Map[String, String] = Map(
-    "q401_fleiss_kappa" -> q401_sql,
-    "q330_perm_fdr" -> q330_sql,
-    "q331_cramers_v" -> q331_sql,
-    "q328_cohens_kappa" -> q328_sql,
-    "q329_mcnemar" -> q329_sql)
 }

@@ -14,11 +14,9 @@ import graft.queries.RelationalQueries._
   * (round-8 maintainability); shared oracle-SQL helpers stay in the
   * origin object(s) (RelationalQueries) with
   * package-private visibility. Same contract as every registry:
-  * each `defs` entry has a DuckDB `oracles` twin with identical
+  * each `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical
   * column names and deterministic ordering. */
-object AnalyticsQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object AnalyticsQueries extends Registry {
 
   // --------------------------------------------------- O34 batch analog
   /** Hourly tumbling-window counts over the events table — the batch analog
@@ -1321,73 +1319,4 @@ object AnalyticsQueries {
       |       min(CASE WHEN rnk * 100 >= n * 50 THEN latency_ms END) AS p50_ms,
       |       min(CASE WHEN rnk * 100 >= n * 95 THEN latency_ms END) AS p95_ms
       |FROM k""".stripMargin
-
-
-  val defs: Map[String, Q] = Map(
-    "q252_pareto_share" -> q252_pareto_share,
-    "q254_conversion_latency" -> q254_conversion_latency,
-    "q248_association_rules" -> q248_association_rules,
-    "q244_percentile_bands" -> q244_percentile_bands,
-    "q245_max_concurrency" -> q245_max_concurrency,
-    "q243_entry_paths" -> q243_entry_paths,
-    "q237_frequent_itemsets" -> q237_frequent_itemsets,
-    "q231_cdc_apply" -> q231_cdc_apply,
-    "q224_winsorized_stats" -> q224_winsorized_stats,
-    "q225_key_skew_gini" -> q225_key_skew_gini,
-    "q220_attribution" -> q220_attribution,
-    "q221_retention_cohorts" -> q221_retention_cohorts,
-    "q222_benford" -> q222_benford,
-    "q216_weighted_median" -> q216_weighted_median,
-    "q217_decayed_engagement" -> q217_decayed_engagement,
-    "q213_corr_matrix" -> q213_corr_matrix,
-    "q210_pattern_dfa" -> q210_pattern_dfa,
-    "q205_resample_grid" -> q205_resample_grid,
-    "q207_cusum_drift" -> q207_cusum_drift,
-    "q201_locf_fill" -> q201_locf_fill,
-    "q202_ewma_fixed" -> q202_ewma_fixed,
-    "q203_markov_transitions" -> q203_markov_transitions,
-    "q193_incremental_agg" -> q193_incremental_agg,
-    "q197_topk_agg" -> q197_topk_agg,
-    "q17_window_events" -> q17_window_events,
-    "q18_window_funcs" -> q18_window_funcs,
-    "q32_sessions" -> q32_sessions,
-    "q33_topn_per_group" -> q33_topn_per_group,
-    "q76_salted_agg" -> q76_salted_agg,
-    "q77_window_analytics" -> q77_window_analytics,
-    "q111_funnel" -> q111_funnel,
-    "q175_priority_trend" -> q175_priority_trend)
-
-  val oracles: Map[String, String] = Map(
-    "q17_window_events" -> q17_sql,
-    "q18_window_funcs" -> q18_sql,
-    "q32_sessions" -> q32_sql,
-    "q33_topn_per_group" -> q33_sql,
-    "q76_salted_agg" -> q76_sql,
-    "q77_window_analytics" -> q77_sql,
-    "q111_funnel" -> q111_sql,
-    "q175_priority_trend" -> q175_sql,
-    "q193_incremental_agg" -> q193_sql,
-    "q197_topk_agg" -> q197_sql,
-    "q201_locf_fill" -> q201_sql,
-    "q202_ewma_fixed" -> q202_sql,
-    "q203_markov_transitions" -> q203_sql,
-    "q205_resample_grid" -> q205_sql,
-    "q207_cusum_drift" -> q207_sql,
-    "q210_pattern_dfa" -> q210_sql,
-    "q213_corr_matrix" -> q213_sql,
-    "q216_weighted_median" -> q216_sql,
-    "q217_decayed_engagement" -> q217_sql,
-    "q220_attribution" -> q220_sql,
-    "q221_retention_cohorts" -> q221_sql,
-    "q222_benford" -> q222_sql,
-    "q224_winsorized_stats" -> q224_sql,
-    "q225_key_skew_gini" -> q225_sql,
-    "q231_cdc_apply" -> q231_sql,
-    "q237_frequent_itemsets" -> q237_sql,
-    "q243_entry_paths" -> q243_sql,
-    "q244_percentile_bands" -> q244_sql,
-    "q252_pareto_share" -> q252_sql,
-    "q254_conversion_latency" -> q254_sql,
-    "q248_association_rules" -> q248_sql,
-    "q245_max_concurrency" -> q245_sql)
 }

@@ -13,11 +13,9 @@ import graft.queries.LlmTextQueries.{ApMaxDf, ApMinCos2Fp}
   * (round-8 maintainability); shared oracle-SQL helpers stay in the
   * origin object(s) (LlmQueries) with
   * package-private visibility. Same contract as every registry:
-  * each `defs` entry has a DuckDB `oracles` twin with identical
+  * each `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical
   * column names and deterministic ordering. */
-object AnnQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object AnnQueries extends Registry {
 
   // --------------------------------------------------- similarity search
   /** Brute-force cosine top-10: 5 broadcast query vectors against the full
@@ -1041,54 +1039,4 @@ object AnnQueries {
        |CROSS JOIN np n
        |LEFT JOIN hits h ON h.query_id = q.query_id AND h.nprobe = n.nprobe
        |ORDER BY 1, 2""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q402_ivf_probe_curve" -> q402_ivf_probe_curve,
-    "q388_matryoshka" -> q388_matryoshka,
-    "q262_ivf_cell_quality" -> q262_ivf_cell_quality,
-    "q187_knn_density" -> q187_knn_density,
-    "q183_knn_mutual" -> q183_knn_mutual,
-    "q26_topk_bruteforce" -> q26_topk_bruteforce,
-    "q27_topk_ivf" -> q27_topk_ivf,
-    "q28_embedding_neardup" -> q28_embedding_neardup,
-    "q85_quantized_topk" -> q85_quantized_topk,
-    "q35_topk_ivf_kmeans" -> q35_topk_ivf_kmeans,
-    "q56_topk_ivf_fixed" -> q56_topk_ivf_fixed,
-    "q53_quantize_int8" -> q53_quantize_int8,
-    "q95_pq_topk" -> q95_pq_topk,
-    "q99_topk_ivfpq" -> q99_topk_ivfpq,
-    "q105_topk_ivfpq_residual" -> q105_topk_ivfpq_residual,
-    "q106_ann_recall" -> q106_ann_recall,
-    "q124_allpairs_cosine" -> q124_allpairs_cosine,
-    "q140_mmr_rerank" -> q140_mmr_rerank,
-    "q148_embedding_multiprobe" -> q148_embedding_multiprobe,
-    "q153_embedding_stats" -> q153_embedding_stats,
-    "q156_znorm_topk" -> q156_znorm_topk,
-    "q165_random_project" -> q165_random_project,
-    "q166_source_similarity" -> q166_source_similarity)
-
-  val oracles: Map[String, String] = Map(
-    "q402_ivf_probe_curve" -> q402_sql,
-    "q388_matryoshka" -> q388_sql,
-    "q262_ivf_cell_quality" -> q262_sql,
-    "q26_topk_bruteforce" -> q26_sql,
-    "q27_topk_ivf" -> q27_sql,
-    "q28_embedding_neardup" -> q28_sql,
-    "q35_topk_ivf_kmeans" -> q35_sql,
-    "q85_quantized_topk" -> q85_sql,
-    "q56_topk_ivf_fixed" -> q56_sql,
-    "q53_quantize_int8" -> q53_sql,
-    "q148_embedding_multiprobe" -> q148_sql,
-    "q95_pq_topk" -> q95_sql,
-    "q99_topk_ivfpq" -> q99_sql,
-    "q105_topk_ivfpq_residual" -> q105_sql,
-    "q106_ann_recall" -> q106_sql,
-    "q124_allpairs_cosine" -> q124_sql,
-    "q140_mmr_rerank" -> q140_sql,
-    "q153_embedding_stats" -> q153_sql,
-    "q156_znorm_topk" -> q156_sql,
-    "q165_random_project" -> q165_sql,
-    "q166_source_similarity" -> q166_sql,
-    "q183_knn_mutual" -> q183_sql,
-    "q187_knn_density" -> q187_sql)
 }

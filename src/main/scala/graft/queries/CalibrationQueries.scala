@@ -25,9 +25,7 @@ import graft.operators.{AsOfJoin, RunningTotal}
   * (operands nonnegative by construction, so Spark's `div` and DuckDB's
   * `//` agree) with DECIMAL(38,0)/HUGEINT guarding the 10⁶ scaling.
   */
-object CalibrationQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CalibrationQueries extends Registry {
 
   private val dec = "decimal(38,0)"
 
@@ -356,16 +354,4 @@ object CalibrationQueries {
       |  (resnum * 1000000 // (n * n * n))::BIGINT AS res_ppm,
       |  (c * (n - c) * 1000000 // (n * n))::BIGINT AS unc_ppm
       |FROM tot, res""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q407_brier_decomposition" -> q407_brier_decomposition,
-    "q345_conformal_gate" -> q345_conformal_gate,
-    "q349_quantile_norm" -> q349_quantile_norm,
-    "q350_isotonic" -> q350_isotonic)
-
-  val oracles: Map[String, String] = Map(
-    "q407_brier_decomposition" -> q407_sql,
-    "q345_conformal_gate" -> q345_sql,
-    "q349_quantile_norm" -> q349_sql,
-    "q350_isotonic" -> q350_sql)
 }

@@ -29,9 +29,7 @@ import graft.queries.LlmQueries.{sqlCosine, sqlDot}
   * sequence (the q26 convention). The k×k centroid-separation frame and
   * every readout after the reduction are constant-size in corpus rows.
   */
-object ClusterQualityQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ClusterQualityQueries extends Registry {
 
   private val dec = "decimal(38,0)"
   private val K = 8
@@ -239,12 +237,4 @@ object ClusterQualityQueries {
        |FROM wd CROSS JOIN db
        |ORDER BY cell""".stripMargin
   }
-
-  val defs: Map[String, Q] = Map(
-    "q396_silhouette" -> q396_silhouette,
-    "q397_davies_bouldin" -> q397_davies_bouldin)
-
-  val oracles: Map[String, String] = Map(
-    "q396_silhouette" -> q396_sql,
-    "q397_davies_bouldin" -> q397_sql)
 }

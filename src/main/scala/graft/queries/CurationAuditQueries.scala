@@ -12,11 +12,9 @@ import graft.queries.LlmQueries._
   * no non-test file over 2000 lines). [[CurationQueries]] keeps the
   * sampling/mixing primitives and the v1–v12 pipeline compositions; this
   * registry carries the read-only audits a curation run reports on. Same
-  * contract as every registry: each `defs` entry has a DuckDB `oracles`
+  * contract as every registry: each `q<N>_<name>` query has a DuckDB `q<N>_sql`
   * twin with identical column names and deterministic ordering. */
-object CurationAuditQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CurationAuditQueries extends Registry {
 
   /** Intra-source embedding diversity — [[Similarity.groupDiversity]]'s
     * one-pass mean-pairwise-cosine identity (‖Σû‖² − n) / n(n−1): the
@@ -407,30 +405,4 @@ object CurationAuditQueries {
       |SELECT source, n_docs, n_removable, total_chars, chars_saved,
       |       chars_saved * 1000000 // total_chars AS savings_ppm
       |FROM a ORDER BY source""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q181_source_diversity" -> q181_source_diversity,
-    "q182_subset_prune" -> q182_subset_prune,
-    "q184_drift" -> q184_drift,
-    "q185_dataset_card" -> q185_dataset_card,
-    "q189_source_overlap" -> q189_source_overlap,
-    "q191_robust_outliers" -> q191_robust_outliers,
-    "q192_release_gate" -> q192_release_gate,
-    "q194_pareto" -> q194_pareto,
-    "q211_split_leakage" -> q211_split_leakage,
-    "q214_equidepth_hist" -> q214_equidepth_hist,
-    "q260_dedup_savings" -> q260_dedup_savings)
-
-  val oracles: Map[String, String] = Map(
-    "q181_source_diversity" -> q181_sql,
-    "q182_subset_prune" -> q182_sql,
-    "q184_drift" -> q184_sql,
-    "q185_dataset_card" -> q185_sql,
-    "q189_source_overlap" -> q189_sql,
-    "q191_robust_outliers" -> q191_sql,
-    "q192_release_gate" -> q192_sql,
-    "q194_pareto" -> q194_sql,
-    "q211_split_leakage" -> q211_sql,
-    "q214_equidepth_hist" -> q214_sql,
-    "q260_dedup_savings" -> q260_sql)
 }

@@ -13,11 +13,9 @@ import graft.queries.LlmTextQueries.{c4LineCtes, crossLshCtes, gopherKeepSql, go
   * (round-8 maintainability); shared oracle-SQL helpers stay in the
   * origin object(s) (LlmQueries) with
   * package-private visibility. Same contract as every registry:
-  * each `defs` entry has a DuckDB `oracles` twin with identical
+  * each `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical
   * column names and deterministic ordering. */
-object CurationQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object CurationQueries extends Registry {
 
   // ------------------------------------------------ hash sampling / mixing
   /** Deterministic corpus mixing: per-language keep rates (en 80%, others
@@ -1429,72 +1427,4 @@ object CurationQueries {
       |   AND coalesce(dup_memberships, 0) * 5 <= n_docs) AS release
       |FROM auc JOIN ols USING (source) LEFT JOIN dm USING (source)
       |ORDER BY auc.source""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q310_curation_v12" -> q310_curation_v12,
-    "q233_curation_v10" -> q233_curation_v10,
-    "q219_curation_v9" -> q219_curation_v9,
-    "q200_curation_v8" -> q200_curation_v8,
-    "q79_curation_pipeline" -> q79_curation_pipeline,
-    "q54_hash_sampling" -> q54_hash_sampling,
-    "q55_split_assign" -> q55_split_assign,
-    "q92_stratified_sample" -> q92_stratified_sample,
-    "q114_contamination" -> q114_contamination,
-    "q115_sequence_packing" -> q115_sequence_packing,
-    "q116_mixture_resample" -> q116_mixture_resample,
-    "q118_diverse_coreset" -> q118_diverse_coreset,
-    "q121_curation_v2" -> q121_curation_v2,
-    "q125_priority_sample" -> q125_priority_sample,
-    "q127_importance" -> q127_importance,
-    "q131_train_shuffle" -> q131_train_shuffle,
-    "q133_interleave" -> q133_interleave,
-    "q135_fuzzy_contamination" -> q135_fuzzy_contamination,
-    "q136_quality_classifier" -> q136_quality_classifier,
-    "q137_score_calibration" -> q137_score_calibration,
-    "q138_curation_v3" -> q138_curation_v3,
-    "q147_curation_v4" -> q147_curation_v4,
-    "q149_gopher_rules" -> q149_gopher_rules,
-    "q150_c4_clean" -> q150_c4_clean,
-    "q151_source_cap" -> q151_source_cap,
-    "q155_curation_v5" -> q155_curation_v5,
-    "q160_lang_quota" -> q160_lang_quota,
-    "q161_token_budget" -> q161_token_budget,
-    "q163_curation_v6" -> q163_curation_v6,
-    "q167_epoch_mix" -> q167_epoch_mix,
-    "q169_length_buckets" -> q169_length_buckets,
-    "q171_curation_v7" -> q171_curation_v7)
-
-  val oracles: Map[String, String] = Map(
-    "q310_curation_v12" -> q310_sql,
-    "q233_curation_v10" -> q233_sql,
-    "q79_curation_pipeline" -> q79_sql,
-    "q54_hash_sampling" -> q54_sql,
-    "q55_split_assign" -> q55_sql,
-    "q147_curation_v4" -> q147_sql,
-    "q92_stratified_sample" -> q92_sql,
-    "q114_contamination" -> q114_sql,
-    "q115_sequence_packing" -> q115_sql,
-    "q116_mixture_resample" -> q116_sql,
-    "q118_diverse_coreset" -> q118_sql,
-    "q121_curation_v2" -> q121_sql,
-    "q125_priority_sample" -> q125_sql,
-    "q127_importance" -> q127_sql,
-    "q131_train_shuffle" -> q131_sql,
-    "q133_interleave" -> q133_sql,
-    "q135_fuzzy_contamination" -> q135_sql,
-    "q136_quality_classifier" -> q136_sql,
-    "q137_score_calibration" -> q137_sql,
-    "q138_curation_v3" -> q138_sql,
-    "q149_gopher_rules" -> q149_sql,
-    "q150_c4_clean" -> q150_sql,
-    "q151_source_cap" -> q151_sql,
-    "q155_curation_v5" -> q155_sql,
-    "q160_lang_quota" -> q160_sql,
-    "q161_token_budget" -> q161_sql,
-    "q163_curation_v6" -> q163_sql,
-    "q167_epoch_mix" -> q167_sql,
-    "q169_length_buckets" -> q169_sql,
-    "q171_curation_v7" -> q171_sql,
-    "q200_curation_v8" -> q200_sql,
-    "q219_curation_v9" -> q219_sql)
 }

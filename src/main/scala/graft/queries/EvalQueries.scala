@@ -13,13 +13,11 @@ import graft.operators.RunningTotal
   * testing, aggregation-bias audits, change-point detection,
   * histogram-based outlier scoring, containment dedup, and a
   * decision-stump feature probe. Same contract as every registry — each
-  * `defs` entry has a DuckDB `oracles` twin with identical column names
+  * `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical column names
   * and deterministic ordering; all statistics are exact integer /
   * DECIMAL(38,0) arithmetic (HUGEINT on the DuckDB side), never floats,
   * so the hashes are certifiable. */
-object EvalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object EvalQueries extends Registry {
 
   private val dec = "decimal(38,0)"
 
@@ -1132,40 +1130,4 @@ object EvalQueries {
       |  END::BIGINT AS n_outlier_days
       |FROM dev JOIN med ON med.g = dev.g JOIN mad ON mad.g = dev.g
       |GROUP BY 1 ORDER BY event_type""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q389_robust_z" -> q389_robust_z,
-    "q338_mann_kendall" -> q338_mann_kendall,
-    "q336_wasserstein" -> q336_wasserstein,
-    "q337_hellinger" -> q337_hellinger,
-    "q334_ordinal_assoc" -> q334_ordinal_assoc,
-    "q332_kruskal_wallis" -> q332_kruskal_wallis,
-    "q326_spearman" -> q326_spearman,
-    "q327_kendall_grid" -> q327_kendall_grid,
-    "q325_wilson_rank" -> q325_wilson_rank,
-    "q324_dispersion" -> q324_dispersion,
-    "q316_mann_whitney" -> q316_mann_whitney,
-    "q317_simpson_slopes" -> q317_simpson_slopes,
-    "q318_changepoint" -> q318_changepoint,
-    "q319_hbos_outliers" -> q319_hbos_outliers,
-    "q320_containment" -> q320_containment,
-    "q321_stump_gain" -> q321_stump_gain)
-
-  val oracles: Map[String, String] = Map(
-    "q389_robust_z" -> q389_sql,
-    "q338_mann_kendall" -> q338_sql,
-    "q336_wasserstein" -> q336_sql,
-    "q337_hellinger" -> q337_sql,
-    "q334_ordinal_assoc" -> q334_sql,
-    "q332_kruskal_wallis" -> q332_sql,
-    "q326_spearman" -> q326_sql,
-    "q327_kendall_grid" -> q327_sql,
-    "q325_wilson_rank" -> q325_sql,
-    "q324_dispersion" -> q324_sql,
-    "q316_mann_whitney" -> q316_sql,
-    "q317_simpson_slopes" -> q317_sql,
-    "q318_changepoint" -> q318_sql,
-    "q319_hbos_outliers" -> q319_sql,
-    "q320_containment" -> q320_sql,
-    "q321_stump_gain" -> q321_sql)
 }

@@ -30,9 +30,7 @@ import graft.io.Tables
   * ≤ 10⁶ cents per user-total (n·Σxy·10⁶ ≤ 10³⁸); past that horizon,
   * accumulate x/y in dollars rather than cents.
   */
-object ExperimentQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ExperimentQueries extends Registry {
 
   private val dec = "decimal(38,0)"
 
@@ -530,20 +528,4 @@ object ExperimentQueries {
       |  coalesce((n_xy::HUGEINT * n * 1000000
       |   // nullif(n_x::HUGEINT * n_y, 0)) >= 2000000, false) AS dependent
       |FROM agg ORDER BY event_type""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q399_tail_dependence" -> q399_tail_dependence,
-    "q392_group_sequential" -> q392_group_sequential,
-    "q351_psi" -> q351_psi,
-    "q352_neyman" -> q352_neyman,
-    "q353_cuped" -> q353_cuped,
-    "q355_srm" -> q355_srm)
-
-  val oracles: Map[String, String] = Map(
-    "q399_tail_dependence" -> q399_sql,
-    "q392_group_sequential" -> q392_sql,
-    "q351_psi" -> q351_sql,
-    "q352_neyman" -> q352_sql,
-    "q353_cuped" -> q353_sql,
-    "q355_srm" -> q355_sql)
 }

@@ -11,11 +11,9 @@ import graft.io.Tables
   * over 2000 lines): Holt / Holt–Winters smoothing and their forecast
   * evaluation tail, Markov transition entropy, Theil/RFM/burstiness/
   * autocorrelation, cohort retention. Same contract as every registry:
-  * each `defs` entry has a DuckDB `oracles` twin with identical column
-  * names and deterministic ordering. */
-object ForecastQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+  * each `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical
+  * column names and deterministic ordering. */
+object ForecastQueries extends Registry {
 
   /** HOLT trend-adjusted smoothing per user — [[graft.operators.Ewma.holt]]:
     * the coupled (level, trend) integer recurrence through the two-long
@@ -646,32 +644,4 @@ object ForecastQueries {
       |    ::BIGINT AS eta2_ppm
       |FROM tot JOIN grid ON grid.g = tot.g
       |ORDER BY event_type""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q403_dow_eta2" -> q403_dow_eta2,
-    "q398_theil_sen" -> q398_theil_sen,
-    "q292_cohort_retention" -> q292_cohort_retention,
-    "q288_autocorrelation" -> q288_autocorrelation,
-    "q266_burstiness" -> q266_burstiness,
-    "q257_holt_trend" -> q257_holt_trend,
-    "q279_holt_winters" -> q279_holt_winters,
-    "q280_transition_entropy" -> q280_transition_entropy,
-    "q281_theil" -> q281_theil,
-    "q286_forecast_skill" -> q286_forecast_skill,
-    "q287_anomaly_flags" -> q287_anomaly_flags,
-    "q258_rfm_segments" -> q258_rfm_segments)
-
-  val oracles: Map[String, String] = Map(
-    "q403_dow_eta2" -> q403_sql,
-    "q398_theil_sen" -> q398_sql,
-    "q292_cohort_retention" -> q292_sql,
-    "q288_autocorrelation" -> q288_sql,
-    "q266_burstiness" -> q266_sql,
-    "q257_holt_trend" -> q257_sql,
-    "q279_holt_winters" -> q279_sql,
-    "q280_transition_entropy" -> q280_sql,
-    "q281_theil" -> q281_sql,
-    "q286_forecast_skill" -> q286_sql,
-    "q287_anomaly_flags" -> q287_sql,
-    "q258_rfm_segments" -> q258_sql)
 }

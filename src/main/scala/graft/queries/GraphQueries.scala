@@ -18,11 +18,9 @@ import graft.queries.LlmQueries._
   * (round-8 maintainability); shared oracle-SQL helpers stay in the
   * origin object(s) (RelationalQueries / LlmQueries) with
   * package-private visibility. Same contract as every registry:
-  * each `defs` entry has a DuckDB `oracles` twin with identical
+  * each `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical
   * column names and deterministic ordering. */
-object GraphQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object GraphQueries extends Registry {
 
   /** HITS hubs-and-authorities over the customer→supplier purchase graph,
     * two fixed-point rounds — the directed-graph complement of PageRank
@@ -882,44 +880,4 @@ object GraphQueries {
       |  ((CASE WHEN num >= 0 THEN 1 ELSE -1 END) * num * num * 10000
       |   // nullif(denx * deny, 0))::BIGINT AS assort_bp_signed
       |FROM r""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q404_assortativity" -> q404_assortativity,
-    "q267_weighted_pagerank" -> q267_weighted_pagerank,
-    "q255_weighted_sssp" -> q255_weighted_sssp,
-    "q241_resource_allocation" -> q241_resource_allocation,
-    "q304_adamic_adar" -> q304_adamic_adar,
-    "q253_common_neighbors" -> q253_common_neighbors,
-    "q247_negative_sampling" -> q247_negative_sampling,
-    "q238_degree_assortativity" -> q238_degree_assortativity,
-    "q230_clustering_coeff" -> q230_clustering_coeff,
-    "q228_covisitation" -> q228_covisitation,
-    "q199_hits" -> q199_hits,
-    "q206_bfs_hops" -> q206_bfs_hops,
-    "q195_lpa_communities" -> q195_lpa_communities,
-    "q190_kcore" -> q190_kcore,
-    "q128_cc_star_chain" -> q128_cc_star_chain,
-    "q129_pagerank" -> q129_pagerank,
-    "q143_pagerank_dangling" -> q143_pagerank_dangling,
-    "q177_neardup_triangles" -> q177_neardup_triangles)
-
-  val oracles: Map[String, String] = Map(
-    "q404_assortativity" -> q404_sql,
-    "q267_weighted_pagerank" -> q267_sql,
-    "q199_hits" -> q199_sql,
-    "q228_covisitation" -> q228_sql,
-    "q230_clustering_coeff" -> q230_sql,
-    "q238_degree_assortativity" -> q238_sql,
-    "q241_resource_allocation" -> q241_sql,
-    "q304_adamic_adar" -> q304_sql,
-    "q253_common_neighbors" -> q253_sql,
-    "q247_negative_sampling" -> q247_sql,
-    "q255_weighted_sssp" -> q255_sql,
-    "q143_pagerank_dangling" -> q143_sql,
-    "q128_cc_star_chain" -> q128_sql,
-    "q129_pagerank" -> q129_sql,
-    "q177_neardup_triangles" -> q177_sql,
-    "q190_kcore" -> q190_sql,
-    "q195_lpa_communities" -> q195_sql,
-    "q206_bfs_hops" -> q206_sql)
 }

@@ -14,9 +14,7 @@ import graft.io.Tables
   * (q373) and the per-type distribution-health gate (q368). Contract
   * unchanged — every member runs the SAME code path as its standalone
   * query, and each oracle joins the member oracles as subqueries. */
-object HypothesisCompositionQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object HypothesisCompositionQueries extends Registry {
 
   // ---- q373: HDR register rollup (day→week merge ≡ direct) -----------------
 
@@ -183,13 +181,4 @@ object HypothesisCompositionQueries {
        |FROM cvm JOIN cd USING (event_type) JOIN lb USING (event_type)
        |  JOIN rt USING (event_type) JOIN hdr USING (event_type)
        |ORDER BY event_type""".stripMargin
-
-
-  val defs: Map[String, Q] = Map(
-    "q368_distribution_gate" -> q368_distribution_gate,
-    "q373_hdr_rollup" -> q373_hdr_rollup)
-
-  val oracles: Map[String, String] = Map(
-    "q368_distribution_gate" -> q368_sql,
-    "q373_hdr_rollup" -> q373_sql)
 }

@@ -33,9 +33,7 @@ import graft.io.Tables
   * frames. Nothing funnels through a corpus-scale window, a cartesian
   * product, or a driver loop.
   */
-object HypothesisQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object HypothesisQueries extends Registry {
 
   private val dec = "decimal(38,0)"
 
@@ -1374,40 +1372,4 @@ object HypothesisQueries {
       |   // nullif(2::HUGEINT * n * (n + 1) * (2 * n + 1) - tie3, 0) > 3841459
       |    AS shifted
       |FROM o ORDER BY event_type""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q356_hdr_quantiles" -> q356_hdr_quantiles,
-    "q358_friedman" -> q358_friedman,
-    "q359_brown_forsythe" -> q359_brown_forsythe,
-    "q360_cramer_von_mises" -> q360_cramer_von_mises,
-    "q361_energy_distance" -> q361_energy_distance,
-    "q362_ljung_box" -> q362_ljung_box,
-    "q363_runs_test" -> q363_runs_test,
-    "q364_hodges_lehmann" -> q364_hodges_lehmann,
-    "q365_cliffs_delta" -> q365_cliffs_delta,
-    "q366_mood_median" -> q366_mood_median,
-    "q367_wilcoxon_signed" -> q367_wilcoxon_signed,
-    "q370_pacf" -> q370_pacf,
-    "q371_seasonality_strength" -> q371_seasonality_strength,
-    "q372_cochrans_q" -> q372_cochrans_q,
-    "q374_ks_uniform" -> q374_ks_uniform,
-    "q375_sprt" -> q375_sprt)
-
-  val oracles: Map[String, String] = Map(
-    "q356_hdr_quantiles" -> q356_sql,
-    "q358_friedman" -> q358_sql,
-    "q359_brown_forsythe" -> q359_sql,
-    "q360_cramer_von_mises" -> q360_sql,
-    "q361_energy_distance" -> q361_sql,
-    "q362_ljung_box" -> q362_sql,
-    "q363_runs_test" -> q363_sql,
-    "q364_hodges_lehmann" -> q364_sql,
-    "q365_cliffs_delta" -> q365_sql,
-    "q366_mood_median" -> q366_sql,
-    "q367_wilcoxon_signed" -> q367_sql,
-    "q370_pacf" -> q370_sql,
-    "q371_seasonality_strength" -> q371_sql,
-    "q372_cochrans_q" -> q372_sql,
-    "q374_ks_uniform" -> q374_sql,
-    "q375_sprt" -> q375_sql)
 }

@@ -30,9 +30,7 @@ import graft.llm.TextAnalysis
   * until ~2x10^12 tokens per group (N . 63 . 2^16 < 2^63); past that,
   * accumulate the product in DECIMAL(38,0) like q226/q238.
   */
-object InfoQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object InfoQueries extends Registry {
 
   private val il: Column => Column = Ilog2.ilog2
   private def dec(c: Column): Column = c.cast("decimal(38,0)")
@@ -1409,46 +1407,4 @@ object InfoQueries {
       |   // nullif((a + b) * (c + dd) * (a + c) * (b + dd), 0)) >= 3841459,
       |    false) AS significant
       |FROM t""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q312_ab_test" -> q312_ab_test,
-    "q311_kaplan_meier" -> q311_kaplan_meier,
-    "q305_roc_auc" -> q305_roc_auc,
-    "q302_fs_linkage" -> q302_fs_linkage,
-    "q298_ks_drift" -> q298_ks_drift,
-    "q299_rrf_fusion" -> q299_rrf_fusion,
-    "q296_pmi_collocations" -> q296_pmi_collocations,
-    "q291_retrieval_metrics" -> q291_retrieval_metrics,
-    "q293_rank_correlation" -> q293_rank_correlation,
-    "q289_ndcg" -> q289_ndcg,
-    "q271_entropy" -> q271_entropy,
-    "q272_chi2_features" -> q272_chi2_features,
-    "q276_mi_features" -> q276_mi_features,
-    "q282_nb_holdout" -> q282_nb_holdout,
-    "q285_jsd_drift" -> q285_jsd_drift,
-    "q283_curation_v11" -> q283_curation_v11,
-    "q273_nb_train" -> q273_nb_train,
-    "q274_nb_confusion" -> q274_nb_confusion,
-    "q275_bigram_xent" -> q275_bigram_xent)
-
-  val oracles: Map[String, String] = Map(
-    "q312_ab_test" -> q312_sql,
-    "q311_kaplan_meier" -> q311_sql,
-    "q305_roc_auc" -> q305_sql,
-    "q302_fs_linkage" -> q302_sql,
-    "q298_ks_drift" -> q298_sql,
-    "q299_rrf_fusion" -> q299_sql,
-    "q296_pmi_collocations" -> q296_sql,
-    "q291_retrieval_metrics" -> q291_sql,
-    "q293_rank_correlation" -> q293_sql,
-    "q289_ndcg" -> q289_sql,
-    "q271_entropy" -> q271_sql,
-    "q272_chi2_features" -> q272_sql,
-    "q276_mi_features" -> q276_sql,
-    "q282_nb_holdout" -> q282_sql,
-    "q285_jsd_drift" -> q285_sql,
-    "q283_curation_v11" -> q283_sql,
-    "q273_nb_train" -> q273_sql,
-    "q274_nb_confusion" -> q274_sql,
-    "q275_bigram_xent" -> q275_sql)
 }

@@ -24,9 +24,7 @@ import graft.llm.TextAnalysis
   * ONCE at the readout (per-digit quantization in q383 called out in
   * place), NULL fail-closed rows for degenerate groups.
   */
-object LexicalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object LexicalQueries extends Registry {
 
   private val dec = "decimal(38,0)"
 
@@ -649,28 +647,4 @@ object LexicalQueries {
       |    AS type_token_ppm
       |FROM nd JOIN occ USING (quarter) JOIN voc USING (quarter)
       |ORDER BY quarter""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q405_vocab_growth" -> q405_vocab_growth,
-    "q393_trimmed_mean" -> q393_trimmed_mean,
-    "q391_corpus_health" -> q391_corpus_health,
-    "q386_dedup_tokens" -> q386_dedup_tokens,
-    "q385_sqrt_mixture" -> q385_sqrt_mixture,
-    "q384_gini_lengths" -> q384_gini_lengths,
-    "q383_benford" -> q383_benford,
-    "q382_zipf_slope" -> q382_zipf_slope,
-    "q381_good_turing" -> q381_good_turing,
-    "q380_chao1_vocab" -> q380_chao1_vocab)
-
-  val oracles: Map[String, String] = Map(
-    "q405_vocab_growth" -> q405_sql,
-    "q393_trimmed_mean" -> q393_sql,
-    "q391_corpus_health" -> q391_sql,
-    "q386_dedup_tokens" -> q386_sql,
-    "q385_sqrt_mixture" -> q385_sql,
-    "q384_gini_lengths" -> q384_sql,
-    "q383_benford" -> q383_sql,
-    "q382_zipf_slope" -> q382_sql,
-    "q381_good_turing" -> q381_sql,
-    "q380_chao1_vocab" -> q380_sql)
 }

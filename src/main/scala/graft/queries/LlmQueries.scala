@@ -23,9 +23,7 @@ import graft.llm.{AllPairs, Bpe, CmsAgg, Curation, Dedup, Hll, Importance, Ivf, 
   *    so doubles match bit-for-bit;
   *  - counts are BIGINT on both sides.
   */
-object LlmQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object LlmQueries extends Registry {
 
   // shared oracle SQL fragments ------------------------------------------
 
@@ -984,59 +982,4 @@ object LlmQueries {
        |       agg.chars - r.n_chars AS removed_chars
        |FROM agg JOIN r USING (cluster_id) WHERE r.rn = 1
        |ORDER BY cluster_id""".stripMargin
-
-
-  val defs: Map[String, Q] = Map(
-    "q19_dedup_exact" -> q19_dedup_exact,
-    "q20_text_stats" -> q20_text_stats,
-    "q21_lang_id" -> q21_lang_id,
-    "q22_quality_fingerprint" -> q22_quality_fingerprint,
-    "q23_lsh_candidates" -> q23_lsh_candidates,
-    "q24_ngram_jaccard" -> q24_ngram_jaccard,
-    "q25_simhash" -> q25_simhash,
-    "q30_rolling_fingerprint" -> q30_rolling_fingerprint,
-    "q31_simhash_neardup" -> q31_simhash_neardup,
-    "q61_dedup_clusters" -> q61_dedup_clusters,
-    "q51_redaction" -> q51_redaction,
-    "q52_chunking" -> q52_chunking,
-    "q90_simhash64" -> q90_simhash64,
-    "q91_lsh_editdist" -> q91_lsh_editdist,
-    "q102_tfidf" -> q102_tfidf,
-    "q103_and_retrieval" -> q103_and_retrieval,
-    "q110_bm25_retrieval" -> q110_bm25_retrieval,
-    "q142_simhash_multiprobe" -> q142_simhash_multiprobe,
-    "q145_multiprobe_recall" -> q145_multiprobe_recall,
-    "q168_vocab_oov" -> q168_vocab_oov,
-    "q170_bpe_rounds" -> q170_bpe_rounds,
-    "q172_bpe_encode" -> q172_bpe_encode,
-    "q176_lsh_quality" -> q176_lsh_quality,
-    "q179_containment" -> q179_containment,
-    "q180_dedup_verified" -> q180_dedup_verified)
-
-  val oracles: Map[String, String] = Map(
-    "q19_dedup_exact" -> q19_sql,
-    "q20_text_stats" -> q20_sql,
-    "q21_lang_id" -> q21_sql,
-    "q22_quality_fingerprint" -> q22_sql,
-    "q23_lsh_candidates" -> q23_sql,
-    "q24_ngram_jaccard" -> q24_sql,
-    "q25_simhash" -> q25_sql,
-    "q30_rolling_fingerprint" -> q30_sql,
-    "q31_simhash_neardup" -> q31_sql,
-    "q61_dedup_clusters" -> q61_sql,
-    "q51_redaction" -> q51_sql,
-    "q52_chunking" -> q52_sql,
-    "q90_simhash64" -> q90_sql,
-    "q142_simhash_multiprobe" -> q142_sql,
-    "q145_multiprobe_recall" -> q145_sql,
-    "q91_lsh_editdist" -> q91_sql,
-    "q102_tfidf" -> q102_sql,
-    "q103_and_retrieval" -> q103_sql,
-    "q110_bm25_retrieval" -> q110_sql,
-    "q168_vocab_oov" -> q168_sql,
-    "q170_bpe_rounds" -> q170_sql,
-    "q172_bpe_encode" -> q172_sql,
-    "q176_lsh_quality" -> q176_sql,
-    "q179_containment" -> q179_sql,
-    "q180_dedup_verified" -> q180_sql)
 }

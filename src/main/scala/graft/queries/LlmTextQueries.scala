@@ -17,9 +17,7 @@ import graft.queries.LlmQueries.{ivfFixedCtes, lshCtes, shingleCtes, sqlDot, Lsh
   * shared CTE builders consumed here AND by [[CurationQueries]]
   * (`crossLshCtes`, `gopherStatCtes`, `c4LineCtes`, `DsirBuckets`, …)
   * move with the block. */
-object LlmTextQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object LlmTextQueries extends Registry {
 
   // ------------------------------------------------------------- curation
 
@@ -501,37 +499,4 @@ object LlmTextQueries {
       |       CASE WHEN coalesce(n.n_grams, 0) > 0
       |            THEN (n.n_novel * 1000000) // n.n_grams ELSE 0 END AS novelty_fp
       |FROM documents d LEFT JOIN n USING (doc_id) ORDER BY d.doc_id""".stripMargin
-
-
-  val defs: Map[String, Q] = Map(
-    "q112_repetition" -> q112_repetition,
-    "q113_span_dedup" -> q113_span_dedup,
-    "q119_lm_score" -> q119_lm_score,
-    "q120_incremental_dedup" -> q120_incremental_dedup,
-    "q122_nfc_normalize" -> q122_nfc_normalize,
-    "q126_semdedup" -> q126_semdedup,
-    "q130_cooccurrence" -> q130_cooccurrence,
-    "q132_lm_smoothed" -> q132_lm_smoothed,
-    "q134_dup_substrings" -> q134_dup_substrings,
-    "q141_lm_kneser_ney" -> q141_lm_kneser_ney,
-    "q154_dedup_keeper" -> q154_dedup_keeper,
-    "q158_bpe_pairs" -> q158_bpe_pairs,
-    "q159_jaccard_ppjoin" -> q159_jaccard_ppjoin,
-    "q162_ngram_novelty" -> q162_ngram_novelty)
-
-  val oracles: Map[String, String] = Map(
-    "q112_repetition" -> q112_sql,
-    "q113_span_dedup" -> q113_sql,
-    "q119_lm_score" -> q119_sql,
-    "q120_incremental_dedup" -> q120_sql,
-    "q122_nfc_normalize" -> q122_sql,
-    "q126_semdedup" -> q126_sql,
-    "q130_cooccurrence" -> q130_sql,
-    "q132_lm_smoothed" -> q132_sql,
-    "q134_dup_substrings" -> q134_sql,
-    "q141_lm_kneser_ney" -> q141_sql,
-    "q154_dedup_keeper" -> q154_sql,
-    "q158_bpe_pairs" -> q158_sql,
-    "q159_jaccard_ppjoin" -> q159_sql,
-    "q162_ngram_novelty" -> q162_sql)
 }

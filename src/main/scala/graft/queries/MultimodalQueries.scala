@@ -12,11 +12,9 @@ import graft.queries.LlmQueries._
   * (round-8 maintainability); shared oracle-SQL helpers stay in the
   * origin object(s) (LlmQueries) with
   * package-private visibility. Same contract as every registry:
-  * each `defs` entry has a DuckDB `oracles` twin with identical
+  * each `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical
   * column names and deterministic ordering. */
-object MultimodalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object MultimodalQueries extends Registry {
 
   // ------------------------------------------------------------- multimodal
   /** Multimodal feature extraction: binary payload + metadata struct →
@@ -322,22 +320,4 @@ object MultimodalQueries {
        |    AS bits_per_byte_fp16
        |FROM cg ORDER BY cls""".stripMargin
   }
-
-  val defs: Map[String, Q] = Map(
-    "q406_payload_entropy" -> q406_payload_entropy,
-    "q297_dhash_neardup" -> q297_dhash_neardup,
-    "q263_byte_classes" -> q263_byte_classes,
-    "q250_image_dhash" -> q250_image_dhash,
-    "q240_audio_energy" -> q240_audio_energy,
-    "q29_multimodal_features" -> q29_multimodal_features,
-    "q78_frame_features" -> q78_frame_features)
-
-  val oracles: Map[String, String] = Map(
-    "q406_payload_entropy" -> q406_sql,
-    "q297_dhash_neardup" -> q297_sql,
-    "q263_byte_classes" -> q263_sql,
-    "q250_image_dhash" -> q250_sql,
-    "q240_audio_energy" -> q240_sql,
-    "q29_multimodal_features" -> q29_sql,
-    "q78_frame_features" -> q78_sql)
 }

@@ -31,9 +31,7 @@ import graft.io.Tables
   * ppm arithmetic through DECIMAL(38,0) before any multiplication, safe
   * past 10^12-row classes.
   */
-object PrivacyQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object PrivacyQueries extends Registry {
 
   private val dec = "decimal(38,0)"
 
@@ -245,14 +243,4 @@ object PrivacyQueries {
       |  sum(CASE WHEN emd_ppm > 200000 THEN 1 ELSE 0 END)::BIGINT
       |    AS classes_over_t20
       |FROM e2 GROUP BY 1 ORDER BY event_type""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q346_k_anonymity" -> q346_k_anonymity,
-    "q347_l_diversity" -> q347_l_diversity,
-    "q348_t_closeness" -> q348_t_closeness)
-
-  val oracles: Map[String, String] = Map(
-    "q346_k_anonymity" -> q346_sql,
-    "q347_l_diversity" -> q347_sql,
-    "q348_t_closeness" -> q348_sql)
 }

@@ -22,9 +22,7 @@ import graft.queries.StreamingQueries._
   * resumes a new incarnation from the SAME checkpoint, and the recovered
   * cumulative output must hash-match the batch DuckDB oracle.
   */
-object RecoveryCertQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object RecoveryCertQueries extends Registry {
 
   /** q208's EWMA cert under CHECKPOINT RECOVERY — the thirty-third
     * streaming cert: two of the four (tsm, event_id)-ordered micro-batches
@@ -512,7 +510,7 @@ object RecoveryCertQueries {
   val q394_recovery_lsh: Q =
     StreamingQueries.q123Cert(recovered("q394_rec_lsh", firstN = 2))
   /** q23's batch LSH oracle verbatim — same as the continuous cert. */
-  val q394_sql: String = LlmQueries.oracles("q23_lsh_candidates")
+  val q394_sql: String = LlmQueries.q23_sql
 
   /** q146's streaming SimHash near-dup state under CHECKPOINT RECOVERY —
     * the TWENTY-FIRST recovery shape, completing the dedup-state pair:
@@ -600,8 +598,7 @@ object RecoveryCertQueries {
     import s.implicits._
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("text"))
-    val srcDir = stageOrderedBy(docs, d, "docsVocabOrdered4", 4,
-      Seq(col("doc_id")))
+    val srcDir = stageOrderedBy(docs, d, "docsAll4", 4, Seq(col("doc_id")))
     recovered("q408_rec_vocab", firstN = 2)(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => Streaming.vocabRegister(
         st.select(explode(graft.llm.TextAnalysis.tokens(col("text")))
@@ -617,54 +614,4 @@ object RecoveryCertQueries {
       |        string_split_regex(lower(text), '\W+'), x -> x <> ''))
       |        AS token FROM documents)
       |GROUP BY 1 ORDER BY token""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q408_recovery_vocab" -> q408_recovery_vocab,
-    "q400_recovery_ivf" -> q400_recovery_ivf,
-    "q394_recovery_lsh" -> q394_recovery_lsh,
-    "q395_recovery_simhash" -> q395_recovery_simhash,
-    "q313_recovery_ewma" -> q313_recovery_ewma,
-    "q314_recovery_hw" -> q314_recovery_hw,
-    "q315_recovery_moments" -> q315_recovery_moments,
-    "q322_recovery_sessions" -> q322_recovery_sessions,
-    "q323_recovery_join" -> q323_recovery_join,
-    "q335_recovery_kendall" -> q335_recovery_kendall,
-    "q339_recovery_hll" -> q339_recovery_hll,
-    "q340_recovery_cms" -> q340_recovery_cms,
-    "q341_recovery_kmv" -> q341_recovery_kmv,
-    "q344_recovery_priority" -> q344_recovery_priority,
-    "q354_recovery_kanon" -> q354_recovery_kanon,
-    "q357_recovery_hdr" -> q357_recovery_hdr,
-    "q369_recovery_dailysum" -> q369_recovery_dailysum,
-    "q376_recovery_sprt" -> q376_recovery_sprt,
-    "q377_recovery_cusum" -> q377_recovery_cusum,
-    "q378_recovery_dfa" -> q378_recovery_dfa,
-    "q379_recovery_drift" -> q379_recovery_drift,
-    "q387_recovery_mixture" -> q387_recovery_mixture,
-    "q390_recovery_benford" -> q390_recovery_benford)
-
-  val oracles: Map[String, String] = Map(
-    "q408_recovery_vocab" -> q408_sql,
-    "q400_recovery_ivf" -> q400_sql,
-    "q394_recovery_lsh" -> q394_sql,
-    "q395_recovery_simhash" -> q395_sql,
-    "q313_recovery_ewma" -> q313_sql,
-    "q314_recovery_hw" -> q314_sql,
-    "q315_recovery_moments" -> q315_sql,
-    "q322_recovery_sessions" -> q322_sql,
-    "q323_recovery_join" -> q323_sql,
-    "q335_recovery_kendall" -> q335_sql,
-    "q339_recovery_hll" -> q339_sql,
-    "q340_recovery_cms" -> q340_sql,
-    "q341_recovery_kmv" -> q341_sql,
-    "q344_recovery_priority" -> q344_sql,
-    "q354_recovery_kanon" -> q354_sql,
-    "q357_recovery_hdr" -> q357_sql,
-    "q369_recovery_dailysum" -> q369_sql,
-    "q376_recovery_sprt" -> q376_sql,
-    "q377_recovery_cusum" -> q377_sql,
-    "q378_recovery_dfa" -> q378_sql,
-    "q379_recovery_drift" -> q379_sql,
-    "q387_recovery_mixture" -> q387_sql,
-    "q390_recovery_benford" -> q390_sql)
 }

@@ -11,7 +11,7 @@ import graft.transform.Star
 
 /** Named, oracle-checked queries exercising the reference's relational
   * operator inventory (SURVEY.md §2) over the driver's TPC-H-ish testdata.
-  * Each `defs` entry has a DuckDB-equivalent `oracles` entry with IDENTICAL
+  * Each `q<N>_<name>` query has a DuckDB-equivalent `q<N>_sql` with IDENTICAL
   * output column names and an explicit ORDER BY, so the driver's
   * row/schema/hash compare is deterministic.
   *
@@ -23,9 +23,7 @@ import graft.transform.Star
   *  - surrogate keys are BIGINT on both sides;
   *  - ORDER BY uses NULLS FIRST explicitly (Spark's ASC default).
   */
-object RelationalQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object RelationalQueries extends Registry {
 
   /** Exact decimal-accumulated sum of a double expression, surfaced as
     * double: identical across engines regardless of partial-agg order. */
@@ -1300,100 +1298,4 @@ object RelationalQueries {
       |          WHERE NOT (l_discount >= 0 AND l_discount <= 0.1))::BIGINT)
       |SELECT check_name, total, violations, violations = 0 AS pass
       |FROM checks ORDER BY check_name""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q290_dq_suite" -> q290_dq_suite,
-    "q204_schema_evolution" -> q204_schema_evolution,
-    "q01_summary" -> q01_summary,
-    "q02_pricing_summary" -> q02_pricing_summary,
-    "q03_derived" -> q03_derived,
-    "q04_fixed_bins" -> q04_fixed_bins,
-    "q05_quantile_bins" -> q05_quantile_bins,
-    "q144_qcut_approx" -> q144_qcut_approx,
-    "q06_currency_clean" -> q06_currency_clean,
-    "q07_word_map" -> q07_word_map,
-    "q08_stock_parse" -> q08_stock_parse,
-    "q09_url_rewrite" -> q09_url_rewrite,
-    "q10_star_schema" -> q10_star_schema,
-    "q11_nullsafe_join" -> q11_nullsafe_join,
-    "q12_distinct" -> q12_distinct,
-    "q13_surrogate_keys" -> q13_surrogate_keys,
-    "q14_exact_quantiles" -> q14_exact_quantiles,
-    "q15_top20" -> q15_top20,
-    "q16_join_multi" -> q16_join_multi,
-    "q34_rollup" -> q34_rollup,
-    "q36_json_props" -> q36_json_props,
-    "q37_filtered_agg" -> q37_filtered_agg,
-    "q38_semi_join" -> q38_semi_join,
-    "q39_anti_join" -> q39_anti_join,
-    "q40_outer_join" -> q40_outer_join,
-    "q41_set_ops" -> q41_set_ops,
-    "q42_scalar_subquery" -> q42_scalar_subquery,
-    "q43_cube" -> q43_cube,
-    "q44_pivot" -> q44_pivot,
-    "q45_collect_sorted" -> q45_collect_sorted,
-    "q46_grouping_sets" -> q46_grouping_sets,
-    "q47_monthly_revenue" -> q47_monthly_revenue,
-    "q48_word_count" -> q48_word_count,
-    "q49_asof_attribution" -> q49_asof_attribution,
-    "q50_range_join" -> q50_range_join,
-    "q60_salted_join" -> q60_salted_join,
-    "q81_asof_forward" -> q81_asof_forward,
-    "q93_json_roundtrip" -> q93_json_roundtrip,
-    "q94_orc_roundtrip" -> q94_orc_roundtrip,
-    "q96_scd2_merge" -> q96_scd2_merge,
-    "q97_zorder_skipping" -> q97_zorder_skipping,
-    "q100_table_diff" -> q100_table_diff,
-    "q101_profile" -> q101_profile,
-    "q104_partitioned_scan" -> q104_partitioned_scan,
-    "q157_bucketed_join" -> q157_bucketed_join,
-    "q174_compaction" -> q174_compaction)
-
-  val oracles: Map[String, String] = Map(
-    "q290_dq_suite" -> q290_sql,
-    "q01_summary" -> q01_sql,
-    "q02_pricing_summary" -> q02_sql,
-    "q03_derived" -> q03_sql,
-    "q04_fixed_bins" -> q04_sql,
-    "q05_quantile_bins" -> q05_sql,
-    "q144_qcut_approx" -> q144_sql,
-    "q06_currency_clean" -> q06_sql,
-    "q07_word_map" -> q07_sql,
-    "q08_stock_parse" -> q08_sql,
-    "q09_url_rewrite" -> q09_sql,
-    "q10_star_schema" -> q10_sql,
-    "q11_nullsafe_join" -> q11_sql,
-    "q12_distinct" -> q12_sql,
-    "q13_surrogate_keys" -> q13_sql,
-    "q14_exact_quantiles" -> q14_sql,
-    "q15_top20" -> q15_sql,
-    "q16_join_multi" -> q16_sql,
-    "q34_rollup" -> q34_sql,
-    "q36_json_props" -> q36_sql,
-    "q37_filtered_agg" -> q37_sql,
-    "q38_semi_join" -> q38_sql,
-    "q39_anti_join" -> q39_sql,
-    "q40_outer_join" -> q40_sql,
-    "q41_set_ops" -> q41_sql,
-    "q42_scalar_subquery" -> q42_sql,
-    "q43_cube" -> q43_sql,
-    "q44_pivot" -> q44_sql,
-    "q45_collect_sorted" -> q45_sql,
-    "q46_grouping_sets" -> q46_sql,
-    "q47_monthly_revenue" -> q47_sql,
-    "q48_word_count" -> q48_sql,
-    "q49_asof_attribution" -> q49_sql,
-    "q50_range_join" -> q50_sql,
-    "q60_salted_join" -> q60_sql,
-    "q81_asof_forward" -> q81_sql,
-    "q93_json_roundtrip" -> q93_sql,
-    "q94_orc_roundtrip" -> q94_sql,
-    "q96_scd2_merge" -> q96_sql,
-    "q97_zorder_skipping" -> q97_sql,
-    "q100_table_diff" -> q100_sql,
-    "q101_profile" -> q101_sql,
-    "q104_partitioned_scan" -> q104_sql,
-    "q157_bucketed_join" -> q157_sql,
-    "q174_compaction" -> q174_sql,
-    "q204_schema_evolution" -> q204_sql)
 }

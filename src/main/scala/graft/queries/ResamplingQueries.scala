@@ -15,12 +15,10 @@ import graft.io.Tables
   * map-side-combinable groupBy over a ×B explode) and the jackknife
   * deletes BLOCKS (sources), reducing the corpus to |sources| rows
   * before any readout math. Same contract as every registry: each
-  * `defs` entry has a DuckDB `oracles` twin with identical column names
+  * `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical column names
   * and deterministic ordering, exact integer / DECIMAL(38,0) arithmetic
   * throughout. */
-object ResamplingQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object ResamplingQueries extends Registry {
 
   private val dec = "decimal(38,0)"
 
@@ -186,12 +184,4 @@ object ResamplingQueries {
       |   // nullif(s_cnt::HUGEINT * s_cnt * s_cnt, 0))::BIGINT
       |    AS var_jack_ppm2
       |FROM l2 CROSS JOIN st ORDER BY source""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q343_jackknife_sources" -> q343_jackknife_sources,
-    "q342_bootstrap_se" -> q342_bootstrap_se)
-
-  val oracles: Map[String, String] = Map(
-    "q343_jackknife_sources" -> q343_sql,
-    "q342_bootstrap_se" -> q342_sql)
 }

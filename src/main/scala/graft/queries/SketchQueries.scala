@@ -17,11 +17,9 @@ import graft.queries.LlmQueries._
   * (round-8 maintainability); shared oracle-SQL helpers stay in the
   * origin object(s) (RelationalQueries / LlmQueries) with
   * package-private visibility. Same contract as every registry:
-  * each `defs` entry has a DuckDB `oracles` twin with identical
+  * each `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical
   * column names and deterministic ordering. */
-object SketchQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object SketchQueries extends Registry {
 
   // ----------------------------------------------------- bloom prefilter
   /** Revenue by return flag for lines from one nation's suppliers, with the
@@ -691,32 +689,4 @@ object SketchQueries {
       |       ((n * n * s3 - 3 * n * s1 * s2 + 2 * s1 * s1 * s1)
       |        // (n * n * n))::BIGINT AS m3
       |FROM w ORDER BY event_type, week""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q306_moments_sketch" -> q306_moments_sketch,
-    "q277_weighted_minhash" -> q277_weighted_minhash,
-    "q259_kmv_difference" -> q259_kmv_difference,
-    "q242_bitmap_retention" -> q242_bitmap_retention,
-    "q235_join_size_cms" -> q235_join_size_cms,
-    "q226_bitmap_distinct" -> q226_bitmap_distinct,
-    "q109_bloom_prefilter" -> q109_bloom_prefilter,
-    "q251_hll_intersection" -> q251_hll_intersection,
-    "q227_hll_rollup" -> q227_hll_rollup,
-    "q215_kmv_overlap" -> q215_kmv_overlap,
-    "q107_cms_heavy_hitters" -> q107_cms_heavy_hitters,
-    "q108_hll_distinct" -> q108_hll_distinct)
-
-  val oracles: Map[String, String] = Map(
-    "q306_moments_sketch" -> q306_sql,
-    "q277_weighted_minhash" -> q277_sql,
-    "q259_kmv_difference" -> q259_sql,
-    "q109_bloom_prefilter" -> q109_sql,
-    "q226_bitmap_distinct" -> q226_sql,
-    "q235_join_size_cms" -> q235_sql,
-    "q242_bitmap_retention" -> q242_sql,
-    "q251_hll_intersection" -> q251_sql,
-    "q227_hll_rollup" -> q227_sql,
-    "q107_cms_heavy_hitters" -> q107_sql,
-    "q108_hll_distinct" -> q108_sql,
-    "q215_kmv_overlap" -> q215_sql)
 }

@@ -20,10 +20,7 @@ import graft.queries.StreamingQueries._
   * unchanged: each certification is a real multi-micro-batch run whose
   * final output hash-matches a batch DuckDB oracle.
   */
-object StreamingCertQueries {
-
-  type Q = (SparkSession, String) => DataFrame
-
+object StreamingCertQueries extends Registry {
 
   /** Stateful streaming last-touch attribution — the twentieth streaming
     * cert: [[Streaming.lastTouchAttribution]] carries each user's latest
@@ -569,36 +566,4 @@ object StreamingCertQueries {
   }
   /** Same oracle as the batch grid τ-b. */
   val q333_sql: String = EvalQueries.q327_sql
-
-  val defs: Map[String, Q] = Map(
-    "q229_stream_attribution" -> q229_stream_attribution,
-    "q232_stream_covisit" -> q232_stream_covisit,
-    "q234_stream_hll" -> q234_stream_hll,
-    "q239_stream_cms" -> q239_stream_cms,
-    "q246_stream_concurrency" -> q246_stream_concurrency,
-    "q264_stream_kmv" -> q264_stream_kmv,
-    "q265_stream_holt" -> q265_stream_holt,
-    "q268_stream_priority_sample" -> q268_stream_priority_sample,
-    "q278_stream_nb" -> q278_stream_nb,
-    "q284_stream_hw" -> q284_stream_hw,
-    "q295_stream_retention" -> q295_stream_retention,
-    "q303_stream_funnel" -> q303_stream_funnel,
-    "q307_stream_moments" -> q307_stream_moments,
-    "q333_stream_kendall" -> q333_stream_kendall)
-
-  val oracles: Map[String, String] = Map(
-    "q229_stream_attribution" -> q229_sql,
-    "q232_stream_covisit" -> q232_sql,
-    "q234_stream_hll" -> q234_sql,
-    "q239_stream_cms" -> q239_sql,
-    "q246_stream_concurrency" -> q246_sql,
-    "q264_stream_kmv" -> q264_sql,
-    "q265_stream_holt" -> q265_sql,
-    "q268_stream_priority_sample" -> q268_sql,
-    "q278_stream_nb" -> q278_sql,
-    "q284_stream_hw" -> q284_sql,
-    "q295_stream_retention" -> q295_sql,
-    "q303_stream_funnel" -> q303_sql,
-    "q307_stream_moments" -> q307_sql,
-    "q333_stream_kendall" -> q333_sql)
 }

@@ -38,9 +38,7 @@ import graft.streaming.Streaming
   * with `readStream` on the live source and a real sink
   * ([[graft.streaming.Streaming.microBatch]]).
   */
-object StreamingQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object StreamingQueries extends Registry {
 
   /** Session gap — must match q32's 30 minutes for oracle parity. */
   val GapMs: Long = 30 * 60 * 1000L
@@ -624,7 +622,7 @@ object StreamingQueries {
 
   /** q114's oracle verbatim — the streaming gate must reproduce the batch
     * contamination audit exactly. */
-  val q117_sql: String = graft.queries.CurationQueries.oracles("q114_contamination")
+  val q117_sql: String = CurationQueries.q114_sql
 
   /** Streaming MinHash-LSH near-dup candidate generation, oracle-checked
     * against q23's batch SQL: the corpus replays as four doc_id-range
@@ -665,7 +663,7 @@ object StreamingQueries {
 
   /** q23's oracle verbatim — the streaming pair set must reproduce the
     * batch LSH candidate self-join exactly. */
-  val q123_sql: String = graft.queries.LlmQueries.oracles("q23_lsh_candidates")
+  val q123_sql: String = LlmQueries.q23_sql
 
   /** Streaming quality-classifier gate: the corpus replays as four
     * doc_id-range micro-batches through the STATELESS literal-weights
@@ -690,7 +688,7 @@ object StreamingQueries {
 
   /** q136's oracle verbatim — the streaming gate must reproduce the batch
     * classifier inference exactly. */
-  val q139_sql: String = graft.queries.CurationQueries.oracles("q136_quality_classifier")
+  val q139_sql: String = CurationQueries.q136_sql
 
   /** Streaming SimHash near-dup certification — the ninth streaming cert:
     * fingerprints and band keys are computed ROW-LOCALLY per arriving doc
@@ -781,7 +779,8 @@ object StreamingQueries {
     * its continuous cert's staged dir. Same mtime-stamping discipline as
     * [[stageTimeOrdered]], minus the event-time bounds and sentinels,
     * which an unwatermarked stateful op doesn't use. Memoized per
-    * (sfDir, key). */
+    * (sfDir, key); a key names one staged frame, so certs that replay the
+    * same frame share its key and its files. */
   private[queries] def stageOrderedBy(df: DataFrame, d: String, key: String,
                              parts: Int,
                              orderCols: Seq[org.apache.spark.sql.Column]): String =
@@ -802,7 +801,7 @@ object StreamingQueries {
     import s.implicits._
     val docs = Tables.widen(Tables.documents(s, d))
       .select(col("doc_id"), col("source"))
-    val srcDir = stageOrderedBy(docs, d, "docsIdOrdered4", 4, Seq(col("doc_id")))
+    val srcDir = stageOrderedBy(docs, d, "docsrc4", 4, Seq(col("doc_id")))
     live("q152_cap")(s, Seq(srcDir -> docs.schema)) {
       case Seq(st) => Streaming.admitFirstK(
         st.select(col("source"), col("doc_id")).as[Streaming.SourceDoc], 30L).toDF()
@@ -1148,46 +1147,4 @@ object StreamingQueries {
   }
   /** Same oracle as the batch fold — the certification IS the equality. */
   val q218_sql: String = AnalyticsQueries.q210_sql
-
-  val defs: Map[String, Q] = Map(
-    "q218_stream_dfa" -> q218_stream_dfa,
-    "q208_stream_ewma" -> q208_stream_ewma,
-    "q212_stream_cusum" -> q212_stream_cusum,
-    "q196_stream_late_data" -> q196_stream_late_data,
-    "q198_stream_static_join" -> q198_stream_static_join,
-    "q188_stream_drift" -> q188_stream_drift,
-    "q65_stream_sessions" -> q65_stream_sessions,
-    "q74_stream_windows" -> q74_stream_windows,
-    "q75_stream_dedup" -> q75_stream_dedup,
-    "q80_stream_stream_join" -> q80_stream_stream_join,
-    "q98_stream_scd2" -> q98_stream_scd2,
-    "q117_stream_contamination" -> q117_stream_contamination,
-    "q123_stream_lsh" -> q123_stream_lsh,
-    "q139_stream_quality" -> q139_stream_quality,
-    "q146_stream_simhash" -> q146_stream_simhash,
-    "q152_stream_source_cap" -> q152_stream_source_cap,
-    "q164_stream_token_budget" -> q164_stream_token_budget,
-    "q173_stream_oov" -> q173_stream_oov,
-    "q178_stream_sliding" -> q178_stream_sliding)
-
-  val oracles: Map[String, String] = Map(
-    "q65_stream_sessions" -> q65_sql,
-    "q74_stream_windows" -> q74_sql,
-    "q75_stream_dedup" -> q75_sql,
-    "q80_stream_stream_join" -> q80_sql,
-    "q98_stream_scd2" -> q98_sql,
-    "q117_stream_contamination" -> q117_sql,
-    "q123_stream_lsh" -> q123_sql,
-    "q139_stream_quality" -> q139_sql,
-    "q146_stream_simhash" -> q146_sql,
-    "q152_stream_source_cap" -> q152_sql,
-    "q164_stream_token_budget" -> q164_sql,
-    "q173_stream_oov" -> q173_sql,
-    "q178_stream_sliding" -> q178_sql,
-    "q188_stream_drift" -> q188_sql,
-    "q196_stream_late_data" -> q196_sql,
-    "q198_stream_static_join" -> q198_sql,
-    "q208_stream_ewma" -> q208_sql,
-    "q212_stream_cusum" -> q212_sql,
-    "q218_stream_dfa" -> q218_sql)
 }

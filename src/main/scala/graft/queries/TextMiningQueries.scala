@@ -14,12 +14,10 @@ import graft.queries.LlmQueries._
   * winnowing family — split out of the monolithic [[LlmQueries]] registry
   * (round-9 maintainability: no non-test source file over 2000 lines).
   * Shared oracle-SQL helpers stay in [[LlmQueries]] with package-private
-  * visibility; contract unchanged — every `defs` entry has a DuckDB
-  * `oracles` twin with identical column names and deterministic ordering.
+  * visibility; contract unchanged — every `q<N>_<name>` query has a DuckDB
+  * `q<N>_sql` twin with identical column names and deterministic ordering.
   */
-object TextMiningQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object TextMiningQueries extends Registry {
 
   /** Per-source lexical diversity — [[TextAnalysis.typeTokenStats]]:
     * type-token ratio and hapax share from ONE vocabulary-bounded
@@ -706,36 +704,4 @@ object TextMiningQueries {
       |                JOIN k kb ON kb.doc_id = cand.doc_b)
       |SELECT doc_a, doc_b, dist FROM v WHERE dist <= 12
       |ORDER BY doc_a, doc_b""".stripMargin
-
-  val defs: Map[String, Q] = Map(
-    "q308_ols_multi" -> q308_ols_multi,
-    "q309_edit_distance_join" -> q309_edit_distance_join,
-    "q300_textrank" -> q300_textrank,
-    "q301_proximity_search" -> q301_proximity_search,
-    "q294_minhash_calibration" -> q294_minhash_calibration,
-    "q186_ttr_hapax" -> q186_ttr_hapax,
-    "q209_snm_blocking" -> q209_snm_blocking,
-    "q249_gap_stats" -> q249_gap_stats,
-    "q236_positional_index" -> q236_positional_index,
-    "q223_chisq_independence" -> q223_chisq_independence,
-    "q256_phrase_search" -> q256_phrase_search,
-    "q261_zipf_buckets" -> q261_zipf_buckets,
-    "q269_winnowing" -> q269_winnowing,
-    "q270_winnowing_match" -> q270_winnowing_match)
-
-  val oracles: Map[String, String] = Map(
-    "q308_ols_multi" -> q308_sql,
-    "q309_edit_distance_join" -> q309_sql,
-    "q300_textrank" -> q300_sql,
-    "q301_proximity_search" -> q301_sql,
-    "q294_minhash_calibration" -> q294_sql,
-    "q186_ttr_hapax" -> q186_sql,
-    "q209_snm_blocking" -> q209_sql,
-    "q249_gap_stats" -> q249_sql,
-    "q236_positional_index" -> q236_sql,
-    "q223_chisq_independence" -> q223_sql,
-    "q256_phrase_search" -> q256_sql,
-    "q261_zipf_buckets" -> q261_sql,
-    "q269_winnowing" -> q269_sql,
-    "q270_winnowing_match" -> q270_sql)
 }

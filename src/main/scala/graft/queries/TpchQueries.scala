@@ -14,11 +14,9 @@ import graft.queries.RelationalQueries._
   * (round-8 maintainability); shared oracle-SQL helpers stay in the
   * origin object(s) (RelationalQueries) with
   * package-private visibility. Same contract as every registry:
-  * each `defs` entry has a DuckDB `oracles` twin with identical
+  * each `q<N>_<name>` query has a DuckDB `q<N>_sql` twin with identical
   * column names and deterministic ordering. */
-object TpchQueries {
-
-  type Q = (SparkSession, String) => DataFrame
+object TpchQueries extends Registry {
 
   // --------------------------------------- correlated scalar subquery (Q17)
   /** TPC-H Q17 shape: revenue from small-quantity lines of one brand, where
@@ -746,51 +744,4 @@ object TpchQueries {
       |  JOIN part ON p_partkey = l_partkey AND p_size < 10
       |  WHERE pair_qty > half_qty)
       |ORDER BY s_suppkey""".stripMargin
-
-
-  val defs: Map[String, Q] = Map(
-    "q57_small_qty_revenue" -> q57_small_qty_revenue,
-    "q58_big_orders" -> q58_big_orders,
-    "q59_supplier_returns" -> q59_supplier_returns,
-    "q62_order_priority" -> q62_order_priority,
-    "q63_custdist" -> q63_custdist,
-    "q64_min_cost_supplier" -> q64_min_cost_supplier,
-    "q66_shipping_priority" -> q66_shipping_priority,
-    "q67_local_supplier_volume" -> q67_local_supplier_volume,
-    "q68_returned_items" -> q68_returned_items,
-    "q69_late_lines_priority" -> q69_late_lines_priority,
-    "q70_promo_revenue" -> q70_promo_revenue,
-    "q71_brand_envelopes" -> q71_brand_envelopes,
-    "q72_supplier_dist" -> q72_supplier_dist,
-    "q73_dormant_customers" -> q73_dormant_customers,
-    "q82_market_share" -> q82_market_share,
-    "q83_important_parts" -> q83_important_parts,
-    "q84_top_supplier" -> q84_top_supplier,
-    "q86_forecast_revenue" -> q86_forecast_revenue,
-    "q87_volume_shipping" -> q87_volume_shipping,
-    "q88_product_profit" -> q88_product_profit,
-    "q89_excess_suppliers" -> q89_excess_suppliers)
-
-  val oracles: Map[String, String] = Map(
-    "q57_small_qty_revenue" -> q57_sql,
-    "q58_big_orders" -> q58_sql,
-    "q59_supplier_returns" -> q59_sql,
-    "q62_order_priority" -> q62_sql,
-    "q63_custdist" -> q63_sql,
-    "q64_min_cost_supplier" -> q64_sql,
-    "q66_shipping_priority" -> q66_sql,
-    "q67_local_supplier_volume" -> q67_sql,
-    "q68_returned_items" -> q68_sql,
-    "q69_late_lines_priority" -> q69_sql,
-    "q70_promo_revenue" -> q70_sql,
-    "q71_brand_envelopes" -> q71_sql,
-    "q72_supplier_dist" -> q72_sql,
-    "q73_dormant_customers" -> q73_sql,
-    "q82_market_share" -> q82_sql,
-    "q83_important_parts" -> q83_sql,
-    "q84_top_supplier" -> q84_sql,
-    "q86_forecast_revenue" -> q86_sql,
-    "q87_volume_shipping" -> q87_sql,
-    "q88_product_profit" -> q88_sql,
-    "q89_excess_suppliers" -> q89_sql)
 }

@@ -1,7 +1,8 @@
 package graft
 
 import graft.llm.{DotProduct, NearestCell}
-import graft.operators.ConnectedComponents
+import graft.operators.{Bfs, ConnectedComponents, KCore, Lpa}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 
@@ -30,13 +31,36 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("propagation leaves only the returned labels persisted") {
+  test("each graph loop leaves only what its result reads persisted") {
     val sc = spark.sparkContext
-    val persisted = sc.getPersistentRDDs.keySet
-    val labels = ConnectedComponents.components(mixedGraph, "a", "b")
-    assert(labels.as[(Long, Long)].collect().sorted.toSeq == expected)
-    // compared by id: the context cleaner may drop other suites' RDDs meanwhile
-    assert((sc.getPersistentRDDs.keys.toSet -- persisted).size <= 1)
+    val seed = Seq(1L).toDF("node")
+    val near1 = Seq(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 2L)
+    // (call, its result, the checkpoints that result may keep): KCore's
+    // result reads its last edge set, componentsStar's its last edge set
+    // and its node set; every other result is itself the one checkpoint
+    val calls: Seq[(String, () => DataFrame, Seq[(Long, Long)], Int)] = Seq(
+      ("components", () => ConnectedComponents.components(mixedGraph, "a", "b"), expected, 1),
+      // a 64-node path: star contraction runs ~log n rounds on it
+      ("componentsStar", () => ConnectedComponents.componentsStar(
+        (0L until 63L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b"),
+        (0L until 64L).map(_ -> 0L), 2),
+      ("Bfs.hops", () => Bfs.hops(mixedGraph, "a", "b", seed, rounds = 3), near1, 1),
+      ("Bfs.sssp", () => Bfs.sssp(mixedGraph.withColumn("w", lit(1L)), "a", "b", "w", seed,
+        rounds = 3), near1, 1),
+      ("Lpa.communities", () => Lpa.communities(mixedGraph, "a", "b", rounds = 2), Seq(
+        1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 1L, 10L -> 10L, 11L -> 11L,
+        20L -> 20L, 21L -> 21L, 22L -> 20L, 23L -> 21L, 24L -> 22L, 30L -> 30L, 31L -> 31L), 1),
+      ("KCore.peel", () => KCore.peel(mixedGraph, "a", "b", k = 2),
+        Seq(1L -> 2L, 2L -> 2L, 3L -> 2L), 1))
+    calls.foreach { case (name, call, rows, kept) =>
+      val persisted = sc.getPersistentRDDs.keySet
+      val out = call()
+      // collected after the call: a released block the result reads would fail here
+      assert(out.as[(Long, Long)].collect().sorted.toSeq == rows, name)
+      // compared by id: the context cleaner may drop other suites' RDDs meanwhile
+      val added = (sc.getPersistentRDDs.keys.toSet -- persisted).size
+      assert(added <= kept, s"$name left $added checkpoints persisted, allowed $kept")
+    }
   }
 
   test("large-star/small-star produces identical output to propagation") {

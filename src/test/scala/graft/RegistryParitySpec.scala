@@ -2,6 +2,22 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.queries.Registry
+
+/** A family whose query has no `q<N>_sql` oracle. */
+object MissingOracleFamily extends Registry {
+  val q9999_x: Q = (s, _) => s.emptyDataFrame
+}
+
+/** Members that look like queries but are not: a `q<N>_sql` string and a
+  * parameterised twin body. `q2_ok` is the one real query. */
+object LookAlikeFamily extends Registry {
+  val q1_sql: String = "SELECT 1"
+  def q1Cert(run: Int): Q = (s, _) => s.emptyDataFrame
+  val q2_ok: Q = (s, _) => s.emptyDataFrame
+  val q2_sql: String = "SELECT 2"
+}
+
 /** The registry split discipline (no non-test file over ~1500 lines) keeps
   * moving query families between objects; this spec makes the re-wiring
   * mechanical. It needs no Spark session — pure map algebra over the
@@ -16,45 +32,32 @@ class RegistryParitySpec extends AnyFunSuite {
     assert((o -- q).isEmpty, s"oracles without query: ${(o -- q).toSeq.sorted}")
   }
 
-  test("the registry never shrinks (399 at end of round 13)") {
-    assert(SparkEntry.queries.size >= 399,
+  test("the registry never shrinks (408 queries)") {
+    assert(SparkEntry.queries.size >= 408,
       s"registry shrank to ${SparkEntry.queries.size} — a family split dropped entries")
   }
 
   test("no family silently shadows another's query name") {
-    val families: Seq[(String, Map[String, _])] = Seq(
-      "Relational" -> graft.queries.RelationalQueries.defs,
-      "Tpch" -> graft.queries.TpchQueries.defs,
-      "Analytics" -> graft.queries.AnalyticsQueries.defs,
-      "Forecast" -> graft.queries.ForecastQueries.defs,
-      "Graph" -> graft.queries.GraphQueries.defs,
-      "Sketch" -> graft.queries.SketchQueries.defs,
-      "Llm" -> graft.queries.LlmQueries.defs,
-      "TextMining" -> graft.queries.TextMiningQueries.defs,
-      "LlmText" -> graft.queries.LlmTextQueries.defs,
-      "Ann" -> graft.queries.AnnQueries.defs,
-      "Curation" -> graft.queries.CurationQueries.defs,
-      "CurationAudit" -> graft.queries.CurationAuditQueries.defs,
-      "Multimodal" -> graft.queries.MultimodalQueries.defs,
-      "Info" -> graft.queries.InfoQueries.defs,
-      "Eval" -> graft.queries.EvalQueries.defs,
-      "AgreementTest" -> graft.queries.AgreementTestQueries.defs,
-      "Resampling" -> graft.queries.ResamplingQueries.defs,
-      "Lexical" -> graft.queries.LexicalQueries.defs,
-      "Privacy" -> graft.queries.PrivacyQueries.defs,
-      "Calibration" -> graft.queries.CalibrationQueries.defs,
-      "ClusterQuality" -> graft.queries.ClusterQualityQueries.defs,
-      "Experiment" -> graft.queries.ExperimentQueries.defs,
-      "Hypothesis" -> graft.queries.HypothesisQueries.defs,
-      "HypothesisComposition" -> graft.queries.HypothesisCompositionQueries.defs,
-      "Streaming" -> graft.queries.StreamingQueries.defs,
-      "StreamingCert" -> graft.queries.StreamingCertQueries.defs,
-      "RecoveryCert" -> graft.queries.RecoveryCertQueries.defs)
-    val dup = families.flatMap { case (f, m) => m.keys.map(_ -> f) }
+    val families = SparkEntry.families
+    assert(families.distinct.size == families.size, "a family is listed twice")
+    val dup = families.flatMap(f => f.defs.keys.map(_ -> f.getClass.getSimpleName.stripSuffix("$")))
       .groupBy(_._1).filter(_._2.size > 1)
     assert(dup.isEmpty, s"duplicate query names across families: " +
       dup.map { case (k, fs) => s"$k in ${fs.map(_._2).mkString("+")}" }.mkString("; "))
     // the union really is the sum — ++ can't have swallowed anything
-    assert(families.map(_._2.size).sum == SparkEntry.queries.size)
+    assert(families.map(_.defs.size).sum == SparkEntry.queries.size)
+  }
+
+  test("a query without its q<N>_sql oracle fails the registry, naming the query") {
+    val e = intercept[IllegalStateException](MissingOracleFamily.defs)
+    assert(e.getMessage.contains("q9999_x"), e.getMessage)
+    assert(e.getMessage.contains("q9999_sql"), e.getMessage)
+    intercept[IllegalStateException](MissingOracleFamily.oracles)
+  }
+
+  test("only parameterless q<N>_<name>: Q members are registered") {
+    assert(LookAlikeFamily.defs.keySet == Set("q2_ok"))
+    assert(LookAlikeFamily.defs("q2_ok") eq LookAlikeFamily.q2_ok)
+    assert(LookAlikeFamily.oracles == Map("q2_ok" -> "SELECT 2"))
   }
 }

@@ -9,10 +9,10 @@ are about to commit:
 
     python3 tools/bench_coverage.py BENCH_local_r9_idle.json
 
-Exit 0 = the artifact covers every query name found in the registries
-(pattern `"qNNN_*" ->` in src/main/scala/graft/queries/*.scala — the map
-keys of each family's `defs`/`oracles`, which SparkEntry assembles
-verbatim). Exit 1 = names missing from the artifact (re-record the bench)
+Exit 0 = the artifact covers every query name declared in the registries
+(pattern `val qNNN_<name>: Q` in src/main/scala/graft/queries/*.scala — the
+declarations each family's `defs` is derived from, which SparkEntry
+assembles verbatim). Exit 1 = names missing from the artifact (re-record the bench)
 or stale names present only in the artifact (query was renamed/removed).
 Also refuses artifacts recorded under load (load_before[0] > 1.5) — a full
 row set of untrustworthy numbers is still a gap.
@@ -29,7 +29,7 @@ def registry_names():
     names = set()
     for path in glob.glob("src/main/scala/graft/queries/*.scala"):
         with open(path) as f:
-            names.update(re.findall(r'"(q\d+[A-Za-z0-9_]*)" ->', f.read()))
+            names.update(re.findall(r'^\s*val (q\d+_\w+): Q\b', f.read(), re.M))
     return names
 
 
