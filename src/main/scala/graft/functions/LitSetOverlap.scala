@@ -89,7 +89,17 @@ case class LitSetOverlap(child: Expression, set: IndexedSeq[String])
 }
 
 object LitSetOverlap {
-  /** Column-API form: how many elements of `arr` are in `set`. */
-  def overlapCount(arr: Column, set: Seq[String]): Column =
+  /** Largest set [[overlapCount]] accepts. The set travels inside the plan
+    * (serialized with every task) and is rebuilt as a hash table per task,
+    * so it must stay a literal-sized set; q117 passes about 15k grams. */
+  val MaxSetSize: Int = 1000000
+
+  /** Column-API form: how many elements of `arr` are in `set`, for a set
+    * of at most [[MaxSetSize]] entries (a larger one fails here, before
+    * any plan is built). */
+  def overlapCount(arr: Column, set: Seq[String]): Column = {
+    require(set.size <= MaxSetSize,
+      s"LitSetOverlap set has ${set.size} entries, over the cap of $MaxSetSize")
     ColumnBridge.column(LitSetOverlap(ColumnBridge.expression(arr), set.toIndexedSeq))
+  }
 }

@@ -14,7 +14,7 @@ import graft.queries.StreamingQueries._
   * [[StreamingQueries]] (round-9 maintainability: no non-test source file
   * over 2000 lines). Every cert here runs through the continuous
   * [[StreamingQueries.live]] harness; that harness and the staging harness (`Stage`,
-  * `stageOrderedBy`, `withCertStatePartitions`) live in
+  * `stageOrderedBy`, `withCertConf`) live in
   * [[StreamingQueries]] with package-private visibility, so staged replay
   * corpora remain memoized ACROSS the streaming registries. Contract
   * unchanged: each certification is a real multi-micro-batch run whose

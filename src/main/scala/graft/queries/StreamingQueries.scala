@@ -210,35 +210,49 @@ object StreamingQueries extends Registry {
       (lo, hi)
     }
 
-  /** Run a streaming certification with a small state-partition count: the
-    * stateful operators' partitioning is fixed at CHECKPOINT CREATION from
-    * `spark.sql.shuffle.partitions`, and every micro-batch writes one
-    * state-store delta file per partition per stateful op — at 32
-    * partitions the bounded replay spends more time on state-store I/O
-    * than on data. 8 suits the certification corpus — re-A/B'd in round 16
-    * on an 11-cert subset: 4 partitions ran 1.55× slower (data-heavy certs
-    * lose task parallelism), 16 ran 1.11× slower (state-store commit churn)
-    * — production sizes its own. The session conf is restored afterwards
-    * (queries run sequentially under both Verify and Bench). */
-  private[queries] def withCertStatePartitions[T](s: SparkSession)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = s.conf.get(key)
-    s.conf.set(key, "8")
-    try f finally s.conf.set(key, old)
+  /** Run a streaming certification under its two conf settings, each
+    * restored afterwards (queries run sequentially under both Verify and
+    * Bench):
+    *  - `spark.sql.shuffle.partitions` = 8. The stateful operators'
+    *    partitioning is fixed at CHECKPOINT CREATION from it, and every
+    *    micro-batch commits one state-store delta file per partition per
+    *    stateful op. The 8 was chosen while each of those commits started
+    *    about 20 `chmod`/`readlink` processes: 32 partitions then spent more
+    *    time on state-store I/O than on data, and the round-16 A/B on an
+    *    11-cert subset (4 partitions 1.55× slower as data-heavy certs lost
+    *    task parallelism, 16 partitions 1.11× slower on commit churn)
+    *    predates [[graft.io.LocalFs]]. The 8 is kept; re-run that A/B
+    *    before changing it. Production sizes its own.
+    *  - `fs.AbstractFileSystem.file.impl` = [[graft.io.LocalFs]], so the
+    *    checkpoint's offset, commit and source logs and the state store
+    *    write without starting a process per file. Each stream's Hadoop
+    *    conf is a copy of the session conf (`SessionState.newHadoopConf`),
+    *    and `AbstractFileSystem` instances are not cached, so the setting
+    *    reaches every stream started inside `f` and no other. */
+  private[queries] def withCertConf[T](s: SparkSession)(f: => T): T = {
+    val settings = Seq(
+      "spark.sql.shuffle.partitions" -> "8",
+      "fs.AbstractFileSystem.file.impl" -> classOf[graft.io.LocalFs].getName)
+    val old = settings.map { case (k, _) => k -> s.conf.getOption(k) }
+    settings.foreach { case (k, v) => s.conf.set(k, v) }
+    try f finally old.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 
   /** The ONE streaming run every certification goes through: open each
     * staged `(dir, schema)` source as a file-source replay (one file per
     * micro-batch, oldest mtime first), build `plan` over the replays, and
     * drain it to the end of its input — `AvailableNow` from `ckpt`, under
-    * [[withCertStatePartitions]] — into whatever `sink` configures. The
+    * [[withCertConf]] — into whatever `sink` configures. The
     * two [[Harness]] values ([[live]], [[recovered]]) differ only in the
     * sink and in how many incarnations run. */
   private[queries] def drain(s: SparkSession, srcs: Seq[(String, StructType)],
                              ckpt: String)
                             (plan: Seq[DataFrame] => DataFrame)
                             (sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
-    withCertStatePartitions(s) {
+    withCertConf(s) {
       val streams = srcs.map { case (dir, schema) =>
         s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
       }

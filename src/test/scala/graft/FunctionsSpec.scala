@@ -156,6 +156,18 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
+  test("LitSetOverlap refuses a set over its size cap") {
+    import graft.functions.LitSetOverlap
+    val cap = LitSetOverlap.MaxSetSize
+    // a set at the cap builds (no plan runs); one entry more fails
+    LitSetOverlap.overlapCount(col("arr"), IndexedSeq.fill(cap)("g"))
+    val e = intercept[IllegalArgumentException] {
+      LitSetOverlap.overlapCount(col("arr"), IndexedSeq.fill(cap + 1)("g"))
+    }
+    assert(e.getMessage.contains(
+      s"LitSetOverlap set has ${cap + 1} entries, over the cap of $cap"))
+  }
+
   test("LitSetOverlap has structural equality: content-equal sets compare equal") {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.types.{ArrayType, StringType}

@@ -1,7 +1,9 @@
 package graft.queries
 
 import java.util.UUID
-import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+
+import jdk.jfr.consumer.RecordingStream
 
 import scala.jdk.CollectionConverters._
 
@@ -16,9 +18,10 @@ import graft.streaming.Streaming
 
 /** The two certification harnesses ([[StreamingQueries.live]] and
   * [[StreamingQueries.recovered]]): one micro-batch per staged file, the
-  * session's shuffle partitions restored whatever the plan does, failures
-  * propagated, a fresh sink name + checkpoint per call, and a restart that
-  * is invisible in the output; plus the keyed state fold the stateful
+  * session's shuffle partitions and `file:` filesystem restored whatever
+  * the plan does, failures propagated, a fresh sink name + checkpoint per
+  * call, checkpoint writes that start no process, and a restart that is
+  * invisible in the output; plus the keyed state fold the stateful
   * operators share. */
 class CertHarnessSpec extends SparkSpec {
 
@@ -78,19 +81,25 @@ class CertHarnessSpec extends SparkSpec {
 
   test("live restores shuffle partitions and propagates a failing plan") {
     val key = "spark.sql.shuffle.partitions"
+    val fsKey = "fs.AbstractFileSystem.file.impl"
     val saved = spark.conf.get(key)
+    assert(spark.conf.getOption(fsKey) === None)
     spark.conf.set(key, "3") // a value no harness sets
     try {
       var during = ""
+      var duringFs = Option.empty[String]
       val built = intercept[IllegalStateException] {
         live("spec_throw")(spark, Seq(src)) { _ =>
           during = spark.conf.get(key)
+          duringFs = spark.conf.getOption(fsKey)
           throw new IllegalStateException("plan failed")
         }
       }
       assert(built.getMessage === "plan failed")
       assert(during === "8")
+      assert(duringFs === Some(classOf[graft.io.LocalFs].getName))
       assert(spark.conf.get(key) === "3")
+      assert(spark.conf.getOption(fsKey) === None)
 
       // a failure inside a running micro-batch surfaces too, not a timing
       val boom = udf((id: Long) => { require(id < 0, "row failed"); id })
@@ -100,6 +109,7 @@ class CertHarnessSpec extends SparkSpec {
         }
       }
       assert(spark.conf.get(key) === "3")
+      assert(spark.conf.getOption(fsKey) === None)
     } finally spark.conf.set(key, saved)
   }
 
@@ -136,6 +146,34 @@ class CertHarnessSpec extends SparkSpec {
     assert(rows(live("spec_twin")(spark, Seq(src))(numbered)) === want)
     // the first of the three files runs before the restart
     assert(rows(recovered("spec_twin_rec", firstN = 1)(spark, Seq(src))(numbered)) === want)
+  }
+
+  test("checkpoint writes start no process under live or recovered") {
+    val want = (0L until 30L).map(id => (id % 3, id, id / 3 + 1))
+    val ckpts = graft.io.Scratch.root.resolve("ckpt_").toString
+    val commands = new ConcurrentLinkedQueue[String]
+    // a process of the test's own, started last: once the recording has
+    // delivered it, it has delivered every process started before it
+    val fence = "certHarnessSpec-fence-" + UUID.randomUUID()
+    val fenced = new CountDownLatch(1)
+    val rec = new RecordingStream()
+    try {
+      rec.enable("jdk.ProcessStart")
+      rec.onEvent("jdk.ProcessStart", e => {
+        val c = e.getString("command")
+        commands.add(c)
+        if (c.contains(fence)) fenced.countDown()
+      })
+      rec.startAsync()
+      assert(rows(live("spec_noproc")(spark, Seq(src))(numbered)) === want)
+      assert(rows(recovered("spec_noproc_rec", firstN = 1)(spark, Seq(src))(numbered)) === want)
+      new ProcessBuilder("true", fence).start().waitFor()
+      assert(fenced.await(60, TimeUnit.SECONDS), "the recording never delivered the fence")
+    } finally rec.close()
+    // the recovered file sink's data files still go through FileSystem;
+    // its commit log goes through the checkpoint's FileContext
+    val inCkpt = commands.asScala.filter(c => c.contains(ckpts) || c.contains("/_spark_metadata")).toSeq
+    assert(inCkpt.isEmpty, s"${inCkpt.size} processes named a checkpoint, e.g. ${inCkpt.take(3)}")
   }
 
   test("recovered refuses a split that leaves one incarnation no batch") {
