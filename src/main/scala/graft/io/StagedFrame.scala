@@ -19,6 +19,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 2 h stale-reap ([[Scratch.reapStale]]) or an operator `rm` can remove
   * out from under a long-lived session, and a stale memo entry would
   * otherwise fail every consumer's scan instead of rebuilding.
+  *
+  * Every call reads the staged directory through [[Tables.scan]], so only
+  * the first read after a (re)build infers the schema; later reuses run no
+  * job before the consumer's own action.
   */
 object StagedFrame {
 
@@ -55,6 +59,6 @@ object StagedFrame {
           out
       }
     }
-    s.read.parquet(dir)
+    Tables.scan(s, dir)
   }
 }

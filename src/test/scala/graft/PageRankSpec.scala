@@ -1,16 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.SpanSugar._
 
 import graft.operators.PageRank
+import graft.tools.JobCount
 
 class PageRankSpec extends SparkSpec {
   import spark.implicits._
@@ -128,27 +122,11 @@ class PageRankSpec extends SparkSpec {
   test("under the gate a call runs at most iters + 3 jobs and leaves nothing persisted") {
     val sc = spark.sparkContext
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 1L), (3L, 1L), (4L, 1L), (2L, 5L)).toDF("src", "dst")
-    val key = "graft.test.pagerank"
     for (k <- Seq(1, 5)) {
-      val seen = new ConcurrentLinkedQueue[String]()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(key))).getOrElse("<unset>"))
-      }
       val persisted = sc.getPersistentRDDs.keySet
-      sc.addSparkListener(listener)
-      try {
-        sc.setLocalProperty(key, "pagerank")
+      val (_, jobs) = JobCount.during(spark) {
         PageRank.ranksFp(edges, "src", "dst", iters = k, danglingRedistribute = true)
-        // listener events arrive in order: the marker comes after the call's jobs
-        sc.setLocalProperty(key, "marker")
-        spark.range(1).count()
-        eventually(timeout(30.seconds))(assert(seen.contains("marker")))
-      } finally {
-        sc.setLocalProperty(key, null)
-        sc.removeSparkListener(listener)
       }
-      val jobs = seen.asScala.toList.takeWhile(_ != "marker").count(_ == "pagerank")
       assert(jobs >= k && jobs <= k + 3, s"iters = $k launched $jobs jobs")
       // compared by id: the context cleaner may drop other suites' RDDs meanwhile
       assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty)

@@ -11,7 +11,10 @@ import graft.{Session, SparkEntry}
   * ([[graft.Session]], `SPARK_GRAFT_CPUS` cores, default 4). For each
   * named query it prints:
   *  - `build`: seconds to construct the DataFrame (eager jobs, staging,
-  *    and for a streaming cert the whole streaming run);
+  *    and for a streaming cert the whole streaming run), and the number of
+  *    Spark jobs it launched ([[JobCount]]); name a query twice to see
+  *    its warm build, which for a batch query should print `jobs=0`
+  *    (zero-job construction);
   *  - `exec`: seconds and rows of `queryExecution.toRdd.count()`, the
   *    action Bench times (it keeps every declared output column);
   *  - one `batch` line per streaming micro-batch: batch id, input rows and
@@ -40,11 +43,13 @@ object Probe {
     })
     try names.foreach { n =>
       val t0 = System.nanoTime()
-      val df = SparkEntry.queries(n)(spark, sfDir)
-      val t1 = System.nanoTime()
-      println(f"$n%-28s build ${(t1 - t0) / 1e9}%8.2f s")
+      val ((df, t1), jobs) = JobCount.during(spark) {
+        (SparkEntry.queries(n)(spark, sfDir), System.nanoTime())
+      }
+      println(f"$n%-28s build ${(t1 - t0) / 1e9}%8.2f s   jobs=$jobs")
+      val t2 = System.nanoTime()
       val rows = df.queryExecution.toRdd.count()
-      println(f"$n%-28s exec  ${(System.nanoTime() - t1) / 1e9}%8.2f s   rows=$rows")
+      println(f"$n%-28s exec  ${(System.nanoTime() - t2) / 1e9}%8.2f s   rows=$rows")
       df.explain("formatted")
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     } finally spark.stop()
