@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Tables
+import graft.io.{StagedFrame, Tables}
 
 /** Shared co-purchase graph builder for the graph query family.
   *
@@ -15,9 +15,9 @@ import graft.io.Tables
   * and the round-8 verdict traced q230's 7.0 → 9.8 s drift to exactly this
   * rebuild pressure.
   *
-  * Following the [[StreamingQueries]] `Stage.memo` discipline, the WEIGHTED
-  * edge set `(u < v, c = shared-order count)` is built ONCE per
-  * (session, sfDir) and staged to scratch parquet ([[graft.io.Scratch]] —
+  * Through [[graft.io.StagedFrame.memo]], the WEIGHTED edge set
+  * `(u < v, c = shared-order count)` is built ONCE per sfDir (until its
+  * files change) and staged to scratch parquet ([[graft.io.Scratch]] —
   * RAM-backed when /dev/shm exists); every consumer re-reads the staged
   * file. Parquet staging rather than `localCheckpoint` on purpose: Bench
   * unpersists all checkpoint blocks between queries (a locally-checkpointed
@@ -32,15 +32,11 @@ import graft.io.Tables
   */
 private[graft] object CoPurchase {
 
-  private def memo(s: SparkSession, d: String, key: String)
-                  (build: => DataFrame): DataFrame =
-    graft.io.StagedFrame.memo(s, s"copurchase|$d|$key", s"${key}_")(build)
-
   /** Weighted co-purchase edges `(u, v, c)` with `u < v` and `c` = number
     * of distinct orders containing both parts. Built + staged once per
-    * (session, sfDir); subsequent calls are a parquet scan. */
+    * sfDir; subsequent calls are a parquet scan. */
   def weightedEdges(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "copurchase") {
+    StagedFrame.memo(s, d, "copurchase_edges") {
       val op = Tables.lineitem(s, d)
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       op.as("a").join(op.as("b"),
@@ -61,14 +57,14 @@ private[graft] object CoPurchase {
     * common front half of the link-prediction family — q241 resource
     * allocation, q253 common neighbors, q304 Adamic–Adar — whose
     * expensive stage is exactly this rank window (an adjacency-sized
-    * shuffle + sort); paid once per (session, sfDir) and staged like
+    * shuffle + sort); paid once per sfDir and staged like
     * [[weightedEdges]]. The cap constants are part of the contract:
     * every consumer's oracle replays deg ≤ 500 / rank ≤ 32 verbatim,
     * and a consumer needing a stricter pivot floor (q304's deg ≥ 2)
     * filters the staged frame — per-pivot predicates commute with the
     * per-pivot rank. */
   def shortlist(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "shortlist")(buildShortlist(s, d))
+    StagedFrame.memo(s, d, "copurchase_shortlist")(buildShortlist(s, d))
 
   /** The unstaged shortlist build — exposed so [[shortlist]]'s memo and
     * the plan-guarantee spec (rank ≤ 32 must plan as a WindowGroupLimit,
@@ -92,15 +88,15 @@ private[graft] object CoPurchase {
     * Adamic–Adar sum Σ (10⁹·2¹⁶) div ilog2_fp(deg(pivot)) (q304). The
     * three queries aggregate the SAME ~10M-row pair fan-out (measured
     * sf0.1: 9.9M raw → 7.5M distinct pairs, ~4 s each — the family's
-    * dominant stage); one staged build pays it once per (session,
-    * sfDir). True-edge pairs are NOT removed here — each consumer
-    * anti-joins against [[edges]] itself, exactly as its oracle does.
+    * dominant stage); one staged build pays it once per sfDir.
+    * True-edge pairs are NOT removed here — each consumer anti-joins
+    * against [[edges]] itself, exactly as its oracle does.
     * A deg = 1 pivot generates no pair (pairing needs two shortlisted
     * neighbors), so every aggregated contribution has deg ≥ 2 and the
     * Adamic–Adar divisor ilog2(deg) > 0; the nullif guard only shields
     * speculative evaluation on rows the join never emits. */
   def linkPairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "linkpairs") {
+    StagedFrame.memo(s, d, "copurchase_linkpairs") {
       val short = shortlist(s, d)
         .withColumn("w_fp", graft.functions.Ilog2.ilog2(col("deg")))
       short.as("x").join(short.as("y"),
@@ -113,11 +109,11 @@ private[graft] object CoPurchase {
 
   /** Weighted customer→supplier PURCHASE edges `(c, p, w)` from
     * `orders ⋈ lineitem` (w = line count), staged once per
-    * (session, sfDir) — shared by the link-analysis family (q129/q143
+    * sfDir — shared by the link-analysis family (q129/q143
     * PageRank build the distinct projection, q199 HITS the weighted
     * form), which previously re-ran the same two-table join each. */
   def purchaseEdges(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "purchase") {
+    StagedFrame.memo(s, d, "copurchase_purchase") {
       Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
         .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.io.Tables
+import graft.io.{StagedFrame, Tables}
 import graft.llm.Dedup
 import graft.queries.LlmQueries.{LshK, LshBands}
 
@@ -15,7 +15,7 @@ import graft.queries.LlmQueries.{LshK, LshBands}
   * (q23/q61/q91/q154/q176/q177/q190/q195/q206/q211) — and each
   * previously re-ran shingle explode → k md5 min-aggregates → band
   * self-join from the raw corpus scan. Each stage is now built ONCE per
-  * (session, sfDir), staged to scratch parquet ([[graft.io.Scratch]],
+  * sfDir, staged to scratch parquet ([[graft.io.Scratch]],
   * RAM-backed when /dev/shm exists), and re-read by every consumer; the
   * stages chain (signatures build from staged shingles, pairs from
   * staged signatures), so the whole pipeline executes exactly once per
@@ -27,30 +27,26 @@ import graft.queries.LlmQueries.{LshK, LshBands}
   */
 private[queries] object DocLsh {
 
-  private def memo(s: SparkSession, d: String, key: String)
-                  (build: => DataFrame): DataFrame =
-    graft.io.StagedFrame.memo(s, s"doclsh|$d|$key", s"doclsh_${key}_")(build)
-
   /** Distinct (doc_id, 3-token shingle) — [[Dedup.docShingles]]. */
   def shingles(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "shingles")(
+    StagedFrame.memo(s, d, "doclsh_shingles")(
       Dedup.docShingles(Tables.documents(s, d), "text", "doc_id"))
 
   /** k=8 MinHash signatures (doc_id, h0..h7) from the staged shingles. */
   def signatures(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "sig")(Dedup.minhashSignatures(shingles(s, d), LshK))
+    StagedFrame.memo(s, d, "doclsh_sig")(Dedup.minhashSignatures(shingles(s, d), LshK))
 
   /** Distinct LSH candidate pairs (doc_a < doc_b) at 4 bands of 2 rows,
     * bucket cap 1000, from the staged signatures. */
   def pairs(s: SparkSession, d: String): DataFrame =
-    memo(s, d, "pairs")(
+    StagedFrame.memo(s, d, "doclsh_pairs")(
       Dedup.lshCandidatePairs(signatures(s, d), LshBands, LshK / LshBands))
 
   /** SimHash fingerprints (doc_id, simhash) at `bits` — one staged build
     * per width, fanned into every banding/probing variant (q25/q31 at 32
     * bits; q90/q142/q145 at 64). */
   def simhashFp(s: SparkSession, d: String, bits: Int): DataFrame =
-    memo(s, d, s"simhash$bits")(
+    StagedFrame.memo(s, d, s"doclsh_simhash$bits")(
       Dedup.simhash(Tables.documents(s, d), "text", "doc_id", bits))
 
   /** (band, bkey) of LSH buckets whose FINAL size exceeds `cap`, banded

@@ -13,9 +13,10 @@ import graft.queries.StreamingQueries._
   * regrown past the repo's ~1500-line file bar). Each cert runs through
   * the [[StreamingQueries.recovered]] harness, the second value of the
   * one `Harness` type beside the continuous certs' `live`; the staging
-  * harness (`Stage`, `stageOrderedBy`, `withCertConf`) is
-  * there too with package-private visibility, so staged replay corpora
-  * remain memoized across all three streaming registries. The 13 certs
+  * harness (`stageOrderedBy`, `withCertConf`) is there too with
+  * package-private visibility, and every staged replay corpus is memoized
+  * in the one [[graft.io.StagedFrame.dir]], so a recovery cert replays
+  * its continuous twin's staged files. The 13 certs
   * whose continuous twin exists are that twin's body (`q208Cert`, …) run
   * under `recovered`, so the two cannot drift apart.
   * Contract: each cert kills a real streaming query mid-corpus,

@@ -13,10 +13,10 @@ import graft.queries.StreamingQueries._
   * KMV, Holt / Holt-Winters, priority sampling, the NB gate), split out of
   * [[StreamingQueries]] (round-9 maintainability: no non-test source file
   * over 2000 lines). Every cert here runs through the continuous
-  * [[StreamingQueries.live]] harness; that harness and the staging harness (`Stage`,
-  * `stageOrderedBy`, `withCertConf`) live in
-  * [[StreamingQueries]] with package-private visibility, so staged replay
-  * corpora remain memoized ACROSS the streaming registries. Contract
+  * [[StreamingQueries.live]] harness; that harness and the staging harness
+  * (`stageOrderedBy`, `withCertConf`) live in [[StreamingQueries]] with
+  * package-private visibility, and staged replay corpora are memoized
+  * ACROSS the streaming registries in [[graft.io.StagedFrame.dir]]. Contract
   * unchanged: each certification is a real multi-micro-batch run whose
   * final output hash-matches a batch DuckDB oracle.
   */

@@ -22,8 +22,9 @@ import graft.streaming.Streaming
   *
   * This object also holds the ONE certification harness all three
   * streaming registries ([[StreamingQueries]], [[StreamingCertQueries]],
-  * [[RecoveryCertQueries]]) share: replay staging ([[Stage]],
-  * [[stageTimeOrdered]], [[stageOrderedBy]]), the single source-opening
+  * [[RecoveryCertQueries]]) share: replay staging ([[stageTimeOrdered]],
+  * [[stageLateReplay]], [[stageOrderedBy]], each memoized in
+  * [[graft.io.StagedFrame.dir]]), the single source-opening
   * drain-to-end run ([[drain]]), and one [[Harness]] type with two
   * values — the continuous memory-sink [[live]] and the two-incarnation
   * [[recovered]]. A cert supplies only its staged sources and its
@@ -42,37 +43,6 @@ object StreamingQueries extends Registry {
 
   /** Session gap — must match q32's 30 minutes for oracle parity. */
   val GapMs: Long = 30 * 60 * 1000L
-
-  /** Certification scratch management. Two properties matter for cost:
-    *
-    *  1. Everything here — staged replay files AND streaming checkpoints —
-    *     is ephemeral by construction (the run is hash-compared against a
-    *     batch oracle, then discarded), so durability is irrelevant and the
-    *     scratch lives on a RAM-backed filesystem when one exists
-    *     ([[graft.io.Scratch]]). State-store delta files are written +
-    *     fsynced per state partition per stateful op per micro-batch; on
-    *     tmpfs that I/O never touches disk.
-    *  2. Staged dirs are IMMUTABLE once built (sentinels included — see
-    *     [[stageTimeOrdered]]), so they are memoized per (sfDir, key) and
-    *     shared across queries and reps within a session: q65 and q74
-    *     replay the identical staged dir, and a Bench/Verify run stages
-    *     each distinct replay corpus exactly once.
-    */
-  private[queries] object Stage {
-    private val staged =
-      scala.collection.concurrent.TrieMap.empty[(String, String), (String, Long, Long)]
-
-    def memo(d: String, key: String)(build: String => (Long, Long)): (String, Long, Long) =
-      staged.getOrElseUpdate((d, key), graft.io.StageClock.timed {
-        val dir = graft.io.Scratch.dir(s"base_${key}_") + "/src"
-        val (lo, hi) = build(dir)
-        (dir, lo, hi)
-      })
-
-    /** Fresh checkpoint dir per streaming run (checkpoints are never
-      * shareable — they encode one query's offsets + state). */
-    def ckpt(): String = graft.io.Scratch.dir("ckpt_")
-  }
 
   /** Data part-files of a parquet dir, lexicographically — one write job
     * has one job-UUID, so name order IS partition order. */
@@ -127,7 +97,7 @@ object StreamingQueries extends Registry {
   /** Stage a batch frame into `parts` TIME-RANGE parquet files, so a
     * file-source replay (`maxFilesPerTrigger=1`, oldest file first)
     * delivers micro-batches in event-time order — no rows ever arrive
-    * behind the watermark and get dropped. Returns (srcDir, loMs, hiMs).
+    * behind the watermark and get dropped. Returns (srcDir, (loMs, hiMs)).
     *
     * Mechanics: ONE `repartitionByRange(parts, ts)` write job produces the
     * slice files — range partition i is the i-th time slice and is written
@@ -149,14 +119,15 @@ object StreamingQueries extends Registry {
     * the batch in which the flushed results are emitted (a batch computes
     * with the watermark derived from the PREVIOUS batch's data). Folding
     * sentinels into staging keeps the staged dir immutable, which is what
-    * lets [[Stage]] share it across queries.
+    * lets [[graft.io.StagedFrame.dir]] share it across queries.
     *
-    * The result is memoized per (sfDir, key): callers pass a key that
-    * uniquely names the (frame, parts, dup, sentinels) combination. */
+    * The result is memoized per key and sfDir files
+    * ([[graft.io.StagedFrame.dir]]): callers pass a key that uniquely
+    * names the (frame, parts, dup, sentinels) combination. */
   private[queries] def stageTimeOrdered(ev: DataFrame, d: String, key: String, parts: Int,
                                dupEachFile: Boolean,
-                               sentinelOffsetsMs: Seq[Long] = Nil): (String, Long, Long) =
-    Stage.memo(d, key) { srcDir =>
+                               sentinelOffsetsMs: Seq[Long] = Nil): (String, (Long, Long)) =
+    graft.io.StagedFrame.dir(d, key) { srcDir =>
       // bounded 1-row probe (same license as Stats.embeddingDim)
       val bounds = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
       val lo = bounds.getTimestamp(0).getTime
@@ -191,8 +162,8 @@ object StreamingQueries extends Registry {
     * instead of the sample-dependent max of the second-to-last slice. */
   private def stageLateReplay(ev: DataFrame, d: String, key: String,
                               parts: Int, latePred: org.apache.spark.sql.Column,
-                              sentinelOffsetsMs: Seq[Long]): (String, Long, Long) =
-    Stage.memo(d, key) { srcDir =>
+                              sentinelOffsetsMs: Seq[Long]): (String, (Long, Long)) =
+    graft.io.StagedFrame.dir(d, key) { srcDir =>
       val s = ev.sparkSession
       val bounds = ev.agg(min(col("ts")).as("lo"), max(col("ts")).as("hi")).head()
       val lo = bounds.getTimestamp(0).getTime
@@ -277,7 +248,7 @@ object StreamingQueries extends Registry {
   private[queries] def live(tag: String, outputMode: String = "append"): Harness =
     (s, srcs) => plan => {
       val name = tag + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      drain(s, srcs, Stage.ckpt())(plan)(
+      drain(s, srcs, graft.io.Scratch.dir("ckpt_"))(plan)(
         _.queryName(name).format("memory").outputMode(outputMode))
       s.table(name)
     }
@@ -327,7 +298,7 @@ object StreamingQueries extends Registry {
           F.copy(p, tgt)
           F.setLastModifiedTime(tgt, F.getLastModifiedTime(p))
         }
-      val ckpt = Stage.ckpt()
+      val ckpt = graft.io.Scratch.dir("ckpt_")
       val outDir = graft.io.Scratch.dir(s"${tag}_out_") + "/out"
       val runSrcs = prepared.map { case (runDir, schema, _) => (runDir, schema) }
       // drain stops each incarnation before returning, so the checkpoint is
@@ -374,7 +345,7 @@ object StreamingQueries extends Registry {
     // at hi+3h — past every session close (end + 30 min gap) — the second
     // fires the timeouts. Identical staging key to q74, so the two certs
     // replay the SAME memoized dir.
-    val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s", 4, dupEachFile = false,
+    val (srcDir, _) = stageTimeOrdered(ev, d, "events4s", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(4 * 60 * 60 * 1000L, 6 * 60 * 60 * 1000L))
     val sessions = run(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.sessionize(st.as[Streaming.Event], GapMs).toDF()
@@ -425,7 +396,7 @@ object StreamingQueries extends Registry {
     // batch's data, so the first (hi+4h, watermark → hi+2h under the 2 h
     // delay) advances it past every real window and the second provides
     // the batch in which they flush. Same staging key as q65 → shared dir.
-    val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s", 4, dupEachFile = false,
+    val (srcDir, _) = stageTimeOrdered(ev, d, "events4s", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(4 * 60 * 60 * 1000L, 6 * 60 * 60 * 1000L))
 
     live("q74_windows")(s, Seq(srcDir -> ev.schema)) {
@@ -459,7 +430,7 @@ object StreamingQueries extends Registry {
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
 
-    val (srcDir, lo, hi) = stageTimeOrdered(ev, d, "eventsDup", 4, dupEachFile = true)
+    val (srcDir, (lo, hi)) = stageTimeOrdered(ev, d, "eventsDup", 4, dupEachFile = true)
     val sliceHours = ((hi - lo) / 4) / (60 * 60 * 1000L) + 2
 
     live("q75_dedup")(s, Seq(srcDir -> ev.schema)) {
@@ -497,8 +468,8 @@ object StreamingQueries extends Registry {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
     val views = ev.where(col("event_type") === "view")
     val clicks = ev.where(col("event_type") === "click")
-    val (vDir, _, _) = stageTimeOrdered(views, d, "views", 4, dupEachFile = false)
-    val (cDir, _, _) = stageTimeOrdered(clicks, d, "clicks", 4, dupEachFile = false)
+    val (vDir, _) = stageTimeOrdered(views, d, "views", 4, dupEachFile = false)
+    val (cDir, _) = stageTimeOrdered(clicks, d, "clicks", 4, dupEachFile = false)
 
     run(s, Seq(vDir -> ev.schema, cDir -> ev.schema)) {
       case Seq(v, c) =>
@@ -553,20 +524,19 @@ object StreamingQueries extends Registry {
         (col("c_acctbal") + 200.0).as("c_acctbal"),
         lit("1996-06-17").cast("date").as("effective"))
 
-    val (srcDir, _, _) = Stage.memo(d, "scd2chg") { dir =>
+    val srcDir = graft.io.StagedFrame.dir(d, "scd2chg") { dir =>
       val dirPath = Paths.get(dir)
       F.createDirectories(dirPath)
       stampReplayOrder(Seq(batch1, batch2).zipWithIndex.map { case (b, i) =>
         writeOneFile(b, dirPath, s"b$i", s"batch-$i.parquet")
       })
-      (0L, 0L)
-    }
+    }._1
 
     var state = c.select(col("c_custkey"), col("c_name"), col("c_acctbal"),
         lit("1992-01-01").cast("date").as("valid_from"),
         lit(null).cast("date").as("valid_to"))
       .localCheckpoint(true)
-    drain(s, Seq(srcDir -> batch1.schema), Stage.ckpt())(_.head)(
+    drain(s, Seq(srcDir -> batch1.schema), graft.io.Scratch.dir("ckpt_"))(_.head)(
       _.foreachBatch { (b: org.apache.spark.sql.Dataset[Row], _: Long) =>
         state = graft.operators.Scd2.merge(state, b.toDF(), "c_custkey")
           .localCheckpoint(true)
@@ -792,16 +762,15 @@ object StreamingQueries extends Registry {
     * order only makes the replay reproducible, and a recovery twin shares
     * its continuous cert's staged dir. Same mtime-stamping discipline as
     * [[stageTimeOrdered]], minus the event-time bounds and sentinels,
-    * which an unwatermarked stateful op doesn't use. Memoized per
-    * (sfDir, key); a key names one staged frame, so certs that replay the
+    * which an unwatermarked stateful op doesn't use. Memoized per key and
+    * sfDir files; a key names one staged frame, so certs that replay the
     * same frame share its key and its files. */
-  private[queries] def stageOrderedBy(df: DataFrame, d: String, key: String,
+  private[graft] def stageOrderedBy(df: DataFrame, d: String, key: String,
                              parts: Int,
                              orderCols: Seq[org.apache.spark.sql.Column]): String =
-    Stage.memo(d, key) { srcDir =>
+    graft.io.StagedFrame.dir(d, key) { srcDir =>
       df.repartitionByRange(parts, orderCols: _*).write.mode("append").parquet(srcDir)
       stampReplayOrder(partFiles(srcDir))
-      (0L, 0L)
     }._1
 
   /** Streaming per-source admission cap — the tenth streaming cert:
@@ -997,7 +966,7 @@ object StreamingQueries extends Registry {
   val q178_stream_sliding: Q = (s, d) => {
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-    val (srcDir, _, _) = stageTimeOrdered(ev, d, "events4s5", 4, dupEachFile = false,
+    val (srcDir, _) = stageTimeOrdered(ev, d, "events4s5", 4, dupEachFile = false,
       sentinelOffsetsMs = Seq(5 * 60 * 60 * 1000L, 7 * 60 * 60 * 1000L))
     live("q178_sliding")(s, Seq(srcDir -> ev.schema)) {
       case Seq(st) => Streaming.slidingEventCounts(st, "2 hours", "1 hour", "2 hours")
@@ -1075,7 +1044,7 @@ object StreamingQueries extends Registry {
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
-    val (srcDir, _, _) = stageLateReplay(ev, d, "events3late", 3,
+    val (srcDir, _) = stageLateReplay(ev, d, "events3late", 3,
       col("event_id") % 7 === 0,
       sentinelOffsetsMs = Seq(50 * 60 * 60 * 1000L, 54 * 60 * 60 * 1000L))
     live("q196_late")(s, Seq(srcDir -> ev.schema)) {

@@ -45,21 +45,9 @@ class BooksDataSource extends TableProvider {
 
 object BooksDataSource {
   /** Typed book schema: the reference's 13 columns with parse-time types
-    * (prices stay raw strings — cleaning is the transform layer's job). */
-  val schema: StructType = StructType(Seq(
-    StructField("Title", StringType),
-    StructField("Description", StringType),
-    StructField("Category", StringType),
-    StructField("Image_link", StringType),
-    StructField("Is_in_Stock", BooleanType),
-    StructField("No_of_books_in_Stock", IntegerType),
-    StructField("Rating", IntegerType),
-    StructField("UPC", StringType),
-    StructField("Product Type", StringType),
-    StructField("Price (excl. tax)", StringType),
-    StructField("Price (incl. tax)", StringType),
-    StructField("Tax", StringType),
-    StructField("Number of reviews", StringType)))
+    * (prices stay raw strings — cleaning is the transform layer's job),
+    * the same record the CSV stage reads back. */
+  val schema: StructType = graft.model.Model.rawBooksSchema
 }
 
 class BooksTable(properties: Map[String, String]) extends Table with SupportsRead {

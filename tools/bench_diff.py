@@ -9,7 +9,9 @@ absolute delta exceeds 0.5 s (sub-second jitter is not a regression).
 Additionally — round-9, closing the blind spot the round-8 verdict named
 (q230 drifted 1.40x/+2.8 s under the 1.5x gate) — a query whose time grows
 > 1.3x AND > 1 s is flagged as DRIFT even when it passes the main gate:
-large absolute movement on an expensive query is signal, not jitter. Each
+large absolute movement on an expensive query is signal, not jitter. A
+query named in the new artifact's `failed` list (Bench leaves a query that
+threw out of `queries`) is flagged as a regression too. Each
 artifact's in-band load evidence (`load_before`, emitted by Bench since
 round 4) is printed first — numbers recorded above 1-min load ~1.5 are
 untrustworthy (see BASELINE.md's bench history), and the comparison says so
@@ -66,25 +68,30 @@ def main():
     nq = {**new["queries"], **new.get("stream_certs", {})}
     added = sorted(set(nq) - set(oq))
     removed = sorted(set(oq) - set(nq))
+    # a query that threw is left out of `queries` and named in `failed`
+    failed = sorted(new.get("failed", []))
+    removed = [n for n in removed if n not in failed]
     flagged = []
     for name in sorted(set(oq) & set(nq)):
         a, b = oq[name], nq[name]
-        if a <= 0 or b <= 0:  # -1 marks an errored query in Bench
+        if a <= 0 or b <= 0:
             flagged.append((name, a, b, "errored"))
         elif b / a > ratio and b - a > 0.5:
             flagged.append((name, a, b, f"{b / a:.1f}x slower"))
         elif b / a > 1.3 and b - a > 1.0:
             flagged.append((name, a, b, f"DRIFT {b / a:.2f}x (+{b - a:.1f}s)"))
 
+    for name in failed:
+        print(f"REGRESSION {name}: failed in {new_path}")
     for name, a, b, why in flagged:
         print(f"REGRESSION {name}: {a:.2f}s -> {b:.2f}s ({why})")
     if added:
         print("added:", ", ".join(f"{n} ({nq[n]:.2f}s)" for n in added))
     if removed:
         print("removed:", ", ".join(removed))
-    if not flagged:
+    if not flagged and not failed:
         print(f"no regressions > {ratio}x (+0.5s) across {len(set(oq) & set(nq))} shared queries")
-    sys.exit(1 if flagged else 0)
+    sys.exit(1 if flagged or failed else 0)
 
 
 if __name__ == "__main__":
