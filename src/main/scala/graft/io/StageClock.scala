@@ -2,8 +2,9 @@ package graft.io
 
 /** In-band accounting of SESSION-STAGING time — the seconds a query's
   * timed window spends building memoized staged frames and replay corpora
-  * ([[StagedFrame.dir]]) rather than running its own computation. Staging is paid by the FIRST consumer of each
-  * staged key in a session (streams run 1 rep, so their minima can't
+  * ([[StagedFrame.dir]]) rather than running its own computation.
+  * Staging is paid by the FIRST consumer of each staged key in a
+  * session (streams run 1 rep, so their minima can't
   * amortize it away); the bench reads this clock around every query and
   * reports the split so a reader can separate "the stream got slower"
   * from "this invocation happened to pay the staging I/O" without
