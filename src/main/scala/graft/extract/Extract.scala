@@ -1,9 +1,7 @@
 package graft.extract
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-
-import graft.model.Model.Book
 
 /** Spark side of the extraction pipeline (`extract_pipeline.py:76-90`
   * re-expressed as a lazy plan): page range → listing parse (1→20
@@ -45,10 +43,4 @@ object Extract {
     * (`fetch_main_page_url`, `extract_pipeline.py:76-90`). */
   def scrape(spark: SparkSession, nPages: Int, fetch: String => String): DataFrame =
     books(bookUrls(pageUrls(spark, nPages), fetch), fetch)
-
-  /** Typed variant for callers that want a `Dataset[Book]`. */
-  def scrapeTyped(spark: SparkSession, nPages: Int, fetch: String => String): Dataset[Book] = {
-    import spark.implicits._
-    scrape(spark, nPages, fetch).as[Book]
-  }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** O16 as a native Catalyst expression (the zero-UDF-purity variant of
-  * [[Functions.fixMojibake]]): cp1252-encode / utf8-decode round trip with
+/** O16 as a native Catalyst expression over
+  * [[Functions.fixMojibakeImpl]]: cp1252-encode / utf8-decode round trip with
   * IGNORE on both sides, `" ...more"` suffix stripped, null → "".
   *
   * Unlike a Scala UDF this participates in whole-stage codegen (the

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** Scalar layer: pure `Column` expressions wherever a Catalyst built-in can
   * express the reference semantics (codegen'd, oracle-checkable in SQL);
-  * a Scala UDF only where it genuinely can't (`fixMojibake`).
+  * where none can (O16's mojibake fix), a native expression over a Scala
+  * impl ([[FixMojibake]] over [[Functions.fixMojibakeImpl]]).
   *
   * Reference semantics (studied, not copied) cite
   * `/root/reference/transformation_pipeline.py` and
@@ -106,7 +107,8 @@ object Functions {
     * null → "", strip the " ...more" suffix, then fix mojibake by a
     * cp1252-encode / utf8-decode round trip with IGNORE on both malformed
     * input and unmappable characters (matches Python's `errors="ignore"`
-    * on both sides). Not expressible in Catalyst built-ins → Scala UDF.
+    * on both sides). Not expressible in Catalyst built-ins, so the
+    * [[FixMojibake]] expression calls this impl from its generated code.
     *
     * Known fidelity edge: Java's windows-1252 maps the five bytes
     * 0x81/0x8D/0x8F/0x90/0x9D to C1 controls while Python's cp1252 treats
@@ -124,6 +126,4 @@ object Functions {
       .onUnmappableCharacter(CodingErrorAction.IGNORE)
     decoder.decode(bytes).toString
   }
-
-  val fixMojibake = udf(fixMojibakeImpl _)
 }

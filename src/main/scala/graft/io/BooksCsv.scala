@@ -24,11 +24,8 @@ object BooksCsv {
   def read(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
 
-  /** O5/O7 — headered CSV sink. `singleFile` coalesces to one part for
-    * pandas-style single-file parity (fine for dims/fixtures; leave false
-    * for large facts so the write stays parallel). */
-  def write(df: DataFrame, path: String, singleFile: Boolean = false): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite").option("header", "true").csv(path)
-  }
+  /** O5/O7 — headered CSV sink, coalesced to one part for pandas-style
+    * single-file parity. */
+  def write(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 }

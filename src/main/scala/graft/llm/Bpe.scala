@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.operators.Rounds
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -71,42 +72,53 @@ object Bpe {
   /** The full iterative trainer loop, `rounds` merges deep: elect → apply →
     * re-count, driver-paced over the VOCAB table (the Lloyd-loop license —
     * the corpus was folded into (word, n) once; every later round touches
-    * only vocabulary-bounded data). Each application is `localCheckpoint`ed
-    * so round r+1's plan does not re-derive rounds 1..r (the q121
-    * re-execution lesson), and the per-round election collects exactly ONE
-    * bounded row to the driver.
+    * only vocabulary-bounded data). See [[mergeRounds]].
     *
     * Returns (round 1-based, pair, cnt) — one row per elected merge, fewer
     * than `rounds` only if the corpus runs out of mergeable pairs. */
   def trainRounds(docs: DataFrame, textCol: String, rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1 (got $rounds)")
+    val (merges, syms) = mergeRounds(docs, textCol, rounds, applyLast = false)
+    // the result is a local relation: no symbol table stays persisted
+    Rounds.release(syms)
     val spark = docs.sparkSession
-    var syms = vocab(docs, textCol)
+    import spark.implicits._
+    merges.zipWithIndex.map { case ((pair, cnt), i) => (i + 1L, pair, cnt) }
+      .toDF("round", "pair", "cnt")
+  }
+
+  /** The elect→apply loop [[trainRounds]] and [[encodeStats]] share, up to
+    * `rounds` elections over the vocab's symbol table. Each election
+    * collects exactly ONE bounded row to the driver and stops the loop when
+    * no pair is left; each elected merge is applied as a new round of the
+    * table through [[graft.operators.Rounds]] (materialised, so round r+1's
+    * plan does not re-derive rounds 1..r, and the superseded round
+    * released), except the last one when `applyLast` is false. Returns the
+    * elected (pair, cnt) in order and the last symbol table, which the
+    * caller owns. */
+  private def mergeRounds(docs: DataFrame, textCol: String, rounds: Int,
+                          applyLast: Boolean): (Seq[(String, Long)], DataFrame) = {
+    require(rounds >= 1, s"rounds must be >= 1 (got $rounds)")
+    val merges = collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val init = vocab(docs, textCol)
       .withColumn("syms", charSymbols(col("word")))
       .select(col("word"), col("n"), col("syms"))
       .localCheckpoint()
-    val merges = collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
+    val syms = Rounds.run(init, rounds) { (syms, r) =>
       val elected = graft.io.Bounded.collect(
         electMerge(pairCounts(syms, "syms")), maxRows = 1,
         why = "the elected merge is a single global argmax row")
-      if (elected.isEmpty || elected(0).isNullAt(0)) exhausted = true
+      if (elected.isEmpty || elected(0).isNullAt(0)) None
       else {
         val pair = elected(0).getString(0)
-        val cnt = elected(0).getLong(1)
-        merges += ((r.toLong, pair, cnt))
-        if (r < rounds) {
+        merges += ((pair, elected(0).getLong(1)))
+        if (!applyLast && r == rounds - 1) None
+        else {
           val Array(a, b) = pair.split(" ", 2)
-          syms = syms.withColumn("syms", applyMerge(col("syms"), a, b))
-            .localCheckpoint()
+          Some(Rounds.Step(syms.withColumn("syms", applyMerge(col("syms"), a, b))))
         }
-        r += 1
       }
     }
-    import spark.implicits._
-    merges.toSeq.toDF("round", "pair", "cnt")
+    (merges.toSeq, syms)
   }
 
   /** ENCODE with a trained merge list: per-document BPE symbol counts —
@@ -124,25 +136,7 @@ object Bpe {
     * zeros; unordered. */
   def encodeStats(docs: DataFrame, textCol: String, idCol: String,
                   rounds: Int): DataFrame = {
-    require(rounds >= 1, s"rounds must be >= 1 (got $rounds)")
-    var syms = vocab(docs, textCol)
-      .withColumn("syms", charSymbols(col("word")))
-      .select(col("word"), col("n"), col("syms"))
-      .localCheckpoint()
-    var r = 1
-    var exhausted = false
-    while (r <= rounds && !exhausted) {
-      val elected = graft.io.Bounded.collect(
-        electMerge(pairCounts(syms, "syms")), maxRows = 1,
-        why = "the elected merge is a single global argmax row")
-      if (elected.isEmpty || elected(0).isNullAt(0)) exhausted = true
-      else {
-        val Array(a, b) = elected(0).getString(0).split(" ", 2)
-        syms = syms.withColumn("syms", applyMerge(col("syms"), a, b))
-          .localCheckpoint()
-        r += 1
-      }
-    }
+    val (_, syms) = mergeRounds(docs, textCol, rounds, applyLast = true)
     val wordLens = syms.select(col("word"),
       length(col("word")).cast("long").as("__n_chars"),
       size(col("syms")).cast("long").as("__n_syms"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Multi-source breadth-first hop distance over an undirected graph —
@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape per round: one hash equi-join (frontier ⋈ edges on the
   * node id) plus one map-side-combined min aggregate; state is the
-  * |reached|-sized distance frame, `localCheckpoint`ed per round so
-  * lineage stays flat (the [[PageRank]]/[[Lpa]] iterative discipline).
+  * |reached|-sized distance frame, materialised per round by the
+  * [[Rounds]] loop every iterative operator shares.
   * Relaxing the FULL distance frame each round (not a delta frontier)
   * keeps every round's plan identical and replayable as unrolled oracle
   * CTEs; a delta-frontier variant saves join input on high-diameter
@@ -31,28 +31,7 @@ object Bfs {
   def hops(pairs: DataFrame, aCol: String, bCol: String,
            seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1 (got $rounds)")
-    val edges = pairs
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .where(col("u") =!= col("v"))
-      .union(pairs.select(col(bCol).cast("long").as("u"),
-        col(aCol).cast("long").as("v")).where(col("u") =!= col("v")))
-      .distinct()
-      .localCheckpoint(true)
-    var dist = seeds.toDF("node")
-      .select(col("node").cast("long").as("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
-      val relaxed = edges
-        .join(dist.withColumnRenamed("node", "u"), Seq("u"))
-        .select(col("v").as("node"), (col("dist") + 1).as("dist"))
-      dist = relaxAndRelease(dist, relaxed)
-      r += 1
-    }
-    // only the returned distances keep their blocks
-    PageRank.release(edges)
-    dist
+    relax(Edges.symmetric(pairs, aCol, bCol), seeds, rounds, lit(1L))
   }
 
   /** Weighted single/multi-source shortest paths — [[hops]] lifted from the
@@ -64,12 +43,9 @@ object Bfs {
     * hops' radius-budget contract, and the result is monotone so extra
     * rounds never hurt correctness.
     *
-    * Scale shape per round is identical to hops: ONE hash equi-join
-    * (distance frame ⋈ edges on the source node) + ONE map-side-combined
-    * min aggregate; the edge list (symmetrized once, weights intact) and
-    * each round's distance frame are `localCheckpoint`ed so lineage stays
-    * flat. Weights must be non-negative longs — the min-fold is then a
-    * lattice and micro-round order is irrelevant. */
+    * Same relaxation loop as hops, over the edge list symmetrized once
+    * with its weights intact. Weights must be non-negative longs — the
+    * min-fold is then a lattice and micro-round order is irrelevant. */
   def sssp(pairs: DataFrame, aCol: String, bCol: String, wCol: String,
            seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1 (got $rounds)")
@@ -84,34 +60,28 @@ object Bfs {
           lit("sssp: negative edge weight (shortest-path relaxation " +
             "requires w >= 0): "), col(wCol).cast("string"))))
         .otherwise(col(wCol).cast("long")).as("w"))
-    val edges = fwd
-      .unionAll(fwd.select(col("v").as("u"), col("u").as("v"), col("w")))
-      .where(col("u") =!= col("v"))
-      .localCheckpoint(true)
-    var dist = seeds.toDF("node")
-      .select(col("node").cast("long").as("node")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
-      val relaxed = edges
-        .join(dist.withColumnRenamed("node", "u"), Seq("u"))
-        .select(col("v").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = relaxAndRelease(dist, relaxed)
-      r += 1
-    }
-    PageRank.release(edges)
-    dist
+    relax(fwd.unionAll(fwd.select(col("v").as("u"), col("u").as("v"), col("w")))
+      .where(col("u") =!= col("v")), seeds, rounds, col("w"))
   }
 
-  /** One round's min-fold of `relaxed` into `dist`, checkpointed; the
-    * checkpoint reads none of `dist`'s lineage, so `dist` is released. */
-  private def relaxAndRelease(dist: DataFrame, relaxed: DataFrame): DataFrame = {
-    val next = dist.unionByName(relaxed)
-      .groupBy(col("node"))
-      .agg(min(col("dist")).as("dist"))
-      .localCheckpoint(true)
-    PageRank.release(dist)
-    next
+  /** The relaxation loop both entry points run: the edge list `e`
+    * (u, v, …) is materialised once, and each round min-folds
+    * `dist(u) + step` over it into the distance frame. */
+  private def relax(e: DataFrame, seeds: DataFrame, rounds: Int,
+                    step: Column): DataFrame = {
+    val edges = e.localCheckpoint(true)
+    try {
+      val init = seeds.toDF("node")
+        .select(col("node").cast("long").as("node")).distinct()
+        .withColumn("dist", lit(0L))
+        .localCheckpoint(true)
+      Rounds.fixed(init, rounds) { dist =>
+        dist.unionByName(edges
+            .join(dist.withColumnRenamed("node", "u"), Seq("u"))
+            .select(col("v").as("node"), (col("dist") + step).as("dist")))
+          .groupBy(col("node"))
+          .agg(min(col("dist")).as("dist"))
+      }
+    } finally Rounds.release(edges) // only the returned distances keep their blocks
   }
 }

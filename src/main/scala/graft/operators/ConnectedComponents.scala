@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   *
   * Neither variant keeps driver-side graph state; the driver runs only the
   * bounded convergence loop (the same license as [[graft.llm.Ivf.fit]]'s
-  * Lloyd rounds). Convergence is detected IN-BAND via `observe` metrics
-  * collected during each round's materializing action — no separate
-  * count-the-changes job per round.
+  * Lloyd rounds), through [[Rounds]]. Convergence is detected IN-BAND via
+  * `observe` metrics collected during each round's materializing action —
+  * no separate count-the-changes job per round.
   */
 object ConnectedComponents {
 
@@ -43,60 +43,51 @@ object ConnectedComponents {
     */
   def components(pairs: DataFrame, aCol: String, bCol: String,
                  maxIters: Int = 20): DataFrame = {
-    // both directions, deduped, materialized once: every round re-reads it
+    // both directions, deduped, materialized once: every round re-reads it.
+    // Self-loops stay: a node whose only edge is a self-loop is labelled
+    // through it.
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .localCheckpoint(true)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(true)
-    // |nodes|-gated per-round broadcast (one cheap job on the materialized
-    // checkpoint): the label and nbr-min frames are node-bounded
-    // 2-long-column tables, so broadcasting them leaves ONE shuffle per
-    // round (the per-src min) instead of three — the edge table never
-    // exchanges inside a round. Past the gate both joins revert to shuffle
-    // joins automatically. Gate sized for node-bounded state paid EVERY
-    // round, not the one-shot 4M Triangles budget; it is
-    // [[PageRank.PerRoundBroadcastMaxNodes]], under which PageRank keeps
-    // its whole rank vector on the driver.
-    val n = labels.count()
-    val bounded = (df: DataFrame) =>
-      if (n <= PageRank.PerRoundBroadcastMaxNodes) broadcast(df) else df
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      // each node pulls the smallest label among itself and its neighbors;
-      // the changed-count rides the checkpoint action as an observe metric,
-      // so convergence detection costs zero extra jobs
-      val nbrMin = edges
-        .join(bounded(labels.select(col("id").as("dst"), col("label"))), Seq("dst"))
-        .groupBy(col("src").as("id"))
-        .agg(min(col("label")).as("nbr_label"))
-      val obs = Observation(s"cc_prop_$i")
-      val next = labels
-        .join(bounded(nbrMin), Seq("id"), "left")
-        .select(col("id"), col("label"),
-          coalesce(col("nbr_label"), col("label")).as("nl"))
-        .observe(obs,
-          sum(when(col("nl") < col("label"), 1L).otherwise(0L)).as("changed"))
-        .select(col("id"), least(col("label"), col("nl")).as("label"))
+    val labels = try {
+      val init = edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id"))
         .localCheckpoint(true)
-      // next is materialized and reads none of the old labels' lineage
-      PageRank.release(labels)
-      labels = next
-      converged = longMetric(obs, "changed") == 0L
-      i += 1
-    }
-    // only the returned labels keep their blocks
-    PageRank.release(edges)
-    if (!converged) {
-      PageRank.release(labels)
-      throw new IllegalStateException(
+      // |nodes|-gated per-round broadcast (one cheap job on the materialized
+      // checkpoint): the label and nbr-min frames are node-bounded
+      // 2-long-column tables, so broadcasting them leaves ONE shuffle per
+      // round (the per-src min) instead of three — the edge table never
+      // exchanges inside a round. Past the gate both joins revert to shuffle
+      // joins automatically. Gate sized for node-bounded state paid EVERY
+      // round, not the one-shot 4M Triangles budget; it is
+      // [[PageRank.PerRoundBroadcastMaxNodes]], under which PageRank keeps
+      // its whole rank vector on the driver.
+      val n = init.count()
+      val bounded = (df: DataFrame) =>
+        if (n <= PageRank.PerRoundBroadcastMaxNodes) broadcast(df) else df
+      Rounds.run(init, maxIters, Some(
         s"ConnectedComponents.components did not converge in $maxIters rounds: " +
           "a component's diameter exceeds maxIters, so returned labels would be " +
-          "silently wrong. Raise maxIters or use componentsStar (O(log n) rounds).")
-    }
+          "silently wrong. Raise maxIters or use componentsStar (O(log n) rounds).")) {
+        (labels, i) =>
+          // each node pulls the smallest label among itself and its neighbors;
+          // the changed-count rides the checkpoint action as an observe metric
+          val nbrMin = edges
+            .join(bounded(labels.select(col("id").as("dst"), col("label"))), Seq("dst"))
+            .groupBy(col("src").as("id"))
+            .agg(min(col("label")).as("nbr_label"))
+          val obs = Observation(s"cc_prop_$i")
+          Some(Rounds.Step(labels
+            .join(bounded(nbrMin), Seq("id"), "left")
+            .select(col("id"), col("label"),
+              coalesce(col("nbr_label"), col("label")).as("nl"))
+            .observe(obs,
+              sum(when(col("nl") < col("label"), 1L).otherwise(0L)).as("changed"))
+            .select(col("id"), least(col("label"), col("nl")).as("label")),
+            () => longMetric(obs, "changed") == 0L))
+      }
+    } finally Rounds.release(edges) // only the returned labels keep their blocks
     labels.select(col("id"), col("label").as("cluster_id"))
   }
 
@@ -119,16 +110,9 @@ object ConnectedComponents {
     */
   def componentsStar(pairs: DataFrame, aCol: String, bCol: String,
                      maxIters: Int = 50): DataFrame = {
-    val nodes = pairs.select(col(aCol).as("id"))
-      .union(pairs.select(col(bCol).as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    // canonical oriented edges (hi > lo); self-loops carry no information
-    var edges = pairs.select(
-        greatest(col(aCol), col(bCol)).as("hi"),
-        least(col(aCol), col(bCol)).as("lo"))
-      .where(col("hi") =!= col("lo"))
-      .distinct()
+    // canonical oriented edges (hi > lo)
+    val init = Edges.canonical(pairs, aCol, bCol)
+      .select(col("v").as("hi"), col("u").as("lo"))
       .localCheckpoint(true)
     // NO per-round broadcast gate here, unlike [[components]]: on the
     // star/chain shapes this variant exists for, the lmins/smins tables are
@@ -138,10 +122,10 @@ object ConnectedComponents {
     // (driver 2.30→2.89 s; steady-state 3.02→3.60 s), reverted here. The
     // propagation variant keeps its gate: its label frame is genuinely
     // small relative to the dense bucket-clique edge streams it serves.
-    var prevSig: (Long, BigDecimal) = (-1L, BigDecimal(-1))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
+    val unchanged = Rounds.unchanged[(Long, BigDecimal)]((-1L, BigDecimal(-1)))
+    val edges = Rounds.run(init, maxIters, Some(
+      s"ConnectedComponents.componentsStar did not converge in $maxIters rounds " +
+        "(expected O(log n)); raise maxIters.")) { (edges, i) =>
       // large-star: E' = ∪_u { (v, min(Γ(u) ∪ {u})) : v ∈ Γ(u), v > u }
       val nbrs = edges.select(col("hi").as("u"), col("lo").as("v"))
         .union(edges.select(col("lo").as("u"), col("hi").as("v")))
@@ -158,32 +142,24 @@ object ConnectedComponents {
       // emits (u, m) when v == m, else (v, m) — exactly N ∪ {u} \ {m}
       val smins = afterLarge.groupBy("hi").agg(min(col("lo")).as("m"))
       val obs = Observation(s"cc_star_$i")
-      val next = afterLarge.join(smins, Seq("hi"))
+      Some(Rounds.Step(afterLarge.join(smins, Seq("hi"))
         .select(
           when(col("lo") === col("m"), col("hi")).otherwise(col("lo")).as("hi"),
           col("m").as("lo"))
         .distinct()
         .observe(obs,
           count(lit(1L)).as("n"),
-          sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)")).as("h"))
-        .localCheckpoint(true)
-      val sig = (longMetric(obs, "n"), decimalMetric(obs, "h"))
-      converged = sig == prevSig
-      prevSig = sig
-      // next is materialized and reads none of the old edges' lineage
-      PageRank.release(edges)
-      edges = next
-      i += 1
-    }
-    if (!converged) {
-      Seq(nodes, edges).foreach(PageRank.release)
-      throw new IllegalStateException(
-        s"ConnectedComponents.componentsStar did not converge in $maxIters rounds " +
-          "(expected O(log n)); raise maxIters.")
+          sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)")).as("h")),
+        () => unchanged((longMetric(obs, "n"), decimalMetric(obs, "h")))))
     }
     // fixpoint edge set is a star forest: (child, root). Roots (nodes never
-    // appearing as a child) label themselves. The returned frame reads the
-    // last edge checkpoint and `nodes` lazily, so those two stay.
+    // appearing as a child, and nodes whose only edge is a self-loop) label
+    // themselves. The returned frame reads the last edge checkpoint and
+    // `nodes` lazily, so those two stay.
+    val nodes = pairs.select(col(aCol).as("id"))
+      .union(pairs.select(col(bCol).as("id")))
+      .distinct()
+      .localCheckpoint(true)
     val childLabels = edges.select(col("hi").as("id"), col("lo").as("cluster_id"))
     val rootLabels = nodes.join(childLabels.select(col("id")), Seq("id"), "left_anti")
       .select(col("id"), col("id").as("cluster_id"))

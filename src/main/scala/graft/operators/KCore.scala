@@ -17,10 +17,10 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one degree aggregate (map-side combined explode
   * of the edge list) + two anti joins — all hash-partitioned on node id,
   * nothing all-pairs, no window. Rounds are bounded by `maxRounds`;
-  * each round's surviving edge set is localCheckpoint'ed (lineage would
-  * otherwise double per round — the CC/PageRank lesson), and convergence
-  * is observed IN-BAND on the checkpoint's materializing action (an
-  * `observe` metric, no extra job). A converged graph exits early; extra
+  * each round's surviving edge set is materialised by the [[Rounds]] loop
+  * (lineage would otherwise double per round), and convergence is
+  * observed IN-BAND on that materializing action (an `observe` metric,
+  * no extra job). A converged graph exits early; extra
   * budgeted rounds are semantic no-ops, so a fixed-round oracle replay
   * agrees with any early exit.
   */
@@ -34,34 +34,21 @@ object KCore {
     require(k >= 1, s"k must be >= 1 (got $k)")
     require(maxRounds >= 1, s"maxRounds must be >= 1 (got $maxRounds)")
     val obs0 = Observation("kcore_init")
-    var edges = pairs
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
+    val init = Edges.canonical(pairs, aCol, bCol)
       .observe(obs0, count(lit(1)).as("n_edges"))
       .localCheckpoint(true)
-    var edgeCount = obs0.get("n_edges").asInstanceOf[Long]
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
+    val unchanged = Rounds.unchanged(obs0.get("n_edges").asInstanceOf[Long])
+    val edges = Rounds.run(init, maxRounds) { (edges, round) =>
       val deg = edges.select(explode(array(col("u"), col("v"))).as("node"))
         .groupBy(col("node")).agg(count(lit(1)).as("deg"))
       val bad = deg.where(col("deg") < k).select(col("node"))
       val obs = Observation(s"kcore_peel_$round")
-      val next = edges
+      Some(Rounds.Step(edges
         .join(bad.select(col("node").as("u")), Seq("u"), "left_anti")
         .join(bad.select(col("node").as("v")), Seq("v"), "left_anti")
         .select(col("u"), col("v"))
-        .observe(obs, count(lit(1)).as("n_edges"))
-        .localCheckpoint(true)
-      // next is materialized and reads none of the old edges' lineage
-      PageRank.release(edges)
-      edges = next
-      val after = obs.get("n_edges").asInstanceOf[Long]
-      converged = after == edgeCount
-      edgeCount = after
-      round += 1
+        .observe(obs, count(lit(1)).as("n_edges")),
+        () => unchanged(obs.get("n_edges").asInstanceOf[Long])))
     }
     // the returned frame reads the last edge checkpoint lazily, so it stays
     edges.select(explode(array(col("u"), col("v"))).as("node"))

@@ -22,9 +22,8 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one hash equi-join (edges ⋈ labels on the
   * source endpoint — both hash-partition on node id) and one
   * map-side-combined two-level aggregate; state after each round is the
-  * |nodes|-sized label frame, `localCheckpoint`ed so lineage stays flat
-  * across rounds (the iterative-plan discipline of [[PageRank]] /
-  * [[ConnectedComponents]]).
+  * |nodes|-sized label frame, materialised per round by the [[Rounds]]
+  * loop every iterative operator shares.
   */
 object Lpa {
 
@@ -33,35 +32,21 @@ object Lpa {
   def communities(pairs: DataFrame, aCol: String, bCol: String,
                   rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1 (got $rounds)")
-    val edges = pairs
-      .select(col(aCol).cast("long").as("u"), col(bCol).cast("long").as("v"))
-      .where(col("u") =!= col("v"))
-      .select(col("u"), col("v"))
-      .union(pairs.select(col(bCol).cast("long").as("u"),
-        col(aCol).cast("long").as("v")).where(col("u") =!= col("v")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = edges.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    var r = 0
-    while (r < rounds) {
-      val next = edges
-        .join(labels.withColumnRenamed("node", "u"), Seq("u"))
-        .groupBy(col("v"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-        .groupBy(col("v"))
-        .agg(min(struct((-col("cnt")).as("neg"), col("label").as("l")))
-          .as("win"))
-        .select(col("v").as("node"), col("win.l").as("label"))
+    val edges = Edges.symmetric(pairs, aCol, bCol).localCheckpoint(true)
+    try {
+      val init = edges.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("label"))
         .localCheckpoint(true)
-      // next is materialized and reads none of the old labels' lineage
-      PageRank.release(labels)
-      labels = next
-      r += 1
-    }
-    // only the returned labels keep their blocks
-    PageRank.release(edges)
-    labels
+      Rounds.fixed(init, rounds) { labels =>
+        edges
+          .join(labels.withColumnRenamed("node", "u"), Seq("u"))
+          .groupBy(col("v"), col("label"))
+          .agg(count(lit(1)).as("cnt"))
+          .groupBy(col("v"))
+          .agg(min(struct((-col("cnt")).as("neg"), col("label").as("l")))
+            .as("win"))
+          .select(col("v").as("node"), col("win.l").as("label"))
+      }
+    } finally Rounds.release(edges) // only the returned labels keep their blocks
   }
 }

@@ -6,7 +6,6 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
@@ -57,8 +56,8 @@ import org.apache.spark.storage.StorageLevel
   *    degree-annotated edge list and ONE map-side-combined sum keyed by
   *    destination; the pooled dangling mass is a one-row aggregate
   *    broadcast into the round. The edge⋈degree join is computed once
-  *    before the loop, and the loop localCheckpoints every round's ranks
-  *    to cut lineage.
+  *    before the loop, and the [[Rounds]] loop materialises every round's
+  *    ranks to cut lineage.
   */
 object PageRank {
 
@@ -272,8 +271,8 @@ object PageRank {
       if (danglingRedistribute)
         nodes.join(sw, nodes("id") === sw("src"), "left_anti").localCheckpoint(true)
       else null
-    var r = nodes.select(col("id"), lit(init).as("r_fp"))
-    for (_ <- 1 to iters) {
+    // only the returned ranks keep their blocks
+    try Rounds.fixed(nodes.select(col("id"), lit(init).as("r_fp")), iters) { r =>
       val s = ed.join(r, col("src") === col("id"))
         .select(col("dst"), expr("(r_fp * w) div sw").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
@@ -293,24 +292,8 @@ object PageRank {
       // stride was A/B'd at 10M edges / 500k nodes / 12 rounds in round 16
       // and measured a WASH — alternating probes spanned 13.9–20.5 s
       // (stride) vs 14.5–21.3 s (per-round).
-      val next = pooled.select(nodes("id"),
-          (lit(base) + expr("(85 * (coalesce(s, 0L) + __share)) div 100")).as("r_fp"))
-        .localCheckpoint(true)
-      // next is materialized and reads none of r's lineage
-      release(r)
-      r = next
-    }
-    // only the returned ranks keep their blocks
-    Seq(nodes, ed, danglingIds).filter(_ != null).foreach(release)
-    r
+      pooled.select(nodes("id"),
+        (lit(base) + expr("(85 * (coalesce(s, 0L) + __share)) div 100")).as("r_fp"))
+    } finally Seq(nodes, ed, danglingIds).filter(_ != null).foreach(Rounds.release)
   }
-
-  /** Drops the blocks of a frame `localCheckpoint(true)` returned, once
-    * nothing left to run reads it; a no-op on any other frame (round 1's
-    * ranks are a projection of `nodes`, not a checkpoint). */
-  private[operators] def release(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _             => ()
-    }
 }

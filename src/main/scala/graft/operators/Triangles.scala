@@ -33,37 +33,10 @@ import org.apache.spark.sql.functions._
 object Triangles {
 
   def stats(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true) // consumers: degree agg + orientation + edge count
-    val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true) // consumers: two degree attaches + node count
-    val withDeg = e
-      .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
-      .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
-    val lowerIsU = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val orient = withDeg.select(
-        when(lowerIsU, col("u")).otherwise(col("v")).as("src"),
-        when(lowerIsU, col("v")).otherwise(col("u")).as("dst"),
-        when(lowerIsU, col("dv")).otherwise(col("du")).as("ddst"))
-      .localCheckpoint(true) // consumers: wedge self-join (×2) + closure
-    val wedges = orient.as("e1").join(orient.as("e2"),
-        col("e1.src") === col("e2.src") &&
-          (col("e1.ddst") < col("e2.ddst") ||
-            (col("e1.ddst") === col("e2.ddst") && col("e1.dst") < col("e2.dst"))))
-      .select(col("e1.dst").as("wsrc"), col("e2.dst").as("wdst"))
+    val (e, deg, orient) = oriented(edges, aCol, bCol)
+    val wedges = wedgesOf(orient).select(col("wsrc"), col("wdst"))
       .localCheckpoint(true) // consumers: wedge count + closure
-    // same broadcast-closure gate as [[perNode]]: the wedge side is the
-    // big one — keep it exchange-free whenever the edge set fits
-    val closeSide = orient.select(col("src").as("wsrc"), col("dst").as("wdst"))
-    val closer = if (orient.count() <= 4000000L) broadcast(closeSide)
-      else closeSide
-    val tri = wedges.join(closer, Seq("wsrc", "wdst"), "left_semi")
+    val tri = wedges.join(closer(orient), Seq("wsrc", "wdst"), "left_semi")
     deg.agg(count(lit(1)).as("n_nodes"))
       .crossJoin(broadcast(e.agg(count(lit(1)).as("n_edges"))))
       .crossJoin(broadcast(wedges.agg(count(lit(1)).as("n_wedges"))))
@@ -77,15 +50,25 @@ object Triangles {
     * (a row-local explode) into one map-side-combined count. Returns
     * (node, deg, n_tri) for every node, n_tri = 0 when none. */
   def perNode(edges: DataFrame, aCol: String, bCol: String): DataFrame = {
-    val e = edges
-      .select(least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(true) // consumers: degree agg + orientation
+    val (_, deg, orient) = oriented(edges, aCol, bCol)
+    val triNodes = wedgesOf(orient).join(closer(orient), Seq("wsrc", "wdst"))
+      .select(explode(array(col("piv"), col("wsrc"), col("wdst"))).as("node"))
+      .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
+    deg.join(triNodes, Seq("node"), "left")
+      .select(col("node"), col("deg"),
+        coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+  }
+
+  /** The orientation stage both counts share: the canonical edges
+    * (u, v), the degree table (node, deg) and the oriented edges
+    * (src, dst, ddst = dst's degree), each checkpointed. */
+  private def oriented(edges: DataFrame, aCol: String,
+                       bCol: String): (DataFrame, DataFrame, DataFrame) = {
+    val e = Edges.canonical(edges, aCol, bCol)
+      .localCheckpoint(true) // consumers: degree agg + orientation (+ stats' edge count)
     val deg = e.select(explode(array(col("u"), col("v"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true) // consumers: two degree attaches + final join
+      .localCheckpoint(true) // consumers: two degree attaches + node count / final join
     val withDeg = e
       .join(deg.select(col("node").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("node").as("v"), col("deg").as("dv")), Seq("v"))
@@ -96,28 +79,29 @@ object Triangles {
         when(lowerIsU, col("v")).otherwise(col("u")).as("dst"),
         when(lowerIsU, col("dv")).otherwise(col("du")).as("ddst"))
       .localCheckpoint(true) // consumers: wedge self-join (×2) + closure
-    val wedges = orient.as("e1").join(orient.as("e2"),
+    (e, deg, orient)
+  }
+
+  /** Every oriented wedge as (piv, wsrc, wdst): ordered out-neighbor pairs
+    * of the pivot, in (degree, id) order. */
+  private def wedgesOf(orient: DataFrame): DataFrame =
+    orient.as("e1").join(orient.as("e2"),
         col("e1.src") === col("e2.src") &&
           (col("e1.ddst") < col("e2.ddst") ||
             (col("e1.ddst") === col("e2.ddst") && col("e1.dst") < col("e2.dst"))))
       .select(col("e1.src").as("piv"), col("e1.dst").as("wsrc"),
         col("e2.dst").as("wdst"))
-    // The wedge set is O(m^1.5) — orders of magnitude larger than the
-    // edge set (41M wedges vs 1.2M edges on the sf0.1 co-purchase graph).
-    // Shuffling it on (wsrc, wdst) for the closure join was q230's
-    // dominant cost; when the EDGE side fits a broadcast (count gate on
-    // the already-materialized checkpoint — one cheap job), closure
-    // becomes a broadcast hash join and the wedge stream never exchanges.
-    // Past the gate (billions of edges at 100 TB) the shuffle join
-    // returns automatically.
+
+  /** The closing edges as (wsrc, wdst). The wedge set is O(m^1.5) — orders
+    * of magnitude larger than the edge set (41M wedges vs 1.2M edges on
+    * the sf0.1 co-purchase graph). Shuffling it on (wsrc, wdst) for the
+    * closure join was q230's dominant cost; when the EDGE side fits a
+    * broadcast (count gate on the already-materialized checkpoint — one
+    * cheap job), closure becomes a broadcast hash join and the wedge
+    * stream never exchanges. Past the gate (billions of edges at 100 TB)
+    * the shuffle join returns automatically. */
+  private def closer(orient: DataFrame): DataFrame = {
     val closeSide = orient.select(col("src").as("wsrc"), col("dst").as("wdst"))
-    val closer = if (orient.count() <= 4000000L) broadcast(closeSide)
-      else closeSide
-    val triNodes = wedges.join(closer, Seq("wsrc", "wdst"))
-      .select(explode(array(col("piv"), col("wsrc"), col("wdst"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-    deg.join(triNodes, Seq("node"), "left")
-      .select(col("node"), col("deg"),
-        coalesce(col("n_tri"), lit(0L)).as("n_tri"))
+    if (orient.count() <= 4000000L) broadcast(closeSide) else closeSide
   }
 }

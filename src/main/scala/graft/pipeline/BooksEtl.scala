@@ -39,7 +39,7 @@ object BooksEtl {
   def extract(spark: SparkSession, nPages: Int, fetch: String => String,
               rawCsvPath: Option[String] = None): DataFrame = {
     val raw = Extract.scrape(spark, nPages, fetch).localCheckpoint()
-    rawCsvPath.foreach(p => BooksCsv.write(raw, p, singleFile = true))
+    rawCsvPath.foreach(p => BooksCsv.write(raw, p))
     raw
   }
 
@@ -77,7 +77,7 @@ object BooksEtl {
     val failures = new ConcurrentLinkedQueue[Throwable]()
     val threads = sinks.map { case (name, df) =>
       new Thread(() =>
-        try BooksCsv.write(df, s"$dir/$name", singleFile = true)
+        try BooksCsv.write(df, s"$dir/$name")
         catch { case e: Throwable => failures.add(e) },
         s"books-etl-sink-$name")
     }

@@ -22,8 +22,7 @@ object Transform {
 
   /** Clean stage (`transformation_pipeline.py:43-48`): currency-strip the
     * three price columns (O15), mojibake-fix the description (O16) via the
-    * native Catalyst expression (whole-stage codegen; the UDF variant
-    * remains in [[graft.functions.Functions.fixMojibake]]). */
+    * native Catalyst expression (whole-stage codegen). */
   def clean(df: DataFrame): DataFrame = {
     val priced = priceCols.foldLeft(df)((d, p) => d.withColumn(p, cleanCurrency(c(p))))
     priced.withColumn("Description",
@@ -39,10 +38,10 @@ object Transform {
 
   /** Bin stage (`transformation_pipeline.py:58-63`): fixed stock bins (O12)
     * + exact-quantile price tiers (O13). */
-  def bin(df: DataFrame, exactQuantiles: Boolean = true): DataFrame = {
+  def bin(df: DataFrame): DataFrame = {
     val stocked = df.withColumn("Stock_Bin", binStock(c("No_of_books_in_Stock")))
     qcut(stocked, c("Price (excl. tax)"), 3,
-      Seq("Budget", "Standard", "Premium"), "Price_Tier", exactQuantiles)
+      Seq("Budget", "Standard", "Premium"), "Price_Tier")
   }
 
   /** Star-schema build (`transformation_pipeline.py:69-117`): 4 dims with
@@ -79,8 +78,8 @@ object Transform {
   }
 
   /** Full pipeline: raw books frame in, star schema out. */
-  def run(raw: DataFrame, exactQuantiles: Boolean = true): TransformResult =
-    buildStar(bin(derive(clean(raw)), exactQuantiles))
+  def run(raw: DataFrame): TransformResult =
+    buildStar(bin(derive(clean(raw))))
 
   /** The five summary stats the DAG emails out (`airflow.py:101-107`), as a
     * single-row DataFrame — stays distributed until the driver-side email

@@ -1,7 +1,8 @@
 package graft
 
-import graft.llm.{DotProduct, NearestCell}
+import graft.llm.{Bpe, DotProduct, NearestCell}
 import graft.operators.{Bfs, ConnectedComponents, KCore, Lpa}
+import graft.tools.JobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
@@ -31,35 +32,83 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(got == expected)
   }
 
+  /** Rows as their `Row.toString`, sorted: one shape for every result. */
+  private def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+  private def pairRows(rows: Seq[(Long, Long)]): Seq[String] =
+    rows.map { case (a, b) => s"[$a,$b]" }.sorted
+
   test("each graph loop leaves only what its result reads persisted") {
     val sc = spark.sparkContext
     val seed = Seq(1L).toDF("node")
-    val near1 = Seq(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 2L)
+    val near1 = pairRows(Seq(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 2L))
+    // merges a+n, an+a, b+an (BpeSpec's trace of this corpus)
+    val docs = Seq((1L, "banana bandana banana")).toDF("doc_id", "text")
     // (call, its result, the checkpoints that result may keep): KCore's
     // result reads its last edge set, componentsStar's its last edge set
-    // and its node set; every other result is itself the one checkpoint
-    val calls: Seq[(String, () => DataFrame, Seq[(Long, Long)], Int)] = Seq(
-      ("components", () => ConnectedComponents.components(mixedGraph, "a", "b"), expected, 1),
+    // and its node set, encodeStats' its last symbol table; trainRounds'
+    // result is a local relation; every other result is itself the one
+    // checkpoint
+    val calls: Seq[(String, () => DataFrame, Seq[String], Int)] = Seq(
+      ("components", () => ConnectedComponents.components(mixedGraph, "a", "b"),
+        pairRows(expected), 1),
       // a 64-node path: star contraction runs ~log n rounds on it
       ("componentsStar", () => ConnectedComponents.componentsStar(
         (0L until 63L).map(i => (i, i + 1)).toDF("a", "b"), "a", "b"),
-        (0L until 64L).map(_ -> 0L), 2),
+        pairRows((0L until 64L).map(_ -> 0L)), 2),
       ("Bfs.hops", () => Bfs.hops(mixedGraph, "a", "b", seed, rounds = 3), near1, 1),
       ("Bfs.sssp", () => Bfs.sssp(mixedGraph.withColumn("w", lit(1L)), "a", "b", "w", seed,
         rounds = 3), near1, 1),
-      ("Lpa.communities", () => Lpa.communities(mixedGraph, "a", "b", rounds = 2), Seq(
+      ("Lpa.communities", () => Lpa.communities(mixedGraph, "a", "b", rounds = 2), pairRows(Seq(
         1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 1L, 10L -> 10L, 11L -> 11L,
-        20L -> 20L, 21L -> 21L, 22L -> 20L, 23L -> 21L, 24L -> 22L, 30L -> 30L, 31L -> 31L), 1),
+        20L -> 20L, 21L -> 21L, 22L -> 20L, 23L -> 21L, 24L -> 22L, 30L -> 30L, 31L -> 31L)), 1),
       ("KCore.peel", () => KCore.peel(mixedGraph, "a", "b", k = 2),
-        Seq(1L -> 2L, 2L -> 2L, 3L -> 2L), 1))
+        pairRows(Seq(1L -> 2L, 2L -> 2L, 3L -> 2L)), 1),
+      ("Bpe.trainRounds", () => Bpe.trainRounds(docs, "text", rounds = 3),
+        Seq("[1,a n,6]", "[2,an a,3]", "[3,b an,3]"), 0),
+      ("Bpe.encodeStats", () => Bpe.encodeStats(docs, "text", "doc_id", rounds = 3),
+        Seq("[1,3,19,7,368421]"), 1))
     calls.foreach { case (name, call, rows, kept) =>
       val persisted = sc.getPersistentRDDs.keySet
       val out = call()
       // collected after the call: a released block the result reads would fail here
-      assert(out.as[(Long, Long)].collect().sorted.toSeq == rows, name)
+      assert(rowsOf(out) == rows, name)
       // compared by id: the context cleaner may drop other suites' RDDs meanwhile
       val added = (sc.getPersistentRDDs.keys.toSet -- persisted).size
       assert(added <= kept, s"$name left $added checkpoints persisted, allowed $kept")
+    }
+  }
+
+  test("a loop that must converge and reaches its cap leaves nothing persisted") {
+    val sc = spark.sparkContext
+    val chain = (0L until 40L).map(i => (i, i + 1)).toDF("a", "b")
+    val path = spark.range(9999L).select(col("id").as("a"), (col("id") + 1).as("b"))
+    for ((name, call) <- Seq[(String, () => DataFrame)](
+        ("components", () => ConnectedComponents.components(chain, "a", "b", maxIters = 5)),
+        ("componentsStar", () => ConnectedComponents.componentsStar(path, "a", "b", maxIters = 2)))) {
+      val persisted = sc.getPersistentRDDs.keySet
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("did not converge"), name)
+      // compared by id: the context cleaner may drop other suites' RDDs meanwhile
+      val added = sc.getPersistentRDDs.keys.toSet -- persisted
+      assert(added.isEmpty, s"$name left ${added.size} checkpoints persisted")
+    }
+  }
+
+  test("each graph loop launches the jobs it launched before the shared round loop") {
+    // counts measured on mixedGraph before the loops moved onto Rounds: a
+    // change here is a plan change, and the baseline a kernel port compares with
+    val seed = Seq(1L).toDF("node")
+    val pins: Seq[(String, () => DataFrame, Int)] = Seq(
+      ("components", () => ConnectedComponents.components(mixedGraph, "a", "b"), 26),
+      ("componentsStar", () => ConnectedComponents.componentsStar(mixedGraph, "a", "b"), 22),
+      ("Bfs.hops", () => Bfs.hops(mixedGraph, "a", "b", seed, rounds = 3), 12),
+      ("Bfs.sssp", () => Bfs.sssp(mixedGraph.withColumn("w", lit(1L)), "a", "b", "w", seed,
+        rounds = 3), 11),
+      ("Lpa.communities", () => Lpa.communities(mixedGraph, "a", "b", rounds = 2), 12),
+      ("KCore.peel", () => KCore.peel(mixedGraph, "a", "b", k = 2), 11))
+    pins.foreach { case (name, call, pinned) =>
+      val (_, jobs) = JobCount.during(spark)(call())
+      assert(jobs == pinned, s"$name launched $jobs jobs, pinned at $pinned")
     }
   }
 

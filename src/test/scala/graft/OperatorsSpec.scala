@@ -328,7 +328,7 @@ class MicroBatchSpec extends SparkSpec {
     import spark.implicits._
     val raw = Seq(Model.Book("T1", "d", "Cat", "i", true, 7, 4,
       "u", "books", "£2.00", "£2.00", "£0.00", "1")).toDF()
-    graft.io.BooksCsv.write(raw, srcDir + "/batch1", singleFile = true)
+    graft.io.BooksCsv.write(raw, srcDir + "/batch1")
 
     @volatile var seen = 0L
     val q = Streaming.microBatch(spark, srcDir + "/*", Model.rawBooksSchema,

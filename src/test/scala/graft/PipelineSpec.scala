@@ -44,7 +44,7 @@ class BooksCsvSpec extends SparkSpec {
     val raw = Seq(Model.Book("T1", "d", "Cat", "img", true, 4, 5,
       "u1", "books", "£1.00", "£1.00", "£0.00", "0")).toDF()
     val dir = Files.createTempDirectory("books_csv").toString + "/books"
-    BooksCsv.write(raw, dir, singleFile = true)
+    BooksCsv.write(raw, dir)
     val back = BooksCsv.readRaw(spark, dir)
     assert(back.schema == Model.rawBooksSchema)
     val r = back.collect().head

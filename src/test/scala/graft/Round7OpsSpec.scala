@@ -207,6 +207,20 @@ class Round7OpsSpec extends SparkSpec {
         .stats(edgeSet.toSeq.toDF("a", "b"), "a", "b").head()
       assert(got.getAs[Long]("n_triangles") == brute, s"trial $trial")
       assert(got.getAs[Long]("n_edges") == edgeSet.size, s"trial $trial edges")
+      // perNode: each node's count against its own brute force, and every
+      // triangle counted once at each of its three corners
+      val perNode = graft.operators.Triangles
+        .perNode(edgeSet.toSeq.toDF("a", "b"), "a", "b")
+        .collect().map(r => r.getLong(0) -> r.getLong(2)).toMap
+      for (v <- perNode.keys) {
+        val bruteV = (for {
+          b <- 0L until n; c <- (b + 1) until n if b != v && c != v
+          if Seq((v, b), (v, c), (b, c)).forall { case (x, y) =>
+            edgeSet((math.min(x, y), math.max(x, y))) }
+        } yield 1).size
+        assert(perNode(v) == bruteV, s"trial $trial node $v")
+      }
+      assert(perNode.values.sum == 3L * got.getAs[Long]("n_triangles"), s"trial $trial Σ n_tri")
     }
   }
 
